@@ -3,6 +3,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import graft.model.TableDef
 
 /** The single most load-bearing custom piece (SURVEY §7.4): the guarded
@@ -39,6 +40,16 @@ object MergeSink {
     * before the merge — it never reaches the stored table. */
   val EvtSeqCol = "__evt_seq"
 
+  /** Transient action-rank column ([[graft.sources.StripeEvents.rank]]):
+    * when a batch carries it, one call applies what would otherwise be
+    * one guarded merge per rank, run in rank order. Serial strict-`>`
+    * merges keep, per key, the greatest timestamp with ties going to
+    * the EARLIEST-applied row — and a null-timestamp row is replaced by
+    * whatever comes after it — so intra-batch LWW breaks timestamp
+    * ties by rank ascending, and null-timestamp ties by rank
+    * descending. Dropped before the merge, like [[EvtSeqCol]]. */
+  val RankCol = "__action_rank"
+
   /** Guarded merge of `batch` into the parquet table at `dir`.
     * Strict `>` on `tsCol` (reference uses strict `<` on the stored side,
     * postgres.ts:203): same-timestamp replays are no-ops.
@@ -48,23 +59,30 @@ object MergeSink {
     * would append one more junk row forever; the reference's Postgres PK
     * instead fails the whole statement, which in a webhook stream means
     * endlessly retrying a poison event. Dropping the row and keeping the
-    * batch is the streaming-correct choice. */
+    * batch is the streaming-correct choice.
+    *
+    * `deleteIds` (first column = keys) hard-deletes those keys from the
+    * merged rows in the same write — S10 applied after the upsert
+    * whatever the timestamps, as a separate delete pass would, without
+    * a second read + rewrite of the table. */
   def upsertParquet(batch: DataFrame, dir: String, tdef: TableDef,
-                    tsCol: String = "last_synced_at"): Unit = {
+                    tsCol: String = "last_synced_at",
+                    deleteIds: Option[DataFrame] = None): Unit = {
     val spark = batch.sparkSession
-    val orderCols =
-      if (batch.columns.contains(EvtSeqCol)) Seq(tsCol, EvtSeqCol) else Seq(tsCol)
+    val ranked =
+      if (!batch.columns.contains(RankCol)) batch
+      else batch.withColumn(RankCol,
+        when(col(tsCol).isNull, col(RankCol)).otherwise(-col(RankCol)))
     val deduped = MergeOps.lwwLatest(
-        batch.filter(col(tdef.key).isNotNull), Seq(tdef.key), orderCols)
-      .drop(EvtSeqCol)
+        ranked.filter(col(tdef.key).isNotNull), Seq(tdef.key),
+        Seq(tsCol, RankCol, EvtSeqCol).filter(batch.columns.contains))
+      .drop(RankCol, EvtSeqCol)
     val path = s"$dir/${tdef.table}"
-    healInterruptedSwap(spark, path)
-    val merged =
-      if (tableExists(spark, path)) {
-        val target = spark.read.parquet(path)
-        MergeOps.mergeGuarded(target, deduped, tdef.key, tsCol)
-      } else deduped
-    writeAtomic(merged, path)
+    val merged = readStored(spark, path) match {
+      case Some(target) => MergeOps.mergeGuarded(target, deduped, tdef.key, tsCol)
+      case None => deduped
+    }
+    writeAtomic(deleteIds.fold(merged)(withoutKeys(merged, _, tdef)), path)
   }
 
   /** Guarded upsert of `batch` plus a hard prune in the SAME commit:
@@ -83,12 +101,10 @@ object MergeSink {
     val deduped = MergeOps.lwwLatest(
       batch.filter(col(tdef.key).isNotNull), Seq(tdef.key), Seq(tsCol))
     val path = s"$dir/${tdef.table}"
-    healInterruptedSwap(spark, path)
-    val merged0 =
-      if (tableExists(spark, path)) {
-        val target = spark.read.parquet(path)
-        MergeOps.mergeGuarded(target, deduped, tdef.key, tsCol)
-      } else deduped
+    val merged0 = readStored(spark, path) match {
+      case Some(target) => MergeOps.mergeGuarded(target, deduped, tdef.key, tsCol)
+      case None => deduped
+    }
     // Stage the merge once: `stale` AND the anti-join both consume it,
     // and an unstaged plan re-runs the target scan + merge window twice
     // per batch — giving back most of the fused-commit saving
@@ -126,15 +142,14 @@ object MergeSink {
     val clean = batch.filter(col(tdef.key).isNotNull).drop("updated_at")
     val tieCols = clean.columns.filterNot(c => c == tdef.key || c == tsCol).toSeq
     val path = s"$dir/${tdef.table}__history"
-    healInterruptedSwap(spark, path)
-    val merged =
-      if (tableExists(spark, path))
-        MergeOps.scd2Merge(spark.read.parquet(path), clean,
-          Seq(tdef.key), tsCol, tieCols)
-      else
+    val merged = readStored(spark, path) match {
+      case Some(history) =>
+        MergeOps.scd2Merge(history, clean, Seq(tdef.key), tsCol, tieCols)
+      case None =>
         MergeOps.scd2HistoryFlagged(
           clean.dropDuplicates(tdef.key +: tsCol +: tieCols),
           Seq(tdef.key), tsCol, tieCols)
+    }
     writeAtomic(merged, path)
   }
 
@@ -154,10 +169,47 @@ object MergeSink {
   def deleteParquet(ids: DataFrame, dir: String, tdef: TableDef): Unit = {
     val spark = ids.sparkSession
     val path = s"$dir/${tdef.table}"
+    readStored(spark, path).foreach(target =>
+      writeAtomic(withoutKeys(target, ids, tdef), path))
+  }
+
+  /** `rows` minus the keys named by `ids`' first column. */
+  private def withoutKeys(rows: DataFrame, ids: DataFrame, tdef: TableDef): DataFrame =
+    MergeOps.setDiffDelete(rows, ids.select(col(ids.columns.head).as(tdef.key)), tdef.key)
+
+  /** The swap-managed store at `path` as a DataFrame, or None when it
+    * does not exist — healed first ([[healInterruptedSwap]]), tested
+    * through Hadoop ([[tableExists]]). The schema comes from the Spark
+    * row schema Spark wrote into one data file's footer, read on the
+    * driver: `spark.read.parquet` would infer the same schema with a
+    * one-task Spark job at the head of every merge. It is the STORED
+    * schema, not the declared one, so columns only the table carries
+    * survive the merge ([[MergeOps.mergeGuarded]]'s schema-evolution
+    * note). Files without the footer key fall back to inference. */
+  private[graft] def readStored(spark: SparkSession, path: String): Option[DataFrame] = {
     healInterruptedSwap(spark, path)
-    if (tableExists(spark, path)) {
-      val target = spark.read.parquet(path)
-      writeAtomic(MergeOps.setDiffDelete(target, ids.select(col(ids.columns.head).as(tdef.key)), tdef.key), path)
+    if (!tableExists(spark, path)) None
+    else Some(footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path)))
+  }
+
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(path)
+    val dataFile = dir.getFileSystem(conf).listStatus(dir).iterator
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+        !s.getPath.getName.startsWith("."))
+      .map(_.getPath).minByOption(_.getName)
+    dataFile.flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata")
+        finally reader.close()
+      Option(json).flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
+        .collect { case s: StructType => s }
     }
   }
 

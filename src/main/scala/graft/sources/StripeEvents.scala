@@ -48,10 +48,18 @@ object StripeEvents {
   def syncTimestamp(refetched: Boolean = false): Column =
     if (refetched) current_timestamp() else timestamp_seconds(col("created"))
 
-  /** Merge-barrier order: upserts before deleted-upserts before deltas
-    * before deletes, so a same-id create+delete in one micro-batch
-    * resolves to "deleted". THE single owner of this ordering contract —
-    * [[route]] sorts by it and the pipeline groups its barriers by it. */
+  /** Same-batch action order: upserts before deleted-upserts before
+    * deltas before deletes, so a same-id create+delete in one
+    * micro-batch resolves as if the actions were applied one after
+    * another in this order — a later `customer.deleted` wins, an
+    * equal-time one loses to the live row (strict `>` guard), and a
+    * hard delete removes its key whatever the timestamps. No barrier
+    * enforces it: every action on a table lands in that table's ONE
+    * guarded commit, whose intra-batch LWW breaks timestamp ties by this
+    * rank ([[graft.operators.MergeSink.RankCol]]) and whose hard-delete
+    * ids prune the merged rows last. THE single owner of this ordering
+    * contract — [[route]] sorts by it and the pipeline's per-table
+    * commits order by it. */
   def rank(a: Action): Int = a match {
     case Upsert => 0
     case DeletedUpsert => 1
@@ -136,12 +144,14 @@ object StripeEvents {
   /** Split an envelope batch into per-(table, action) groups, Spark-side:
     * a filter per route family over one cached batch — the columnar
     * analog of the switch statement. Groups are ordered deterministically
-    * with upserts before deletes, so a same-id create+delete arriving in
-    * one micro-batch resolves to "deleted" (the at-least-once-safe
-    * outcome), never to a racy interleaving. Each group carries its
-    * event-type list so the caller can skip empty groups from ONE
-    * per-type count aggregate instead of probing every group with its
-    * own isEmpty job (~25 driver-visible jobs per micro-batch saved). */
+    * by ([[rank]], table); a table's groups are applied in ONE commit
+    * that resolves a same-id create+delete arriving in one micro-batch
+    * by that rank (the at-least-once-safe outcome, "deleted" when the
+    * delete is newer or hard), never by a racy interleaving. Each group
+    * carries its event-type list so the caller can skip empty groups
+    * from ONE per-type count aggregate instead of probing every group
+    * with its own isEmpty job (~25 driver-visible jobs per micro-batch
+    * saved). */
   def route(envelope: DataFrame): Seq[(TableDef, Action, Seq[String], DataFrame)] = {
     val byTarget = routes.toSeq.groupBy(_._2).view.mapValues(_.map(_._1))
     byTarget.toSeq

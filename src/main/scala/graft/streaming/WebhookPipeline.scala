@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.{TableDef, TableDefs}
-import graft.operators.{Backfill, Enrichment, MergeOps, MergeSink}
+import graft.operators.{Backfill, Concurrently, Enrichment, MergeOps, MergeSink}
 import graft.sources.StripeEvents
 import graft.sources.StripeEvents._
 
@@ -62,6 +62,10 @@ class WebhookPipeline(tablesDir: String,
 
   private val eventGuardDir = s"$tablesDir/_event_guard"
 
+  private val subscriptionTypes = StripeEvents.routes.collect {
+    case (t, (tdef, Upsert)) if tdef.table == TableDefs.subscriptions.table => t
+  }.toSeq
+
   /** Process one micro-batch of raw event JSON (column `value`). */
   def processBatch(raw: DataFrame, batchId: Long = 0L): Unit = {
     // keepRaw only when the ledger needs the original event object —
@@ -86,7 +90,9 @@ class WebhookPipeline(tablesDir: String,
       // per-group emptiness probes it replaces were ~25 driver-visible
       // jobs per micro-batch, pure scheduling overhead on the hot path.
       // The same pass also counts null payloads per type, so quarantine
-      // detection still costs zero extra jobs on a clean batch. It runs
+      // detection still costs zero extra jobs on a clean batch, and
+      // subscription events carrying an `items.data` list, so the A5+J3
+      // normalization needs no emptiness probe of its own. It runs
       // BEFORE the events ledger (round 16) so a batch the pre-route
       // dedup emptied — the common at-least-once redelivery case —
       // skips the ledger's read+merge+rewrite of the events table
@@ -94,31 +100,55 @@ class WebhookPipeline(tablesDir: String,
       // so skipping it changes no stored byte.
       val stats = envelope.groupBy("event_type")
         .agg(count(lit(1)).as("n"),
-          count(when(col("payload").isNull, 1)).as("n_null_payload"))
+          count(when(col("payload").isNull, 1)).as("n_null_payload"),
+          count(when(col("event_type").isin(subscriptionTypes: _*) &&
+            expr("json_array_length(get_json_object(payload, '$.items.data'))")
+              .isNotNull, 1)).as("n_item_lists"))
         .collect()
       val typeCounts: Map[String, Long] =
         stats.map(r => (r.getString(0), r.getLong(1))).toMap
       val nullPayloads = stats.map(_.getLong(2)).sum
+      val itemLists = stats.map(_.getLong(3)).sum
       // ...unless the events table does not exist yet: the first write
       // (even of zero rows) creates the schema-bearing dir rebuildAsOf
       // and downstream readers expect, so an all-empty-batch stream
       // still leaves a readable (empty) ledger
-      if (config.eventsLedger && (stats.nonEmpty ||
-          !MergeSink.tableExists(spark, s"$tablesDir/events")))
-        writeEventsLedger(envelope)
-      quarantineUnprocessable(raw, typeCounts, nullPayloads, batchId)
+      val ledger = config.eventsLedger && (stats.nonEmpty ||
+        !MergeSink.tableExists(spark, s"$tablesDir/events"))
+      // deliveries the quarantine must land: a null payload or a type
+      // the router cannot place
+      val suspect = nullPayloads > 0 ||
+        typeCounts.keys.exists(t => t == null || !StripeEvents.routes.contains(t))
       val live = StripeEvents.route(envelope).filter {
         case (_, _, types, _) => types.exists(t => typeCounts.getOrElse(t, 0L) > 0L)
       }
-      // Action ranks stay a strict barrier (a same-id create+delete in
-      // one micro-batch must resolve to deleted — StripeEvents.route's
-      // ordering contract); WITHIN a rank every group targets a
-      // different table, so their merges are independent Spark actions
-      // and run concurrently — the reference's own Promise.all
-      // parallelism (stripeSync.ts:1066-1069), bounded by a small pool.
-      live.groupBy { case (_, action, _, _) => StripeEvents.rank(action) }
-        .toSeq.sortBy(_._1)
-        .foreach { case (_, groups) => runConcurrently(groups) }
+      def upserts(tdef: TableDef): Option[DataFrame] = live.collectFirst {
+        case (t, Upsert, _, events) if t.table == tdef.table => events
+      }
+      // ONE concurrent wave: every task writes a different store and
+      // reads no store another task writes, so the tasks are
+      // independent Spark actions — the reference's Promise.all
+      // parallelism over entity types (stripeSync.ts:1066-1069) across
+      // the whole batch. Each table makes exactly one guarded commit:
+      // its actions' same-batch ordering (StripeEvents.rank) is resolved
+      // INSIDE that commit, not by barriers between commits. The child
+      // normalizations read only their own stores, so they do not wait
+      // for their parents' merges; they go first, being the longest
+      // chains.
+      val children: Seq[() => Unit] =
+        upserts(TableDefs.subscriptions).filter(_ => itemLists > 0)
+          .map(events => () => normalizeSubscriptionItems(events)).toSeq ++
+        upserts(TableDefs.checkoutSessions).flatMap(events =>
+          fetcher.map(f => () => checkoutLineItems(events, f)))
+      val tables: Seq[() => Unit] =
+        live.groupBy { case (tdef, _, _, _) => tdef.table }.toSeq.sortBy(_._1)
+          .map { case (_, groups) =>
+            val events = groups.map { case (_, action, _, evs) => action -> evs }.toMap
+            () => commitTable(groups.head._1, events)
+          }
+      Concurrently.run(children ++ tables ++
+        Option.when(ledger)(() => writeEventsLedger(envelope)) ++
+        Option.when(suspect)(() => quarantineUnprocessable(raw, batchId)))
       // record AFTER all merges land: a crashed batch records nothing,
       // the retry reprocesses, and every merge is idempotent — the
       // standard at-least-once → exactly-once ledger ordering
@@ -161,13 +191,8 @@ class WebhookPipeline(tablesDir: String,
     * events of ROUTED types are included: the sink would drop their
     * all-null projection silently) vs `unrouted_type` (well-formed,
     * just not a routed event type). */
-  private def quarantineUnprocessable(raw: DataFrame,
-      typeCounts: Map[String, Long], nullPayloads: Long,
-      batchId: Long): Unit = {
+  private def quarantineUnprocessable(raw: DataFrame, batchId: Long): Unit = {
     val handled = StripeEvents.routes.keySet
-    val suspect = nullPayloads > 0 ||
-      typeCounts.keys.exists(t => t == null || !handled.contains(t))
-    if (!suspect) return
     // the ONE envelope parser, with the raw text riding along — a
     // hand-rolled re-parse here could drift from the router's and
     // quarantine the wrong rows
@@ -182,35 +207,34 @@ class WebhookPipeline(tablesDir: String,
       .parquet(s"$tablesDir/_quarantine/batch_id=$batchId")
   }
 
-  private def runConcurrently(
-      groups: Seq[(TableDef, StripeEvents.Action, Seq[String], DataFrame)]): Unit = {
-    def run(g: (TableDef, StripeEvents.Action, Seq[String], DataFrame)): Unit =
-      g match { case (tdef, action, _, events) => action match {
-        case Upsert           => upsert(tdef, events)
-        case DeletedUpsert    => deletedUpsert(tdef, events)
-        case Delete           => delete(tdef, events)
-        case EntitlementDelta => entitlementDelta(events)
-      }}
-    if (groups.sizeIs <= 1) groups.foreach(run)
+  /** The table's ONE guarded commit for this batch. Its upsert rows and
+    * its P3 deleted-projection rows go through one
+    * [[MergeSink.upsertParquet]], tagged with their action rank, and its
+    * S10 hard-delete ids prune the merged rows in the same write. That
+    * is the state the serial per-rank merges produce (upsert, then
+    * deleted-upsert, then delete — see [[StripeEvents.rank]]), with one
+    * read + rewrite of the table instead of one per action. */
+  private def commitTable(tdef: TableDef, events: Map[Action, DataFrame]): Unit = {
+    val rows = events.toSeq.sortBy { case (action, _) => StripeEvents.rank(action) }.collect {
+      case (Upsert, evs)        => upsertRows(tdef, evs)
+      case (DeletedUpsert, evs) => deletedRows(tdef, evs)
+    }
+    val deleteIds = events.get(Delete)
+      .map(_.select(get_json_object(col("payload"), "$.id").as("id")))
+    events.get(EntitlementDelta).foreach(entitlementDelta)
+    if (rows.isEmpty) deleteIds.foreach(MergeSink.deleteParquet(_, tablesDir, tdef))
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, groups.size))
-      try {
-        import scala.jdk.CollectionConverters._
-        val tasks: java.util.List[java.util.concurrent.Callable[Unit]] =
-          groups.map { g =>
-            new java.util.concurrent.Callable[Unit] { def call(): Unit = run(g) }
-          }.asJava
-        // invokeAll waits for all; surface the first failure
-        pool.invokeAll(tasks).asScala.foreach(_.get())
-      } finally pool.shutdown()
+      val batch = rows.reduce(_ unionByName _)
+      MergeSink.upsertParquet(batch, tablesDir, tdef, deleteIds = deleteIds)
+      if (config.historyTables(tdef.table))
+        MergeSink.historyParquet(
+          batch.drop(MergeSink.EvtSeqCol, MergeSink.RankCol), tablesDir, tdef)
     }
   }
 
-  /** Full-schema upsert: optional revalidation (P8/P4, two-timestamp
-    * semantics), optional list expansion (A7), guarded merge, then child
-    * normalization for subscriptions (A5+J3) and checkout sessions (A6). */
-  private def upsert(tdef: TableDef, events: DataFrame): Unit = {
+  /** Full-schema upsert rows: optional revalidation (P8/P4,
+    * two-timestamp semantics) and optional list expansion (A7). */
+  private def upsertRows(tdef: TableDef, events: DataFrame): DataFrame = {
     // the envelope's event id rides along as the LWW tie-break
     // (MergeSink.EvtSeqCol): same-key rows with EQUAL created resolve
     // deterministically instead of shuffle-order — the intra-batch
@@ -238,28 +262,25 @@ class WebhookPipeline(tablesDir: String,
           rows = Enrichment.expandListColumn(rows, tdef, field, f)
         }
       }
-    MergeSink.upsertParquet(rows, tablesDir, tdef)
-    if (config.historyTables(tdef.table))
-      MergeSink.historyParquet(rows.drop(MergeSink.EvtSeqCol), tablesDir, tdef)
-    if (tdef.table == "subscriptions") normalizeSubscriptionItems(events)
-    if (tdef.table == "checkout_sessions")
-      fetcher.foreach { f =>
-        val items = Enrichment.checkoutLineItems(events,
-          TableDefs.checkoutSessionLineItems, f)
-        if (!items.isEmpty) {
-          MergeSink.upsertParquet(items, tablesDir, TableDefs.checkoutSessionLineItems)
-          if (config.historyTables(TableDefs.checkoutSessionLineItems.table))
-            MergeSink.historyParquet(items, tablesDir,
-              TableDefs.checkoutSessionLineItems)
-        }
-      }
+    rows.withColumn(MergeSink.RankCol, lit(StripeEvents.rank(Upsert)))
+  }
+
+  /** A6: checkout sessions' line items, fetched per session. */
+  private def checkoutLineItems(events: DataFrame, f: Backfill.EntityFetcher): Unit = {
+    val child = TableDefs.checkoutSessionLineItems
+    val items = Enrichment.checkoutLineItems(events, child, f)
+    if (!items.isEmpty) {
+      MergeSink.upsertParquet(items, tablesDir, child)
+      if (config.historyTables(child.table))
+        MergeSink.historyParquet(items, tablesDir, child)
+    }
   }
 
   /** P3: the 3-column deleted projection — deliberately nulls the other
     * live columns (useNullForMissing, §7.5 hard part: replicate, don't
     * "fix"). */
-  private def deletedUpsert(tdef: TableDef, events: DataFrame): Unit = {
-    val rows = tdef.projectFrom(
+  private def deletedRows(tdef: TableDef, events: DataFrame): DataFrame =
+    tdef.projectFrom(
       events.withColumn("payload",
         to_json(struct(
           get_json_object(col("payload"), "$.id").as("id"),
@@ -267,16 +288,7 @@ class WebhookPipeline(tablesDir: String,
           lit(true).as("deleted"))))
         .withColumn(MergeSink.EvtSeqCol, col("event_id")),
       "payload", syncTimestamp(), passthrough = Seq(MergeSink.EvtSeqCol))
-    MergeSink.upsertParquet(rows, tablesDir, tdef)
-    if (config.historyTables(tdef.table))
-      MergeSink.historyParquet(rows.drop(MergeSink.EvtSeqCol), tablesDir, tdef)
-  }
-
-  /** S10 hard delete. */
-  private def delete(tdef: TableDef, events: DataFrame): Unit =
-    MergeSink.deleteParquet(
-      events.select(get_json_object(col("payload"), "$.id").as("id")),
-      tablesDir, tdef)
+      .withColumn(MergeSink.RankCol, lit(StripeEvents.rank(DeletedUpsert)))
 
   /** Split a JSON array at `path` inside `payloadCol` into one row per
     * element, the element's raw JSON in `elemCol`. from_json cannot keep
@@ -300,7 +312,6 @@ class WebhookPipeline(tablesDir: String,
         col("created").as("__event_created"),
         col("payload")),
       "items.data", "__item")
-    if (items.isEmpty) return
     val projected = items
       .select(Seq(col("__sub_id"), col("__event_created"),
         col("__item").as("__payload")): _*)
@@ -321,11 +332,8 @@ class WebhookPipeline(tablesDir: String,
     // Pre- vs post-merge vanished sets are identical: the merge only
     // adds/updates ids that are in the incoming set, and those are
     // excluded from the set-difference by definition.
-    val path = s"$tablesDir/${tdef.table}"
-    val spark = events.sparkSession
-    val batch =
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(path))) {
-        val existing = spark.read.parquet(path)
+    val batch = MergeSink.readStored(events.sparkSession, s"$tablesDir/${tdef.table}") match {
+      case Some(existing) =>
         val incomingSubs = projected.select("subscription").distinct()
         val incomingIds = projected.select("id")
         val vanished = MergeOps.setDiffDelete(
@@ -336,7 +344,8 @@ class WebhookPipeline(tablesDir: String,
           .withColumn("last_synced_at", current_timestamp())
           .select(projected.columns.toIndexedSeq.map(col): _*)
         projected.unionByName(flagged)
-      } else projected
+      case None => projected
+    }
     // two sinks consume the batch and its plan READS the pre-merge
     // table (the J3 set-difference): after upsertParquet swaps the
     // directory, a lazy re-evaluation would chase deleted files — and

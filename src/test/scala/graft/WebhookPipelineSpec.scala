@@ -99,6 +99,59 @@ class WebhookPipelineSpec extends SparkSpec {
     assert(readTable(dir, "customers").count() == 1)
   }
 
+  test("a guarded merge keeps the columns only the stored table carries") {
+    import graft.operators.MergeSink
+    val dir = tmpDir("graft_extra_col")
+    // a stored table with a column the declared schema lacks (a
+    // migration-window column): the merge reads the STORED schema
+    TableDefs.customers.projectFrom(
+      Seq("""{"id":"cus_x","email":"old@b.c"}""").toDF("payload"), "payload",
+      timestamp_seconds(lit(100L)))
+      .withColumn("legacy_note", lit("keep me"))
+      .write.parquet(s"$dir/customers")
+    MergeSink.upsertParquet(TableDefs.customers.projectFrom(
+      Seq("""{"id":"cus_x","email":"new@b.c"}""", """{"id":"cus_y","email":"y@b.c"}""")
+        .toDF("payload"), "payload", timestamp_seconds(lit(200L))),
+      dir, TableDefs.customers)
+    val out = readTable(dir, "customers")
+    assert(out.columns.contains("legacy_note"))
+    val x = out.filter(col("id") === "cus_x").head()
+    assert(x.getAs[String]("email") == "new@b.c")
+    assert(x.getAs[String]("legacy_note") == "keep me")
+    assert(out.filter(col("id") === "cus_y").head().isNullAt(
+      out.columns.indexOf("legacy_note")))
+  }
+
+  test("rank tie-break in one guarded commit equals serial per-rank merges") {
+    import graft.operators.MergeSink
+    // (id, ts or null, rank, email): per key, the serial merges keep the
+    // greatest timestamp, ties to the earlier rank; a null-timestamp row
+    // is replaced by the next applied row, so null ties go to the later
+    // rank, and a non-null timestamp beats a null one
+    val rows = Seq(
+      ("k_tie", Some(100L), 0, "up"), ("k_tie", Some(100L), 1, "del"),
+      ("k_later", Some(100L), 0, "up"), ("k_later", Some(101L), 1, "del"),
+      ("k_nulls", None, 0, "up"), ("k_nulls", None, 1, "del"),
+      ("k_mixed", None, 0, "up"), ("k_mixed", Some(50L), 1, "del"))
+    val batch = rows.toDF("id", "ts", MergeSink.RankCol, "email")
+      .select(col("id"), col("email"), timestamp_seconds(col("ts")).as("last_synced_at"),
+        col(MergeSink.RankCol))
+    val dir = tmpDir("graft_rank")
+    MergeSink.upsertParquet(batch, dir, TableDefs.customers)
+    val out = readTable(dir, "customers")
+    assert(!out.columns.contains(MergeSink.RankCol))
+    assert(out.select("id", "email").as[(String, String)].collect().toMap == Map(
+      "k_tie" -> "up", "k_later" -> "del", "k_nulls" -> "del", "k_mixed" -> "del"))
+    // the same rows applied serially, one guarded merge per rank
+    val serial = tmpDir("graft_rank_serial")
+    Seq(0, 1).foreach { r =>
+      MergeSink.upsertParquet(batch.filter(col(MergeSink.RankCol) === r)
+        .drop(MergeSink.RankCol), serial, TableDefs.customers)
+    }
+    assert(readTable(serial, "customers").select("id", "email").as[(String, String)]
+      .collect().toMap == out.select("id", "email").as[(String, String)].collect().toMap)
+  }
+
   test("out-of-order protection: older event does not overwrite newer state (webhooks.test.ts:202-284)") {
     val dir = tmpDir("graft_ooo")
     val pipeline = new WebhookPipeline(dir)
@@ -204,6 +257,120 @@ class WebhookPipelineSpec extends SparkSpec {
     val items1 = readTable(dir, "subscription_items")
     assert(!items1.filter(col("id") === "si_a").head().getAs[Boolean]("deleted"))
     assert(items1.filter(col("id") === "si_b").head().getAs[Boolean]("deleted"))
+  }
+
+  test("A5+J3 flags vanished items under a file:-URI tables dir") {
+    // the vanished-item set must see the stored items table through
+    // Hadoop, not java.nio: with a `file:` URI the old existence test
+    // read "absent" and silently skipped the J3 flagging
+    val dir = "file:" + tmpDir("graft_subs_uri")
+    val pipeline = new WebhookPipeline(dir)
+    def subEvent(ts: Long, items: String) =
+      s"""{"id":"evt_u$ts","type":"customer.subscription.updated","created":$ts,
+         |"data":{"object":{"id":"sub_u","object":"subscription","status":"active",
+         |"items":{"object":"list","data":[$items]}}}}"""
+        .stripMargin.replaceAll("\n", "")
+    val itemA = """{"id":"si_ua","object":"subscription_item","quantity":1,"price":{"id":"price_1"},"subscription":"sub_u"}"""
+    val itemB = """{"id":"si_ub","object":"subscription_item","quantity":2,"price":{"id":"price_2"},"subscription":"sub_u"}"""
+    pipeline.processBatch(Seq(subEvent(100, s"$itemA,$itemB")).toDF("value"))
+    pipeline.processBatch(Seq(subEvent(200, itemA)).toDF("value"))
+    val items = spark.read.parquet(s"$dir/subscription_items")
+    assert(!items.filter(col("id") === "si_ua").head().getAs[Boolean]("deleted"))
+    assert(items.filter(col("id") === "si_ub").head().getAs[Boolean]("deleted"),
+      "vanished item must be flagged deleted under a file: URI")
+  }
+
+  test("subscriptions without an items list leave the items store absent") {
+    val dir = tmpDir("graft_subs_noitems")
+    val ev =
+      """{"id":"evt_ni","type":"customer.subscription.created","created":100,
+        |"data":{"object":{"id":"sub_ni","object":"subscription","status":"active"}}}"""
+        .stripMargin.replaceAll("\n", "")
+    new WebhookPipeline(dir).processBatch(Seq(ev).toDF("value"))
+    assert(readTable(dir, "subscriptions").count() == 1)
+    assert(!Files.exists(Paths.get(s"$dir/subscription_items")))
+  }
+
+  // Same-batch ordering: every action on a table lands in ONE guarded
+  // commit, which must give the state of applying upsert, then
+  // deleted-upsert, then hard delete one after another.
+  private def custEv(evtId: String, tpe: String, ts: Long, body: String) =
+    s"""{"id":"$evtId","type":"$tpe","created":$ts,
+       |"data":{"object":{"id":"cus_o","object":"customer"$body}}}"""
+      .stripMargin.replaceAll("\n", "")
+
+  test("same batch: customer.created + customer.deleted at equal created keeps the live row") {
+    val dir = tmpDir("graft_ord_tie")
+    new WebhookPipeline(dir).processBatch(Seq(
+      custEv("evt_o1", "customer.created", 500, ""","email":"a@b.c""""),
+      custEv("evt_o2", "customer.deleted", 500, ""","deleted":true""")
+    ).toDF("value").repartition(4))
+    val rows = readTable(dir, "customers").filter(col("id") === "cus_o").collect()
+    assert(rows.length == 1)
+    assert(rows.head.getAs[String]("email") == "a@b.c",
+      "an equal-time deleted projection must not replace the live row")
+    assert(!rows.head.getAs[Boolean]("deleted") || rows.head.isNullAt(
+      rows.head.fieldIndex("deleted")))
+  }
+
+  test("same batch: customer.deleted 1 s after customer.created wins with live columns null") {
+    val dir = tmpDir("graft_ord_later")
+    new WebhookPipeline(dir).processBatch(Seq(
+      custEv("evt_o1", "customer.created", 500, ""","email":"a@b.c""""),
+      custEv("evt_o2", "customer.deleted", 501, ""","deleted":true""")
+    ).toDF("value").repartition(4))
+    val rows = readTable(dir, "customers").filter(col("id") === "cus_o").collect()
+    assert(rows.length == 1)
+    assert(rows.head.getAs[Boolean]("deleted"))
+    assert(rows.head.getAs[String]("email") == null)
+    assert(rows.head.getAs[java.sql.Timestamp]("last_synced_at").getTime / 1000 == 501L)
+  }
+
+  test("same batch: product.created + product.deleted leaves no row") {
+    val dir = tmpDir("graft_ord_hard")
+    def prodEv(evtId: String, tpe: String, ts: Long) =
+      s"""{"id":"$evtId","type":"$tpe","created":$ts,
+         |"data":{"object":{"id":"prod_o","object":"product","name":"P"}}}"""
+        .stripMargin.replaceAll("\n", "")
+    val keep =
+      """{"id":"evt_pk","type":"product.created","created":400,
+        |"data":{"object":{"id":"prod_keep","object":"product","name":"K"}}}"""
+        .stripMargin.replaceAll("\n", "")
+    // the delete is OLDER than the create: a hard delete removes its
+    // key whatever the timestamps
+    new WebhookPipeline(dir).processBatch(Seq(
+      prodEv("evt_p1", "product.created", 600), prodEv("evt_p2", "product.deleted", 300),
+      keep).toDF("value"))
+    assert(readTable(dir, "products").select("id").as[String].collect().toSeq ==
+      Seq("prod_keep"))
+  }
+
+  test("processing the same mixed batch twice leaves identical tables") {
+    val dir = tmpDir("graft_ord_twice")
+    val sub =
+      """{"id":"evt_t3","type":"customer.subscription.updated","created":700,
+        |"data":{"object":{"id":"sub_t","object":"subscription","status":"active",
+        |"items":{"object":"list","data":[{"id":"si_t","object":"subscription_item",
+        |"quantity":1,"price":{"id":"price_t"},"subscription":"sub_t"}]}}}}"""
+        .stripMargin.replaceAll("\n", "")
+    val batch = Seq(
+      custEv("evt_t1", "customer.created", 500, ""","email":"a@b.c""""),
+      custEv("evt_t2", "customer.deleted", 501, ""","deleted":true"""),
+      """{"id":"evt_t4","type":"product.created","created":500,"data":{"object":{"id":"prod_t","name":"P"}}}""",
+      """{"id":"evt_t5","type":"product.deleted","created":500,"data":{"object":{"id":"prod_t"}}}""",
+      """{"id":"evt_t6","type":"price.created","created":500,"data":{"object":{"id":"price_t","unit_amount":5}}}""",
+      sub)
+    val tables = Seq("customers", "products", "prices", "subscriptions", "subscription_items")
+    val pipeline = new WebhookPipeline(dir)
+    pipeline.processBatch(batch.toDF("value"), 0L)
+    val first = tables.map(t => t -> readTable(dir, t).collect().map(_.toString).sorted.toSeq).toMap
+    pipeline.processBatch(batch.toDF("value"), 1L)
+    tables.foreach { t =>
+      assert(readTable(dir, t).collect().map(_.toString).sorted.toSeq == first(t),
+        s"$t changed on reprocessing the same batch")
+    }
+    assert(first("customers").size == 1 && first("products").isEmpty &&
+      first("prices").size == 1 && first("subscription_items").size == 1)
   }
 
   test("structured streaming driver: file-drop events flow through foreachBatch to the tables (S1/§2.6)") {
