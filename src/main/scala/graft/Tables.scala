@@ -19,21 +19,28 @@ object Tables {
   // explicit schema every `spark.read.parquet` pays a footer-inference
   // pass AT PLANNING TIME (ParquetFileFormat.inferSchema runs a
   // driver-visible job), once per query entry per bench pass — pure
-  // launch overhead on a 201-entry inventory. The cache key carries the
-  // dataset directory's mtime (round-15 ADVICE: a path-forever key
-  // silently served a STALE schema — missing columns surfacing as
-  // nulls — if a test or tool ever overwrote a dataset in place with a
-  // changed schema; an in-place rewrite touches the dir, so the mtime
-  // key re-infers exactly then). One java.io stat per read, no Spark
-  // job — still the catalog/metastore contract at 100 TB. This caches
-  // SCHEMA ONLY, never data or results.
-  private val schemaCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), org.apache.spark.sql.types.StructType]
+  // launch overhead on a 201-entry inventory. One entry per dataset
+  // path holds (mtime, schema): an in-place rewrite touches the dir,
+  // so a changed mtime re-infers and REPLACES the entry (a stale schema
+  // would surface missing columns as nulls). The mtime is the Hadoop
+  // FileStatus's, so URI paths work too. One stat per read, no Spark
+  // job. This caches SCHEMA ONLY, never data or results.
+  private[graft] val schemaCache = scala.collection.concurrent.TrieMap
+    .empty[String, (Long, org.apache.spark.sql.types.StructType)]
 
   private def readCached(spark: SparkSession, path: String): DataFrame = {
-    val schema = schemaCache.getOrElseUpdate(
-      (path, new java.io.File(path).lastModified()),
-      spark.read.parquet(path).schema)
+    val p = new org.apache.hadoop.fs.Path(path)
+    // a missing path keeps Spark's own "path does not exist" error
+    val mtime = try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p).getModificationTime
+      catch { case _: java.io.FileNotFoundException => 0L }
+    val schema = schemaCache.get(path) match {
+      case Some((t, cached)) if t == mtime => cached
+      case _ =>
+        val inferred = spark.read.parquet(path).schema
+        schemaCache.put(path, (mtime, inferred))
+        inferred
+    }
     spark.read.schema(schema).parquet(path)
   }
 

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.MergeSink
+import graft.store.Store
 
 /** Incremental PREFERENCE STORE: preference batches fold into the
   * additive Bradley–Terry state ([[Rlhf.btState]]) on parquet, so the
@@ -17,8 +17,8 @@ import graft.operators.MergeSink
   * games. So the state table and the batch ledger commit in ONE atomic
   * swap of a common root — any crash leaves either the old (state,
   * ledger) pair or the new pair, never a folded state with an
-  * unrecorded batch. Crash windows inside the swap itself heal through
-  * the same __old discipline as [[MergeSink.writeAtomic]].
+  * unrecorded batch ([[Store.swap]] — the one swap protocol, whose
+  * crash windows heal like every other store's).
   *
   * Scale shape: the state is bounded by distinct pairs COMPARED (a
   * candidate-generator output, orders of magnitude under the corpus);
@@ -36,8 +36,8 @@ object PreferenceStore {
   def ingest(comparisons: DataFrame, storeDir: String, batchId: Long): Boolean = {
     val spark = comparisons.sparkSession
     val r = root(storeDir)
-    MergeSink.healInterruptedSwap(spark, r)
-    val exists = MergeSink.tableExists(spark, r)
+    Store.heal(spark, r)
+    val exists = Store.exists(spark, r)
     if (exists && spark.read.parquet(s"$r/batches")
         .filter(col("batch_id") === batchId).head(1).nonEmpty)
       return false
@@ -51,7 +51,7 @@ object PreferenceStore {
         spark.read.parquet(s"$r/batches")
           .unionByName(idsDf(spark, Seq(batchId))).distinct()
       else idsDf(spark, Seq(batchId))
-    publishAtomic(spark, r) { tmp =>
+    Store.swap(spark, r) { tmp =>
       // two independent staging writes under one temp root, committed
       // by the single swap below — submit concurrently (guide §2.6,
       // the RollupIngest staging pattern): wall is max(write), not two
@@ -71,15 +71,15 @@ object PreferenceStore {
   def fit(spark: SparkSession, storeDir: String, iters: Int = 8,
           scale: Long = 1000000L): DataFrame = {
     val r = root(storeDir)
-    MergeSink.healInterruptedSwap(spark, r)
+    Store.heal(spark, r)
     Rlhf.fitFromState(spark.read.parquet(s"$r/state"), iters, scale)
   }
 
   /** Current state row count + recorded batch ids (diagnostics). */
   def status(spark: SparkSession, storeDir: String): (Long, Seq[Long]) = {
     val r = root(storeDir)
-    MergeSink.healInterruptedSwap(spark, r)
-    if (!MergeSink.tableExists(spark, r)) (0L, Nil)
+    Store.heal(spark, r)
+    if (!Store.exists(spark, r)) (0L, Nil)
     else (spark.read.parquet(s"$r/state").count(),
       spark.read.parquet(s"$r/batches").collect().map(_.getLong(0)).toSeq.sorted)
   }
@@ -87,30 +87,5 @@ object PreferenceStore {
   private def idsDf(spark: SparkSession, ids: Seq[Long]): DataFrame = {
     import spark.implicits._
     ids.toDF("batch_id")
-  }
-
-  /** Multi-table atomic publish: `write` stages every table under one
-    * temp root, then the root swaps with the [[MergeSink.writeAtomic]]
-    * rename discipline — refuse over an unhealed crash window, retire
-    * live to __old, publish, drop __old. One swap covers state AND
-    * ledger, which is what makes the additive fold exactly-once. */
-  private def publishAtomic(spark: SparkSession, path: String)
-                           (write: String => Unit): Unit = {
-    import org.apache.hadoop.fs.Path
-    val tmp = path + "__stage"
-    write(tmp)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dst = new Path(path)
-    val old = new Path(path + "__old")
-    if (!fs.exists(dst) && fs.exists(old))
-      throw new IllegalStateException(
-        s"unhealed interrupted swap at $path ($old holds the only copy); " +
-          "call healInterruptedSwap before computing the write")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(dst) && !fs.rename(dst, old))
-      throw new java.io.IOException(s"swap retire rename failed: $dst -> $old")
-    if (!fs.rename(new Path(tmp), dst))
-      throw new java.io.IOException(s"swap publish rename failed: $tmp -> $dst")
-    if (fs.exists(old)) fs.delete(old, true)
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.{TableDef, TableDefs}
+import graft.store.Store
 
 /** Backfill scans + recursive FK backfill (SURVEY §3.2, S3/S4/S7 + J2).
   *
@@ -52,11 +53,13 @@ object Backfill {
                     parentTable: String, fkCol: String, fetcher: EntityFetcher,
                     width: Int = 10): Long = {
     import spark.implicits._
-    val path = s"$tablesDir/$parentTable"
-    // Hadoop-FS existence, not java.nio: a file:/s3a: tablesDir would
-    // always look absent to NIO and the scan would silently return 0
-    if (!MergeSink.tableExists(spark, path)) return 0L
-    val parents = spark.read.parquet(path)
+    // through Store: a parent table left as `customers__old` by an
+    // interrupted swap is healed first — taken for absent, the scan
+    // would sync no children and report success
+    val parents = Store.read(spark, s"$tablesDir/$parentTable") match {
+      case Some(stored) => stored
+      case None => return 0L
+    }
     val live =
       if (parents.columns.contains("deleted"))
         parents.filter(!coalesce(col("deleted"), lit(false)))
@@ -184,7 +187,7 @@ object Backfill {
     * long pole of a backfill and each window is an independent cursor —
     * while every fetched payload funnels through the SAME single-writer
     * chunked merge pipeline as [[syncEntity]]. Fetch concurrency never
-    * becomes sink concurrency: two concurrent writeAtomic swaps on one
+    * becomes sink concurrency: two concurrent Store.commit swaps on one
     * table would race their staging renames, and the LWW + merge guard
     * needs no such risk — an entity that appears in two windows
     * (updated mid-scan, or overlapping ranges) is collapsed by the
@@ -256,12 +259,9 @@ object Backfill {
       val parentDef = TableDefs.byTable(parentTable)
       val candidates = batch.select(
         coalesce(get_json_object(col(fkCol), "$.id"), col(fkCol)).as(fkCol))
-      val path = s"$tablesDir/$parentTable"
-      val parent =
-        if (MergeSink.tableExists(spark, path))
-          spark.read.parquet(path)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], parentDef.schema)
+      val parent = Store.read(spark, s"$tablesDir/$parentTable").getOrElse(
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], parentDef.schema))
       parentTable -> MergeOps.missingKeys(candidates, fkCol, parent, parentDef.key)
     }
 

@@ -107,10 +107,6 @@ object Layout {
   // listing diffs, just set difference against the manifest.
   // ---------------------------------------------------------------------
 
-  private def hfs(spark: org.apache.spark.sql.SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def manifestPath(root: String, partDir: String) =
     new org.apache.hadoop.fs.Path(s"$root/_graft_layout/$partDir")
 
@@ -129,17 +125,11 @@ object Layout {
       finally in.close()
     }
 
-  private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
+  private def writeManifest(spark: org.apache.spark.sql.SparkSession,
                             p: org.apache.hadoop.fs.Path,
-                            files: Seq[String]): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, "." + p.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(files.sorted.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"manifest rename failed: $tmp -> $p")
-  }
+                            files: Seq[String]): Unit =
+    graft.store.Store.writeMeta(spark, p.toString)(
+      _.write(files.sorted.mkString("\n").getBytes("UTF-8")))
 
   /** Initial clustered layout of a Hive-partitioned table: ONE write
     * range-partitioned on (partCol, file-prefix-of-z) — rows sharing a
@@ -165,9 +155,9 @@ object Layout {
       .sortWithinPartitions(partCol, "__z")
       .drop("__f", "__z")
       .write.mode("overwrite").partitionBy(partCol).parquet(root)
-    val fs = hfs(df.sparkSession, root)
+    val fs = graft.store.Store.fs(df.sparkSession, root)
     partitionDirs(fs, root).foreach { pd =>
-      writeManifest(fs, manifestPath(root, pd.getName), dataFiles(fs, pd))
+      writeManifest(df.sparkSession, manifestPath(root, pd.getName), dataFiles(fs, pd))
     }
   }
 
@@ -199,7 +189,7 @@ object Layout {
                cols: Seq[String], bits: Int = 8, filesPerPartition: Int = 16,
                dirtyThreshold: Double = 0.2): (Int, Int) = {
     import org.apache.hadoop.fs.Path
-    val fs = hfs(spark, root)
+    val fs = graft.store.Store.fs(spark, root)
     val stageRoot = new Path(root, ".graft_stage")
     val oldRoot = new Path(root, ".graft_old")
     // heal: a crash between the two swap renames leaves the live dir
@@ -259,7 +249,7 @@ object Layout {
         if (!fs.rename(stage, pd))
           throw new java.io.IOException(s"layout publish failed: $pd")
         fs.delete(old, true)
-        writeManifest(fs, manifestPath(root, pd.getName), dataFiles(fs, pd))
+        writeManifest(spark, manifestPath(root, pd.getName), dataFiles(fs, pd))
         re += 1
         }
       }

@@ -3,8 +3,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
 import graft.model.TableDef
+import graft.store.Store
 
 /** The single most load-bearing custom piece (SURVEY §7.4): the guarded
   * upsert sink — `upsertManyWithTimestampProtection`
@@ -78,11 +78,11 @@ object MergeSink {
         Seq(tsCol, RankCol, EvtSeqCol).filter(batch.columns.contains))
       .drop(RankCol, EvtSeqCol)
     val path = s"$dir/${tdef.table}"
-    val merged = readStored(spark, path) match {
+    val merged = Store.read(spark, path) match {
       case Some(target) => MergeOps.mergeGuarded(target, deduped, tdef.key, tsCol)
       case None => deduped
     }
-    writeAtomic(deleteIds.fold(merged)(withoutKeys(merged, _, tdef)), path)
+    Store.commit(deleteIds.fold(merged)(withoutKeys(merged, _, tdef)), path)
   }
 
   /** Guarded upsert of `batch` plus a hard prune in the SAME commit:
@@ -101,7 +101,7 @@ object MergeSink {
     val deduped = MergeOps.lwwLatest(
       batch.filter(col(tdef.key).isNotNull), Seq(tdef.key), Seq(tsCol))
     val path = s"$dir/${tdef.table}"
-    val merged0 = readStored(spark, path) match {
+    val merged0 = Store.read(spark, path) match {
       case Some(target) => MergeOps.mergeGuarded(target, deduped, tdef.key, tsCol)
       case None => deduped
     }
@@ -110,7 +110,7 @@ object MergeSink {
     // per batch — giving back most of the fused-commit saving
     val merged = graft.llm.Stage(merged0)
     val victims = stale(merged).select(col(tdef.key))
-    writeAtomic(merged.join(victims, Seq(tdef.key), "left_anti"), path)
+    Store.commit(merged.join(victims, Seq(tdef.key), "left_anti"), path)
   }
 
   /** SCD2 history sink — the `mode=history` companion to the LWW
@@ -142,7 +142,7 @@ object MergeSink {
     val clean = batch.filter(col(tdef.key).isNotNull).drop("updated_at")
     val tieCols = clean.columns.filterNot(c => c == tdef.key || c == tsCol).toSeq
     val path = s"$dir/${tdef.table}__history"
-    val merged = readStored(spark, path) match {
+    val merged = Store.read(spark, path) match {
       case Some(history) =>
         MergeOps.scd2Merge(history, clean, Seq(tdef.key), tsCol, tieCols)
       case None =>
@@ -150,17 +150,17 @@ object MergeSink {
           clean.dropDuplicates(tdef.key +: tsCol +: tieCols),
           Seq(tdef.key), tsCol, tieCols)
     }
-    writeAtomic(merged, path)
+    Store.commit(merged, path)
   }
 
   /** Served SCD2 history: the `<table>__history` store minus the flagged
     * no-change rows — classic dense-versioned, tiled SCD2 rows. Point-in-
     * time reads ([[MergeOps.asOfState]]) may skip the filter: no-change
     * rows carry empty intervals and never cover any timestamp. */
-  def readHistory(spark: org.apache.spark.sql.SparkSession, dir: String,
+  def readHistory(spark: SparkSession, dir: String,
                   table: String): DataFrame = {
     val path = s"$dir/${table}__history"
-    healInterruptedSwap(spark, path)
+    Store.heal(spark, path)
     spark.read.parquet(path).filter(col("is_change")).drop("is_change")
   }
 
@@ -169,116 +169,13 @@ object MergeSink {
   def deleteParquet(ids: DataFrame, dir: String, tdef: TableDef): Unit = {
     val spark = ids.sparkSession
     val path = s"$dir/${tdef.table}"
-    readStored(spark, path).foreach(target =>
-      writeAtomic(withoutKeys(target, ids, tdef), path))
+    Store.read(spark, path).foreach(target =>
+      Store.commit(withoutKeys(target, ids, tdef), path))
   }
 
   /** `rows` minus the keys named by `ids`' first column. */
   private def withoutKeys(rows: DataFrame, ids: DataFrame, tdef: TableDef): DataFrame =
     MergeOps.setDiffDelete(rows, ids.select(col(ids.columns.head).as(tdef.key)), tdef.key)
-
-  /** The swap-managed store at `path` as a DataFrame, or None when it
-    * does not exist — healed first ([[healInterruptedSwap]]), tested
-    * through Hadoop ([[tableExists]]). The schema comes from the Spark
-    * row schema Spark wrote into one data file's footer, read on the
-    * driver: `spark.read.parquet` would infer the same schema with a
-    * one-task Spark job at the head of every merge. It is the STORED
-    * schema, not the declared one, so columns only the table carries
-    * survive the merge ([[MergeOps.mergeGuarded]]'s schema-evolution
-    * note). Files without the footer key fall back to inference. */
-  private[graft] def readStored(spark: SparkSession, path: String): Option[DataFrame] = {
-    healInterruptedSwap(spark, path)
-    if (!tableExists(spark, path)) None
-    else Some(footerSchema(spark, path)
-      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path)))
-  }
-
-  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new Path(path)
-    val dataFile = dir.getFileSystem(conf).listStatus(dir).iterator
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
-      .map(_.getPath).minByOption(_.getName)
-    dataFile.flatMap { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata")
-        finally reader.close()
-      Option(json).flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
-        .collect { case s: StructType => s }
-    }
-  }
-
-  /** Local-mode table swap: write to a staging dir, retire the old dir
-    * by RENAME (not delete — the data survives every crash window), move
-    * the staged dir into place, then drop the retired copy. A crash
-    * between the two renames leaves `path` missing but `path__old`
-    * intact; [[healInterruptedSwap]] restores it, and every reader of a
-    * swap-managed dir calls it first — without the heal step a
-    * dedup/signature store that "vanished" mid-swap would silently
-    * re-admit everything it ever deduped. (A transactional table format
-    * makes all of this one metadata commit; this is the plain-filesystem
-    * approximation with no silent-loss window.) */
-  /** Hadoop-FS existence test for sink paths — java.nio Files.exists
-    * only understands LOCAL OS paths: for a `file:` URI or any remote
-    * scheme it returns false, the merge would treat the table as absent,
-    * and writeAtomic would replace it with just the current batch — a
-    * silent total loss. healInterruptedSwap two lines above every call
-    * already resolves the same string through Hadoop; existence must
-    * use the same resolution. */
-  private[graft] def tableExists(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  private[graft] def writeAtomic(df: DataFrame, path: String,
-                                 partitionBy: Seq[String] = Nil): Unit = {
-    val tmp = path + "__stage"
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(tmp)
-    val spark = df.sparkSession
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dst = new Path(path)
-    val old = new Path(path + "__old")
-    // REFUSE to publish over an unhealed crash window: dst missing with
-    // __old present means a swap died between its renames and __old
-    // holds the ONLY copy — and it ALSO means this caller skipped
-    // healInterruptedSwap, so its dataframe was computed against a
-    // missing target (a merge would be batch-only). Deleting __old here
-    // would finish the data loss silently; renaming it back would be
-    // retired-and-deleted by the very next lines. Throwing preserves
-    // the copy and surfaces the missing heal call loudly.
-    if (!fs.exists(dst) && fs.exists(old))
-      throw new IllegalStateException(
-        s"unhealed interrupted swap at $path ($old holds the only copy); " +
-          "call healInterruptedSwap before computing the write")
-    if (fs.exists(old)) fs.delete(old, true) // prior completed swap's leftover
-    if (fs.exists(dst) && !fs.rename(dst, old))
-      throw new java.io.IOException(s"swap retire rename failed: $dst -> $old")
-    if (!fs.rename(new Path(tmp), dst))
-      throw new java.io.IOException(s"swap publish rename failed: $tmp -> $dst")
-    if (fs.exists(old)) fs.delete(old, true)
-  }
-
-  /** Crash recovery for [[writeAtomic]]-managed dirs: if the live dir is
-    * missing but a retired `__old` copy exists (a crash hit the window
-    * between the two swap renames), restore it. Call before reading any
-    * swap-managed store. No-op in every healthy state. */
-  private[graft] def healInterruptedSwap(spark: org.apache.spark.sql.SparkSession,
-                                         path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dst = new Path(path)
-    val old = new Path(path + "__old")
-    if (!fs.exists(dst) && fs.exists(old) && !fs.rename(old, dst))
-      throw new java.io.IOException(s"swap heal rename failed: $old -> $dst")
-  }
 
   /** Guarded upsert into a live JDBC database, foreachBatch-compatible:
     * intra-batch LWW → bulk-append the batch to a staging table

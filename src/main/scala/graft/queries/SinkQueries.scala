@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
+import graft.store.Store
 import graft.streaming.WebhookPipeline
 
 /** Side-effecting benchmark queries — pipelines whose result is SINK
@@ -48,22 +49,23 @@ object SinkQueries {
     * round-trips become one job whose tiny scan stages run
     * concurrently. `_event_guard` is ledger/bloom state, not a parquet
     * table — only `_quarantine` among the underscore dirs is readable. */
-  private def unionOverTables(dir: String)(
+  private def unionOverTables(spark: org.apache.spark.sql.SparkSession,
+                              dir: String)(
       mk: String => org.apache.spark.sql.DataFrame)
       : Seq[org.apache.spark.sql.Row] = {
-    val tables = Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(_.isDirectory).map(_.getName)
-      .filter(t => !t.startsWith("_") || t == "_quarantine").sorted.toSeq
+    val fs = Store.fs(spark, dir)
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val tables =
+      (if (fs.exists(root)) fs.listStatus(root).toSeq else Nil)
+        .filter(_.isDirectory).map(_.getPath.getName)
+        .filter(t => !t.startsWith("_") || t == "_quarantine").sorted
     if (tables.isEmpty) Seq.empty
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, tables.size))
-      val frames = try tables.map { t =>
-        pool.submit(new java.util.concurrent.Callable[org.apache.spark.sql.DataFrame] {
-          def call() = mk(t)
-        })
-      }.map(_.get()) finally pool.shutdown()
+      val frames = new Array[org.apache.spark.sql.DataFrame](tables.size)
+      // Concurrently rethrows the original cause and cancels the
+      // sibling jobs on a failure
+      graft.operators.Concurrently.run(tables.indices.map(i =>
+        () => frames(i) = mk(tables(i))))
       frames.reduce(_.unionAll(_)).collect().toSeq
     }
   }
@@ -203,21 +205,18 @@ object SinkQueries {
         val b2 = graft.streaming.CorpusIngest.processBatch(
           docs, corpusDir, sigDir, batchId = 1L) // odd half fresh, even replayed
         // the three maintained artifacts are independent stores — their
-        // compactions submit concurrently (the qs1 pool pattern; wall
-        // time = the slowest compactor, not the sum of three)
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-        val (fG, fB, fS) = try {
-          val fG = pool.submit(new java.util.concurrent.Callable[(Int, Int)] {
-            def call() = graft.streaming.ReplayGuard.compact(
-              s, graft.streaming.CorpusIngest.guardDirOf(sigDir)) })
-          val fB = pool.submit(new java.util.concurrent.Callable[(Int, Int)] {
-            def call() = graft.streaming.BandStore.compact(
-              s, graft.streaming.BandStore.dirOf(sigDir)) })
-          val fS = pool.submit(new java.util.concurrent.Callable[(Int, Int)] {
-            def call() = graft.streaming.CorpusIngest.compactSigs(s, sigDir) })
-          (fG, fB, fS)
-        } finally pool.shutdown()
-        val (gB, gA) = fG.get(); val (bB, bA) = fB.get(); val (sB, sA) = fS.get()
+        // compactions submit concurrently (wall time = the slowest
+        // compactor, not the sum of three)
+        val stores = Seq(
+          graft.streaming.ReplayGuard.idsPath(
+            graft.streaming.CorpusIngest.guardDirOf(sigDir)),
+          graft.streaming.BandStore.dataPath(
+            graft.streaming.BandStore.dirOf(sigDir)),
+          sigDir)
+        val files = new Array[(Int, Int)](stores.size)
+        graft.operators.Concurrently.run(stores.indices.map(i =>
+          () => files(i) = Store.compact(s, stores(i))))
+        val Array((gB, gA), (bB, bA), (sB, sA)) = files
         val orphans = graft.streaming.CorpusIngest.reconcile(s, corpusDir, sigDir)
         val stored = s.read.parquet(corpusDir).count()
         Seq(("admitted_b1", b1), ("admitted_b2", b2),
@@ -335,7 +334,7 @@ object SinkQueries {
           // below, so the returned frame must not re-read it lazily
           // (one union-of-aggregates action — see [[unionOverTables]])
           def tableCounts(): Seq[(String, Long)] =
-            unionOverTables(dir) { t =>
+            unionOverTables(s, dir) { t =>
               s.read.parquet(s"$dir/$t")
                 .agg(count(lit(1)).as("n")).select(lit(t).as("t"), col("n"))
             }.map(r => (r.getString(0), r.getLong(1)))
@@ -420,7 +419,7 @@ object SinkQueries {
           // rewrote a row without changing any count would still trip
           // the gate (round-10 hardening).
           def tableState(): Map[String, (Long, String)] =
-            unionOverTables(dir) { t =>
+            unionOverTables(s, dir) { t =>
               // DECIMAL sum: a Long sum of ~hundreds of xxhash64
               // values overflows (ANSI throws)
               s.read.parquet(s"$dir/$t")
@@ -759,8 +758,8 @@ object SinkQueries {
           })
           (fA.get(), fBm.get())
         } finally servePool.shutdown()
-        val quarEmpty = !Files.exists(Paths.get(s"$vroot/_quarantine")) &&
-          !Files.exists(Paths.get(s"${sigDir}_quarantine"))
+        val quarEmpty = !Store.exists(s, s"$vroot/_quarantine") &&
+          !Store.exists(s, s"${sigDir}_quarantine")
         Seq(("corpus_docs", countsAfterHeal._1),
             ("vec_docs", countsAfterHeal._2),
             ("bm25_docs", countsAfterHeal._3),
@@ -825,7 +824,7 @@ object SinkQueries {
         PreferenceStore.ingest(batch(0), base, 0L)
         // PLANT the interrupted-swap crash window: live root retired to
         // __old, publish never happened — exactly what a kill between
-        // writeAtomic's two renames leaves behind
+        // Store.swap's two renames leaves behind
         val rootF = new java.io.File(s"$base/bt_store")
         val planted = rootF.renameTo(new java.io.File(s"$base/bt_store__old"))
         PreferenceStore.ingest(batch(1), base, 1L) // must heal, then fold

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.store.Store
 
 /** Persisted LSH BAND store — the candidate-generation artifact that
   * makes incremental text dedup O(batch) instead of O(corpus) per
@@ -40,15 +40,13 @@ object BandStore {
   /** The band store location beside a signature store. */
   def dirOf(sigDir: String): String = s"${sigDir}_bands"
 
-  private def dataPath(dir: String) = s"$dir/data"
+  /** The bucketed band rows; compact with [[Store.compact]]. */
+  private[graft] def dataPath(dir: String) = s"$dir/data"
   private def metaPath(dir: String) = s"$dir/meta"
-
-  private def fsOf(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** The store exists once [[bootstrap]] has committed its meta file. */
   def exists(spark: SparkSession, dir: String): Boolean =
-    fsOf(spark, dir).exists(new Path(metaPath(dir)))
+    Store.exists(spark, metaPath(dir))
 
   /** Create an empty store, fixing the layout contract: `nBuckets`
     * (partition count the pruning depends on) and the banding
@@ -58,48 +56,25 @@ object BandStore {
     require(!exists(spark, dir), s"band store already exists at $dir")
     require(nBuckets > 0 && numPerms > 0 && bands > 0 && numPerms % bands == 0,
       s"bad band-store params: nBuckets=$nBuckets numPerms=$numPerms bands=$bands")
-    val fs = fsOf(spark, dir)
-    val tmp = new Path(metaPath(dir) + ".tmp")
-    val out = new java.io.DataOutputStream(fs.create(tmp, true))
-    try { out.writeInt(nBuckets); out.writeInt(numPerms); out.writeInt(bands) }
-    finally out.close()
-    if (!fs.rename(tmp, new Path(metaPath(dir))))
-      throw new java.io.IOException(s"band-store meta commit failed: $dir")
+    Store.writeMeta(spark, metaPath(dir)) { out =>
+      out.writeInt(nBuckets); out.writeInt(numPerms); out.writeInt(bands) }
   }
 
   /** (nBuckets, numPerms, bands) this store was bootstrapped with. */
-  def meta(spark: SparkSession, dir: String): (Int, Int, Int) = {
-    val in = new java.io.DataInputStream(
-      fsOf(spark, dir).open(new Path(metaPath(dir))))
-    try (in.readInt(), in.readInt(), in.readInt()) finally in.close()
-  }
+  def meta(spark: SparkSession, dir: String): (Int, Int, Int) =
+    Store.readMeta(spark, metaPath(dir))(in => (in.readInt(), in.readInt(), in.readInt()))
 
   private def bucketCol(nBuckets: Int) =
     pmod(col("band_hash"), lit(nBuckets.toLong))
 
   /** Append banded rows (doc_id, band, band_hash) — one file per
-    * touched bucket per batch (the [[ReplayGuard.record]] repartition
-    * discipline), null band hashes dropped. */
+    * touched bucket per batch ([[Store.append]]), null band hashes
+    * dropped. */
   def append(bandsDf: DataFrame, dir: String): Unit = {
-    val spark = bandsDf.sparkSession
-    graft.operators.MergeSink.healInterruptedSwap(spark, dataPath(dir))
-    val (nBuckets, _, _) = meta(spark, dir)
-    bandsDf.filter(col("band_hash").isNotNull)
+    val (nBuckets, _, _) = meta(bandsDf.sparkSession, dir)
+    Store.append(bandsDf.filter(col("band_hash").isNotNull)
       .select(col("doc_id"), col("band"), col("band_hash"),
-        bucketCol(nBuckets).as("bucket"))
-      .repartition(col("bucket"))
-      .write.mode(SaveMode.Append).partitionBy("bucket").parquet(dataPath(dir))
-  }
-
-  /** Bucket values that actually exist as partitions — a driver-side
-    * listing of ≤ nBuckets directory entries, never a data scan. */
-  private def existingBuckets(spark: SparkSession, dir: String): Set[Long] = {
-    val fs = fsOf(spark, dir)
-    val p = new Path(dataPath(dir))
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).iterator
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-      .map(_.getPath.getName.stripPrefix("bucket=").toLong).toSet
+        bucketCol(nBuckets).as("bucket")), dataPath(dir), "bucket")
   }
 
   /** The store side of the incremental candidate join, pruned to the
@@ -111,55 +86,23 @@ object BandStore {
     * plan carries NO store scan. */
   def prunedFor(spark: SparkSession, dir: String,
                 batchBands: DataFrame): Option[DataFrame] = {
-    graft.operators.MergeSink.healInterruptedSwap(spark, dataPath(dir))
+    Store.heal(spark, dataPath(dir))
     val (nBuckets, _, _) = meta(spark, dir)
-    val existing = existingBuckets(spark, dir)
+    val existing = Store.partitions(spark, dataPath(dir), "bucket")
     if (existing.isEmpty) return None
     val touched = batchBands
       .select(bucketCol(nBuckets).as("bucket"))
       .distinct().collect().map(_.getLong(0)).toSet
     val hit = (touched intersect existing).toSeq.sorted
     if (hit.isEmpty) None
-    else Some(spark.read.parquet(dataPath(dir))
+    else Store.read(spark, dataPath(dir)).map(_
       .filter(col("bucket").isin(hit.map(_.asInstanceOf[Any]): _*))
       .select("doc_id", "band", "band_hash"))
   }
 
-  /** Per-bucket small-file compaction — one file per bucket after a long
-    * run of per-batch appends, partition layout (and so the pruning)
-    * preserved via the heal-safe atomic swap. Quiesce writers while it
-    * runs. Returns (filesBefore, filesAfter). */
-  def compact(spark: SparkSession, dir: String): (Int, Int) = {
-    val path = dataPath(dir)
-    graft.operators.MergeSink.healInterruptedSwap(spark, path)
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(new Path(path))) return (0, 0)
-    def countFiles: Int = {
-      val it = fs.listFiles(new Path(path), true)
-      var n = 0
-      while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-      n
-    }
-    val before = countFiles
-    graft.operators.MergeSink.writeAtomic(
-      spark.read.parquet(path).repartition(col("bucket")), path,
-      partitionBy = Seq("bucket"))
-    (before, countFiles)
-  }
-
-  /** Remove every band row of the victim doc_ids (atomic partitioned
-    * rewrite; dir deleted when nothing survives — an empty partitioned
-    * write leaves a schema-less husk that kills later reads). The
-    * eviction half of [[CorpusIngest.reconcile]]'s orphan cleanup. */
+  /** Remove every band row of the victim doc_ids ([[Store.evict]]) —
+    * the eviction half of [[CorpusIngest.reconcile]]'s orphan cleanup. */
   def evict(spark: SparkSession, dir: String, victims: DataFrame,
-            idCol: String): Unit = {
-    val path = dataPath(dir)
-    graft.operators.MergeSink.healInterruptedSwap(spark, path)
-    if (!fsOf(spark, dir).exists(new Path(path))) return
-    val keep = spark.read.parquet(path)
-      .join(victims.select(col(idCol).as("doc_id")), Seq("doc_id"), "left_anti")
-    if (keep.isEmpty) fsOf(spark, dir).delete(new Path(path), true)
-    else graft.operators.MergeSink.writeAtomic(keep, path,
-      partitionBy = Seq("bucket"))
-  }
+            idCol: String): Unit =
+    Store.evict(spark, dataPath(dir), victims.select(idCol), "doc_id")
 }

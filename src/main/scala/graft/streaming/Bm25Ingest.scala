@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.store.Store
 
 /** Maintained BM25 retrieval state — the lexical-retrieval face of the
   * maintained-state family (q93/q96/q110/q142): every statistic BM25
@@ -19,8 +20,8 @@ import org.apache.spark.sql.functions._
   *     id hash so the freshness anti-join probes only the batch's
   *     buckets;
   *   - `v<id>/globals` — the 1-row (n_docs, t_tokens), a versioned
-  *     snapshot whose version number IS the applied-batch watermark
-  *     (the [[RollupIngest]] commit protocol).
+  *     snapshot ([[Store.publishVersion]]) whose version number IS the
+  *     applied-batch watermark.
   *
   * Idempotence WITHOUT a fail-closed window: the per-batch appends are
   * OVERWRITES of the batch's own `batch_id=` subdir, and batch
@@ -33,9 +34,6 @@ import org.apache.spark.sql.functions._
   */
 object Bm25Ingest {
 
-  private def fsOf(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def postingsDir(stateDir: String) = s"$stateDir/postings"
   private def doclenDir(stateDir: String) = s"$stateDir/doclen"
 
@@ -43,17 +41,6 @@ object Bm25Ingest {
     pmod(xxhash64(col("term")), lit(nBuckets.toLong))
   private def idBucket(nBuckets: Int) =
     pmod(xxhash64(col("doc_id")), lit(nBuckets.toLong))
-
-  /** Latest committed (batchId, path) globals snapshot, if any. */
-  def latestVersion(spark: SparkSession, stateDir: String): Option[(Long, String)] = {
-    val fs = fsOf(spark, stateDir)
-    val root = new Path(stateDir)
-    if (!fs.exists(root)) None
-    else fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches("v\\d+"))
-      .map(s => (s.getPath.getName.drop(1).toLong, s.getPath.toString))
-      .sortBy(_._1).lastOption
-  }
 
   /** Per-doc postings of one batch: (term, doc_id, tf, dl) + term
     * bucket. The doc length rides DENORMALIZED on every posting
@@ -93,13 +80,11 @@ object Bm25Ingest {
   def processBatch(batch: DataFrame, stateDir: String, batchId: Long,
                    nBuckets: Int = 64, keepVersions: Int = 2): Long = {
     val spark = batch.sparkSession
-    val fs = fsOf(spark, stateDir)
-    // a compact() crash mid-swap leaves a store retired as __old; heal
-    // BEFORE any read or append — an unhealed append would create a
-    // fresh dir that blocks healing forever (the CorpusIngest lesson)
-    graft.operators.MergeSink.healInterruptedSwap(spark, postingsDir(stateDir))
-    graft.operators.MergeSink.healInterruptedSwap(spark, doclenDir(stateDir))
-    val latest = latestVersion(spark, stateDir)
+    // heal BEFORE any read or append — an unhealed append would create
+    // a fresh dir that blocks healing forever
+    Store.heal(spark, postingsDir(stateDir))
+    Store.heal(spark, doclenDir(stateDir))
+    val latest = Store.latestVersion(spark, stateDir)
     if (latest.exists(_._1 >= batchId)) return 0L // fully applied replay
 
     val clean = batch.select(col("doc_id"), col("text"))
@@ -118,7 +103,7 @@ object Bm25Ingest {
     // CorpusIngest caveat): fall back to an explicit count then.
     val obs = org.apache.spark.sql.Observation()
     val fresh = graft.llm.Stage(
-      (if (!fs.exists(new Path(dlPath))) clean
+      (if (!Store.exists(spark, dlPath)) clean
       else {
         val buckets = clean.select(idBucket(nBuckets).as("bucket"))
           .distinct().collect().map(_.getLong(0)).toIndexedSeq
@@ -142,23 +127,15 @@ object Bm25Ingest {
         .write.mode(SaveMode.Overwrite).partitionBy("bucket")
         .parquet(s"$dlPath/batch_id=$batchId")
     }
-    // globals LAST: the snapshot rename is the batch's commit point and
-    // its version number the replay watermark (RollupIngest protocol)
+    // globals LAST: the snapshot is the batch's commit point and its
+    // version number the replay watermark
     val merged = latest match {
       case Some((_, p)) =>
         mergeGlobals(spark.read.parquet(s"$p/globals"), globalsState(fresh))
       case None => globalsState(fresh)
     }
-    val staging = new Path(s"$stateDir/.staging_v$batchId")
-    if (fs.exists(staging)) fs.delete(staging, true)
-    merged.coalesce(1).write.parquet(s"$staging/globals")
-    if (!fs.rename(staging, new Path(s"$stateDir/v$batchId")))
-      throw new java.io.IOException(
-        s"bm25 globals commit rename failed: $staging -> $stateDir/v$batchId")
-    val versions = fs.listStatus(new Path(stateDir)).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches("v\\d+"))
-      .sortBy(_.getPath.getName.drop(1).toLong)
-    versions.dropRight(keepVersions).foreach(s => fs.delete(s.getPath, true))
+    Store.publishVersion(spark, stateDir, batchId, keepVersions)(staging =>
+      merged.coalesce(1).write.parquet(s"$staging/globals"))
     n
   }
 
@@ -172,16 +149,15 @@ object Bm25Ingest {
     * for any batch split). */
   def serve(spark: SparkSession, stateDir: String, queries: DataFrame,
             k: Int = 10, nBuckets: Int = 64): Option[DataFrame] =
-    latestVersion(spark, stateDir).map { case (_, p) =>
-      graft.operators.MergeSink.healInterruptedSwap(spark, postingsDir(stateDir))
-      graft.operators.MergeSink.healInterruptedSwap(spark, doclenDir(stateDir))
+    Store.latestVersion(spark, stateDir).map { case (_, p) =>
+      Store.heal(spark, postingsDir(stateDir))
       val qterms = queries.select("term").distinct()
       val buckets = qterms.select(termBucket(nBuckets).as("bucket"))
         .distinct().collect().map(_.getLong(0)).toIndexedSeq
       // an index whose every committed batch was empty has no postings
       // dir yet — serve the (correct) empty ranking, not a read error
       val tfDl =
-        if (!fsOf(spark, stateDir).exists(new Path(postingsDir(stateDir))))
+        if (!Store.exists(spark, postingsDir(stateDir)))
           queries.select(col("query_id").cast("long").as("doc_id"),
               col("term"), lit(0L).as("tf"), lit(0L).as("dl")).limit(0)
         else spark.read.parquet(postingsDir(stateDir))
@@ -203,53 +179,30 @@ object Bm25Ingest {
     * compaction would otherwise bake the orphans into batch 0. Assumes
     * quiesced ingest like every repair here. */
   def reconcile(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val fs = fsOf(spark, stateDir)
-    def batchIds(dir: String): Set[Long] =
-      if (!fs.exists(new Path(dir))) Set.empty
-      else fs.listStatus(new Path(dir)).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-        .map(_.getPath.getName.stripPrefix("batch_id=").toLong).toSet
+    def batchIds(dir: String) = Store.partitions(spark, dir, "batch_id")
     val orphans =
       (batchIds(postingsDir(stateDir)) -- batchIds(doclenDir(stateDir)))
         .toSeq.sorted
+    val fs = Store.fs(spark, stateDir)
     orphans.foreach { id =>
       fs.delete(new Path(s"${postingsDir(stateDir)}/batch_id=$id"), true) }
     orphans
   }
 
   /** Rewrite the per-batch append swamp into a single `batch_id=0` tree
-    * per store — months of micro-batches otherwise leave one subdir per
-    * batch and file-count-bound every scan (the [[VectorIngest
-    * .compactCells]] problem, same cure). The rewritten rows keep the
-    * partition columns readers rely on: the freshness probe still
-    * filters `batch_id =!= current`, and a replay of a pre-compaction
-    * batch id still no-ops — its docs are in the compacted tree, so the
-    * anti-join yields nothing and nothing is written. Atomic per store
-    * (stage + rename; readers heal). Assumes quiesced ingest, like
-    * every sibling compactor. Returns (files before, files after). */
+    * per store ([[Store.compact]] with the batch ids collapsed). The
+    * rewritten rows keep the partition columns readers rely on: the
+    * freshness probe still filters `batch_id =!= current`, and a replay
+    * of a pre-compaction batch id still no-ops — its docs are in the
+    * compacted tree, so the anti-join yields nothing and nothing is
+    * written. Returns (files before, files after). */
   def compact(spark: SparkSession, stateDir: String): (Int, Int) = {
     reconcile(spark, stateDir) // never bake crash orphans into batch 0
-    val fs = fsOf(spark, stateDir)
-    def files(dir: String): Int =
-      if (!fs.exists(new Path(dir))) 0
-      else {
-        val it = fs.listFiles(new Path(dir), true)
-        var n = 0
-        while (it.hasNext) {
-          if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-        n
-      }
-    def rewrite(dir: String): Unit = if (fs.exists(new Path(dir))) {
-      graft.operators.MergeSink.healInterruptedSwap(spark, dir)
-      val df = spark.read.parquet(dir).withColumn("batch_id", lit(0L))
-      graft.operators.MergeSink.writeAtomic(
-        df.repartition(col("bucket")), dir,
-        partitionBy = Seq("batch_id", "bucket"))
-    }
-    val before = files(postingsDir(stateDir)) + files(doclenDir(stateDir))
-    rewrite(postingsDir(stateDir))
-    rewrite(doclenDir(stateDir))
-    (before, files(postingsDir(stateDir)) + files(doclenDir(stateDir)))
+    val (pb, pa) = Store.compact(spark, postingsDir(stateDir),
+      _.withColumn("batch_id", lit(0L)))
+    val (db, da) = Store.compact(spark, doclenDir(stateDir),
+      _.withColumn("batch_id", lit(0L)))
+    (pb + db, pa + da)
   }
 
   /** Structured Streaming driver over a JSONL file-drop source of

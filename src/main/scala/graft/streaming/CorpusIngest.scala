@@ -1,11 +1,10 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.llm.Dedup
+import graft.store.Store
 
 /** Streaming corpus ingest with incremental dedup — the LLM-pipeline
   * counterpart of [[WebhookPipeline]]: an unbounded stream of documents
@@ -39,6 +38,16 @@ object CorpusIngest {
 
   val docSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType)))
+
+  // defaults shared by [[processBatch]] and [[processBatchWithAdmitted]]
+  private val DefaultK = 3
+  private val DefaultNumPerms = 32
+  private val DefaultBands = 8
+  private val DefaultMinEstPpm = 500000L
+  private val DefaultDecontamK = 8
+  private val DefaultMaxBenchShared = 0L
+  private val DefaultNBuckets = 64
+  private val DefaultSampleN = 1024
 
   /** One micro-batch: returns the number of admitted documents.
     * foreachBatch-compatible.
@@ -92,15 +101,17 @@ object CorpusIngest {
     *     ledgered, so a cleaned-up re-send of the id is admitted (the
     *     same contract as malformed rows and benchmark contamination). */
   def processBatch(batch: DataFrame, corpusDir: String, sigDir: String,
-                   k: Int = 3, numPerms: Int = 32, bands: Int = 8,
-                   minEstPpm: Long = 500000L,
+                   k: Int = DefaultK, numPerms: Int = DefaultNumPerms,
+                   bands: Int = DefaultBands,
+                   minEstPpm: Long = DefaultMinEstPpm,
                    maxBandDf: Long = Dedup.CorpusDerivedCap,
                    benchmark: Option[DataFrame] = None,
-                   decontamK: Int = 8, maxBenchShared: Long = 0L,
-                   batchId: Long = 0L, nBuckets: Int = 64,
+                   decontamK: Int = DefaultDecontamK,
+                   maxBenchShared: Long = DefaultMaxBenchShared,
+                   batchId: Long = 0L, nBuckets: Int = DefaultNBuckets,
                    qualityPred: Option[Column] = None,
                    sampleDir: Option[String] = None,
-                   sampleN: Int = 1024): Long =
+                   sampleN: Int = DefaultSampleN): Long =
     processBatchCore(batch, corpusDir, sigDir, k, numPerms, bands,
       minEstPpm, maxBandDf, benchmark, decontamK, maxBenchShared, batchId,
       nBuckets, qualityPred, sampleDir, sampleN, wantAdmittedEver = false)._1
@@ -121,13 +132,14 @@ object CorpusIngest {
     * consistent pre-record one. */
   def processBatchWithAdmitted(batch: DataFrame, corpusDir: String,
                                sigDir: String, batchId: Long,
-                               nBuckets: Int = 64): (Long, DataFrame) = {
+                               nBuckets: Int = DefaultNBuckets): (Long, DataFrame) = {
     val (n, adm) = processBatchCore(batch, corpusDir, sigDir,
-      k = 3, numPerms = 32, bands = 8, minEstPpm = 500000L,
-      maxBandDf = Dedup.CorpusDerivedCap, benchmark = None, decontamK = 8,
-      maxBenchShared = 0L, batchId = batchId, nBuckets = nBuckets,
-      qualityPred = None, sampleDir = None, sampleN = 1024,
-      wantAdmittedEver = true)
+      k = DefaultK, numPerms = DefaultNumPerms, bands = DefaultBands,
+      minEstPpm = DefaultMinEstPpm, maxBandDf = Dedup.CorpusDerivedCap,
+      benchmark = None, decontamK = DefaultDecontamK,
+      maxBenchShared = DefaultMaxBenchShared, batchId = batchId,
+      nBuckets = nBuckets, qualityPred = None, sampleDir = None,
+      sampleN = DefaultSampleN, wantAdmittedEver = true)
     (n, adm.get)
   }
 
@@ -144,11 +156,10 @@ object CorpusIngest {
                    sampleN: Int,
                    wantAdmittedEver: Boolean): (Long, Option[DataFrame]) = {
     val spark = batch.sparkSession
-    // a compact() crash mid-swap leaves the store retired as __old; heal
-    // before the exists probe or the dedup store would look empty and
-    // re-admit everything it ever rejected
-    graft.operators.MergeSink.healInterruptedSwap(spark, sigDir)
-    graft.operators.MergeSink.healInterruptedSwap(spark, corpusDir)
+    // healed before the exists probes: an unhealed dedup store would
+    // look empty and re-admit everything it ever rejected
+    Store.heal(spark, sigDir)
+    Store.heal(spark, corpusDir)
     val guardDir = guardPath(sigDir)
     if (!ReplayGuard.exists(spark, guardDir)) {
       // guard bucket count FOLLOWS the signature store's: one pruning
@@ -156,20 +167,20 @@ object CorpusIngest {
       // sidecar files + ledger partition dirs than the 256 default —
       // per-batch sidecar I/O and compaction are file-count-bound
       ReplayGuard.bootstrap(spark, guardDir, nBuckets = nBuckets)
-      if (Files.exists(Paths.get(sigDir))) // migrate a pre-guard store
+      if (Store.exists(spark, sigDir)) // migrate a pre-guard store
         ReplayGuard.record(
           spark.read.parquet(sigDir).select("doc_id"), "doc_id", guardDir)
     }
     val bandsDir = BandStore.dirOf(sigDir)
     if (!BandStore.exists(spark, bandsDir)) {
       BandStore.bootstrap(spark, bandsDir, nBuckets, numPerms, bands)
-      if (Files.exists(Paths.get(sigDir))) {
+      if (Store.exists(spark, sigDir)) {
         // one-time layout migration of a pre-band-store archive: bucket
         // the signature store by id hash, then derive and persist its
         // bands — the last store-wide band hash this pipeline ever runs
         val flat = spark.read.parquet(sigDir)
         if (!flat.columns.contains("bucket"))
-          graft.operators.MergeSink.writeAtomic(
+          Store.commit(
             flat.withColumn("bucket", sigBucket(nBuckets))
               .repartition(col("bucket")), sigDir, partitionBy = Seq("bucket"))
         BandStore.append(Dedup.bandsFromSignatures(
@@ -293,13 +304,10 @@ object CorpusIngest {
       sampleDir.foreach { sd =>
         val st = graft.operators.IncrementalAgg.sampleState(
           admitted.select("doc_id"), "doc_id", sampleN)
-        graft.operators.MergeSink.healInterruptedSwap(spark, sd)
-        val merged =
-          if (Files.exists(Paths.get(sd)))
-            graft.operators.IncrementalAgg.mergeSamples("doc_id", sampleN, None,
-              spark.read.parquet(sd), st)
-          else st
-        graft.operators.MergeSink.writeAtomic(merged, sd)
+        val merged = Store.read(spark, sd).fold(st)(stored =>
+          graft.operators.IncrementalAgg.mergeSamples("doc_id", sampleN, None,
+            stored, st))
+        Store.commit(merged, sd)
       }
     }
     (n, admittedEver)
@@ -310,11 +318,11 @@ object CorpusIngest {
     * (and the migration for a store that predates the sample). Lands
     * on the SAME rows the incremental path maintains, by determinism. */
   def rebuildSample(spark: SparkSession, corpusDir: String, sampleDir: String,
-                    sampleN: Int = 1024): Long = {
-    graft.operators.MergeSink.healInterruptedSwap(spark, sampleDir)
+                    sampleN: Int = DefaultSampleN): Long = {
+    Store.heal(spark, sampleDir)
     val sample = graft.operators.IncrementalAgg.sampleState(
       spark.read.parquet(corpusDir).select("doc_id"), "doc_id", sampleN)
-    graft.operators.MergeSink.writeAtomic(sample, sampleDir)
+    Store.commit(sample, sampleDir)
     spark.read.parquet(sampleDir).count()
   }
 
@@ -432,9 +440,8 @@ object CorpusIngest {
     graft.operators.Concurrently.run(Seq(
       () => BandStore.append(
         Dedup.bandsFromSignatures(sigs, numPerms, bands), bandsDir),
-      () => sigs.withColumn("bucket", sigBucket(nBuckets))
-        .repartition(col("bucket"))
-        .write.mode(SaveMode.Append).partitionBy("bucket").parquet(sigDir)))
+      () => Store.append(sigs.withColumn("bucket", sigBucket(nBuckets)),
+        sigDir, "bucket")))
   }
 
   /** The admission-ledger location beside a signature store — PUBLIC so
@@ -453,14 +460,12 @@ object CorpusIngest {
     * AND both dedup artifacts (all must go: a surviving signature row
     * would reject the re-send as a near-duplicate of itself; a stray
     * band row would keep generating dead candidates), so a corrected
-    * re-send is admitted. Run from maintenance, like [[compact]]. */
+    * re-send is admitted. Run from maintenance, like [[Store.compact]]. */
   def reconcile(spark: SparkSession, corpusDir: String, sigDir: String,
                 evict: Boolean = false): Seq[Long] = {
     val guardDir = guardPath(sigDir)
-    val corpusIds =
-      if (Files.exists(Paths.get(corpusDir)))
-        spark.read.parquet(corpusDir).select("doc_id")
-      else {
+    val corpusIds = Store.read(spark, corpusDir).map(_.select("doc_id"))
+      .getOrElse {
         import spark.implicits._
         spark.emptyDataset[Long].toDF("doc_id")
       }
@@ -479,91 +484,12 @@ object CorpusIngest {
       val bandsDir = BandStore.dirOf(sigDir)
       if (BandStore.exists(spark, bandsDir))
         BandStore.evict(spark, bandsDir, orphans, "doc_id")
-      if (Files.exists(Paths.get(sigDir))) {
-        val keep = spark.read.parquet(sigDir)
-          .join(orphans, Seq("doc_id"), "left_anti")
-        if (keep.isEmpty)
-          // a fully-evicted partitioned store must be DELETED: an empty
-          // partitioned write leaves no schema-bearing files and every
-          // later read dies on inference (ReplayGuard.evict's rule)
-          new org.apache.hadoop.fs.Path(sigDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(new org.apache.hadoop.fs.Path(sigDir), true)
-        else graft.operators.MergeSink.writeAtomic(keep, sigDir,
-          // a legacy flat archive reconciled before its first new-layout
-          // batch has no bucket column yet — rewrite it as it lies
-          partitionBy =
-            if (keep.columns.contains("bucket")) Seq("bucket") else Nil)
-      }
+      // a legacy flat archive reconciled before its first new-layout
+      // batch is rewritten as it lies (Store.evict keeps the layout)
+      Store.evict(spark, sigDir, orphans, "doc_id")
       ReplayGuard.evict(spark, guardDir, orphans, "doc_id")
     }
     orphans.collect().map(_.getLong(0)).sorted.toSeq
-  }
-
-  /** SMALL-FILE COMPACTION for the append-based stores (corpus dir,
-    * signature ledger): every micro-batch appends a handful of parquet
-    * files, so a long-running ingest leaves thousands of KB-sized files
-    * — the classic lakehouse operational debt (each scan pays per-file
-    * open/footer cost; the NameNode/listing pays per-entry). Rewrites
-    * the directory as ceil(bytes / targetBytes) files via an atomic
-    * staging swap ([[graft.operators.MergeSink.writeAtomic]]), data
-    * unchanged. Run it from a maintenance schedule, not the hot loop;
-    * on a transactional table format this is OPTIMIZE/rewriteDataFiles.
-    * Returns (filesBefore, filesAfter). */
-  def compact(spark: SparkSession, dir: String,
-              targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    graft.operators.MergeSink.healInterruptedSwap(spark, dir)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // nothing ingested yet (maintenance schedule fired before the first
-    // batch): a no-op, not a FileNotFoundException — mirrors compactCells
-    if (!fs.exists(new Path(dir))) return (0, 0)
-    val statuses = fs.listStatus(new Path(dir))
-    // guard: this rewrite flattens — running it on a PARTITIONED store
-    // (subdirectories = partition values, e.g. VectorIngest's cell
-    // store) would silently destroy partition pruning; those stores
-    // have their own partition-aware compaction. Hidden dirs (a crashed
-    // append's _temporary, Spark's own convention for non-data paths)
-    // are not partitions and must not block compaction.
-    require(!statuses.exists(s => s.isDirectory &&
-        !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")),
-      s"$dir is a partitioned store — use its partition-aware compaction " +
-        "(VectorIngest.compactCells, CorpusIngest.compactSigs, " +
-        "BandStore.compact), not the flat rewrite")
-    val files = statuses
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val totalBytes = files.map(_.getLen).sum
-    val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    graft.operators.MergeSink.writeAtomic(
-      spark.read.parquet(dir).repartition(n), dir)
-    val after = fs.listStatus(new Path(dir))
-      .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    (files.length, after)
-  }
-
-  /** Partition-aware compaction for the id-bucketed signature store —
-    * one file per bucket after a long run of per-batch appends, bucket
-    * layout (and so the verify's pruning) preserved. A legacy flat
-    * archive compacts flat. Returns (filesBefore, filesAfter). */
-  def compactSigs(spark: SparkSession, sigDir: String): (Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    graft.operators.MergeSink.healInterruptedSwap(spark, sigDir)
-    val fs = new Path(sigDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(sigDir))) return (0, 0)
-    def countFiles: Int = {
-      val it = fs.listFiles(new Path(sigDir), true)
-      var n = 0
-      while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-      n
-    }
-    val before = countFiles
-    val df = spark.read.parquet(sigDir)
-    if (df.columns.contains("bucket"))
-      graft.operators.MergeSink.writeAtomic(
-        df.repartition(col("bucket")), sigDir, partitionBy = Seq("bucket"))
-    else
-      graft.operators.MergeSink.writeAtomic(df.repartition(1), sigDir)
-    (before, countFiles)
   }
 
   /** Structured Streaming driver: file-drop source of JSON documents

@@ -1,11 +1,12 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
 import graft.functions.BloomFns
+import graft.store.Store
 
 /** Scale-safe at-least-once replay guard — the admission ledger both
   * streaming ingests ([[CorpusIngest]], [[VectorIngest]]) consult per
@@ -72,13 +73,11 @@ import graft.functions.BloomFns
 object ReplayGuard {
 
   private val Fpp = 0.01
-  private def idsPath(g: String) = s"$g/ids"
+  /** The exact ledger; compact with [[Store.compact]]. */
+  private[graft] def idsPath(g: String) = s"$g/ids"
   private def bloomPath(g: String) = s"$g/bloom.bin" // v1 monolith (stale)
   private def sidecarPath(g: String, bucket: Long) = s"$g/blooms/$bucket.bin"
   private def metaPath(g: String) = s"$g/meta"
-
-  private def fsOf(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Same formula the sketch library uses: pinning numBits (rather than
     * trusting session conf defaults) makes every filter built for this
@@ -112,26 +111,17 @@ object ReplayGuard {
 
   /** The guard exists once [[bootstrap]] has committed its meta file. */
   def exists(spark: SparkSession, guardDir: String): Boolean =
-    fsOf(spark, guardDir).exists(new Path(metaPath(guardDir)))
+    Store.exists(spark, metaPath(guardDir))
 
   // meta: nBuckets + the capacity FLOOR (rebuilds never shrink below it).
   // Written once, atomically (tmp + rename) — exists() keys off it.
   private def writeMeta(spark: SparkSession, guardDir: String,
-                        nBuckets: Int, estItemsFloor: Long): Unit = {
-    val fs = fsOf(spark, guardDir)
-    val tmp = new Path(metaPath(guardDir) + ".tmp")
-    val out = new java.io.DataOutputStream(fs.create(tmp, true))
-    try { out.writeInt(nBuckets); out.writeLong(estItemsFloor) }
-    finally out.close()
-    if (!fs.rename(tmp, new Path(metaPath(guardDir))))
-      throw new java.io.IOException(s"meta commit failed: $guardDir")
-  }
+                        nBuckets: Int, estItemsFloor: Long): Unit =
+    Store.writeMeta(spark, metaPath(guardDir)) { out =>
+      out.writeInt(nBuckets); out.writeLong(estItemsFloor) }
 
-  private def readMeta(spark: SparkSession, guardDir: String): (Int, Long) = {
-    val in = new java.io.DataInputStream(
-      fsOf(spark, guardDir).open(new Path(metaPath(guardDir))))
-    try (in.readInt(), in.readLong()) finally in.close()
-  }
+  private def readMeta(spark: SparkSession, guardDir: String): (Int, Long) =
+    Store.readMeta(spark, metaPath(guardDir))(in => (in.readInt(), in.readLong()))
 
   // Driver-side sidecar cache, write-through and LRU-bounded: a
   // long-running ingest touches the same buckets batch after batch, and
@@ -165,22 +155,15 @@ object ReplayGuard {
     }
 
   // blooms/K.bin: capacity, applied-id count, sketch bytes for ONE
-  // ledger bucket. Rewritten per touched bucket via tmp + delete +
-  // rename; a crash (or corruption) that loses one is healed by
-  // rebuilding it from its ledger PARTITION — every sidecar is
-  // derivable, bucket-locally.
+  // ledger bucket, rewritten per touched bucket as a Store meta file; a
+  // crash (or corruption) that loses one is healed by rebuilding it
+  // from its ledger PARTITION — every sidecar is derivable,
+  // bucket-locally.
   private def writeSidecar(spark: SparkSession, guardDir: String, bucket: Long,
                            estItems: Long, count: Long, bytes: Array[Byte]): Unit = {
-    val fs = fsOf(spark, guardDir)
-    val dst = new Path(sidecarPath(guardDir, bucket))
-    val tmp = new Path(sidecarPath(guardDir, bucket) + ".tmp")
-    val out = new java.io.DataOutputStream(fs.create(tmp, true))
-    try { out.writeLong(estItems); out.writeLong(count)
-          out.writeInt(bytes.length); out.write(bytes) }
-    finally out.close()
-    if (fs.exists(dst)) fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"sidecar commit failed: $dst")
+    Store.writeMeta(spark, sidecarPath(guardDir, bucket)) { out =>
+      out.writeLong(estItems); out.writeLong(count)
+      out.writeInt(bytes.length); out.write(bytes) }
     sidecarCache.put((guardDir, bucket), (estItems, count, bytes))
   }
 
@@ -189,18 +172,17 @@ object ReplayGuard {
                           bucket: Long): Option[(Long, Long, Array[Byte])] = {
     val cached = sidecarCache.get((guardDir, bucket))
     if (cached != null) return Some(cached)
-    val fs = fsOf(spark, guardDir)
-    val p = new Path(sidecarPath(guardDir, bucket))
-    if (!fs.exists(p)) None
+    val p = sidecarPath(guardDir, bucket)
+    if (!Store.exists(spark, p)) None
     else try {
-      val in = new java.io.DataInputStream(fs.open(p))
-      try {
+      val side = Store.readMeta(spark, p) { in =>
         val est = in.readLong(); val count = in.readLong()
         val bytes = new Array[Byte](in.readInt())
         in.readFully(bytes)
-        sidecarCache.put((guardDir, bucket), (est, count, bytes))
-        Some((est, count, bytes))
-      } finally in.close()
+        (est, count, bytes)
+      }
+      sidecarCache.put((guardDir, bucket), side)
+      Some(side)
     } catch { case _: java.io.IOException | _: NegativeArraySizeException => None }
   }
 
@@ -216,21 +198,15 @@ object ReplayGuard {
   // a v1 guard's monolithic bloom is stale state under the sidecar
   // layout: delete on first touch; sidecars rebuild lazily per bucket
   private def dropV1Monolith(spark: SparkSession, guardDir: String): Unit = {
-    val fs = fsOf(spark, guardDir)
+    val fs = Store.fs(spark, guardDir)
     val p = new Path(bloomPath(guardDir))
     if (fs.exists(p)) fs.delete(p, false)
   }
 
-  // ledger buckets that exist on disk — a driver-side listing of
-  // ≤ nBuckets entries, the truth a missing sidecar is judged against
-  private def ledgerBuckets(spark: SparkSession, guardDir: String): Set[Long] = {
-    val fs = fsOf(spark, guardDir)
-    val p = new Path(idsPath(guardDir))
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).iterator
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-      .map(_.getPath.getName.stripPrefix("bucket=").toLong).toSet
-  }
+  // ledger buckets that exist on disk — the truth a missing sidecar is
+  // judged against
+  private def ledgerBuckets(spark: SparkSession, guardDir: String): Set[Long] =
+    Store.partitions(spark, idsPath(guardDir), "bucket")
 
   /** Rebuild ONE bucket's sidecar from its ledger partition — the
     * self-heal (sidecar lost/corrupt) and grow (bucket count outgrew
@@ -239,9 +215,8 @@ object ReplayGuard {
   private def rebuildSidecar(spark: SparkSession, guardDir: String,
                              bucket: Long, atLeast: Long): (Long, Long, Array[Byte]) = {
     val (nBuckets, floor) = readMeta(spark, guardDir)
-    val fs = fsOf(spark, guardDir)
     val part =
-      if (fs.exists(new Path(idsPath(guardDir))))
+      if (Store.exists(spark, idsPath(guardDir)))
         spark.read.parquet(idsPath(guardDir))
           .filter(col("bucket") === lit(bucket)).select(col("id"))
       else {
@@ -302,7 +277,7 @@ object ReplayGuard {
     * only never-recorded buckets loads no sidecar at all. */
   def filterFresh(batch: DataFrame, idCol: String, guardDir: String): DataFrame = {
     val spark = batch.sparkSession
-    graft.operators.MergeSink.healInterruptedSwap(spark, idsPath(guardDir))
+    Store.heal(spark, idsPath(guardDir))
     dropV1Monolith(spark, guardDir)
     val (nBuckets, _) = readMeta(spark, guardDir)
     val bucketExpr = bucketOf(idCol, nBuckets)
@@ -328,7 +303,7 @@ object ReplayGuard {
       .select(bucketExpr.as("bucket"))
       .distinct().collect().map(_.getLong(0)).sorted
     if (buckets.isEmpty) definitelyNew
-    else if (!fsOf(spark, guardDir).exists(new Path(idsPath(guardDir))))
+    else if (!Store.exists(spark, idsPath(guardDir)))
       // the documented crash window (sidecars committed, ledger append
       // never ran) can leave probable hits with NO ids/ dir at all; the
       // ledger is the truth and it is empty, so every probable hit is
@@ -357,7 +332,7 @@ object ReplayGuard {
     * partition — O(bucket), amortized O(1)/batch. */
   def record(ids: DataFrame, idCol: String, guardDir: String): Long = {
     val spark = ids.sparkSession
-    graft.operators.MergeSink.healInterruptedSwap(spark, idsPath(guardDir))
+    Store.heal(spark, idsPath(guardDir))
     dropV1Monolith(spark, guardDir)
     val (nBuckets, floor) = readMeta(spark, guardDir)
     val bucketExpr = bucketOf(idCol, nBuckets)
@@ -451,54 +426,21 @@ object ReplayGuard {
         .foreach(bb => merged.mergeInPlace(deserialize(bb)))
       writeSidecar(spark, guardDir, b, est, cnt + nb, serialize(merged))
     }
-    ids.select(col(idCol).as("id"), bucketOf(idCol, nBuckets).as("bucket"))
-      // repartition BY BUCKET before the partitioned write: without it
-      // every task writes a file into every bucket it happens to hold —
-      // ~tasks x buckets tiny files PER BATCH (measured ~4k at bench
-      // scale); with it each bucket lives in exactly one task, so a
-      // batch appends at most one file per touched bucket. The shuffle
-      // is batch-sized — the cheap side of the trade at any scale.
-      .repartition(col("bucket"))
-      .write.mode(SaveMode.Append).partitionBy("bucket").parquet(idsPath(guardDir))
+    // one file per touched bucket per batch ([[Store.append]]; the
+    // per-task scatter it prevents measured ~4k files per batch at
+    // bench scale)
+    Store.append(ids.select(col(idCol).as("id"), bucketOf(idCol, nBuckets).as("bucket")),
+      idsPath(guardDir), "bucket")
     n
   }
 
-  /** LEDGER COMPACTION — the maintenance job the append-per-batch
-    * layout needs over a long horizon (one file per touched bucket per
-    * batch; [[VectorIngest.compactCells]]'s problem, same cure):
-    * rewrite `ids/` to one file per bucket via the heal-safe atomic
-    * swap, preserving the bucket partitioning the pruned anti-join
-    * depends on. Quiesce record() while it runs (same contract as
-    * every compactor here); filterFresh readers heal forward.
-    * Returns (filesBefore, filesAfter). */
-  def compact(spark: SparkSession, guardDir: String): (Int, Int) = {
-    val path = idsPath(guardDir)
-    graft.operators.MergeSink.healInterruptedSwap(spark, path)
-    val fs = fsOf(spark, guardDir)
-    if (!fs.exists(new Path(path))) return (0, 0)
-    def countFiles: Int = {
-      val it = fs.listFiles(new Path(path), true)
-      var n = 0
-      while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-      n
-    }
-    val before = countFiles
-    val df = spark.read.parquet(path)
-    graft.operators.MergeSink.writeAtomic(
-      df.repartition(col("bucket")), path, partitionBy = Seq("bucket"))
-    (before, countFiles)
-  }
-
   /** Every recorded id (the exact ledger), for reconciliation. */
-  def knownIds(spark: SparkSession, guardDir: String, as: String): DataFrame = {
-    graft.operators.MergeSink.healInterruptedSwap(spark, idsPath(guardDir))
-    if (fsOf(spark, guardDir).exists(new Path(idsPath(guardDir))))
-      spark.read.parquet(idsPath(guardDir)).select(col("id").as(as))
-    else {
-      import spark.implicits._
-      spark.emptyDataset[Long].toDF(as)
-    }
-  }
+  def knownIds(spark: SparkSession, guardDir: String, as: String): DataFrame =
+    Store.read(spark, idsPath(guardDir)).map(_.select(col("id").as(as)))
+      .getOrElse {
+        import spark.implicits._
+        spark.emptyDataset[Long].toDF(as)
+      }
 
   /** Ledgered-but-unstored ids: recorded here, absent from the caller's
     * store — the fail-closed crash window (guard committed, payload
@@ -509,22 +451,11 @@ object ReplayGuard {
     knownIds(spark, guardDir, idCol)
       .join(storeIds.select(idCol).dropDuplicates(idCol), Seq(idCol), "left_anti")
 
-  /** Remove ids from the exact ledger (atomic partitioned rewrite) so a
-    * corrected re-send can be admitted. The bloom is deliberately NOT
-    * rebuilt: it may only over-approximate, so the evicted id simply
-    * takes the probable-hit path and passes the exact check. */
+  /** Remove ids from the exact ledger ([[Store.evict]]) so a corrected
+    * re-send can be admitted. The bloom is deliberately NOT rebuilt: it
+    * may only over-approximate, so the evicted id simply takes the
+    * probable-hit path and passes the exact check. */
   def evict(spark: SparkSession, guardDir: String, victims: DataFrame,
-            idCol: String): Unit = {
-    graft.operators.MergeSink.healInterruptedSwap(spark, idsPath(guardDir))
-    if (!fsOf(spark, guardDir).exists(new Path(idsPath(guardDir)))) return
-    val keep = spark.read.parquet(idsPath(guardDir))
-      .join(victims.select(col(idCol).as("id")), Seq("id"), "left_anti")
-    if (keep.isEmpty)
-      // a fully-evicted ledger must DELETE the dir: an empty
-      // partitioned write emits no schema-bearing files, and every
-      // later ledger read would die on schema inference
-      fsOf(spark, guardDir).delete(new Path(idsPath(guardDir)), true)
-    else graft.operators.MergeSink.writeAtomic(keep, idsPath(guardDir),
-      partitionBy = Seq("bucket"))
-  }
+            idCol: String): Unit =
+    Store.evict(spark, idsPath(guardDir), victims.select(idCol), "id")
 }

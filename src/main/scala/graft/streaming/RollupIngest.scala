@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import graft.operators.IncrementalAgg
+import graft.store.Store
 
 /** Streaming rollup maintenance — [[graft.operators.IncrementalAgg]]
   * wired into the micro-batch loop: an unbounded event stream keeps a
@@ -13,33 +14,16 @@ import graft.operators.IncrementalAgg
   * never re-scanned.
   *
   * State commits are VERSIONED SNAPSHOT DIRECTORIES —
-  * `<stateDir>/v<batchId>/{scalar,regs}` — committed by a single
-  * directory rename, which makes the whole batch (both tables, plus
-  * the applied-batch watermark that IS the version number) one atomic
-  * unit: the poor-man's form of a transactional table format's commit
-  * log. Replay safety follows for free — count/sum are NOT idempotent,
-  * so at-least-once redelivery of a batch must be rejected, and it is:
-  * a batch whose id is ≤ the latest committed version is skipped
-  * (foreachBatch batchIds are monotonic per checkpoint). A crash
-  * before the rename leaves only a staging dir the replay overwrites;
-  * a crash after it leaves a committed state the replayed batch
-  * recognizes. RollupIngestSpec drives all three paths.
+  * `<stateDir>/v<batchId>/{scalar,regs}`, published by
+  * [[graft.store.Store.publishVersion]] — so the whole batch (both
+  * tables, plus the applied-batch watermark that IS the version number)
+  * is one atomic unit. Replay safety follows for free — count/sum are
+  * NOT idempotent, so at-least-once redelivery of a batch must be
+  * rejected, and it is: a batch whose id is ≤ the latest committed
+  * version is skipped (foreachBatch batchIds are monotonic per
+  * checkpoint). RollupIngestSpec drives the replay and crash paths.
   */
 object RollupIngest {
-
-  private def fsOf(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Latest committed (batchId, path), if any. */
-  def latestVersion(spark: SparkSession, stateDir: String): Option[(Long, String)] = {
-    val fs = fsOf(spark, stateDir)
-    val root = new Path(stateDir)
-    if (!fs.exists(root)) None
-    else fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches("v\\d+"))
-      .map(s => (s.getPath.getName.drop(1).toLong, s.getPath.toString))
-      .sortBy(_._1).lastOption
-  }
 
   /** Fold one micro-batch into the store. Returns false when the batch
     * was already applied (replay) and was skipped. foreachBatch-
@@ -52,7 +36,7 @@ object RollupIngest {
                    mixDomainCol: String = "", mixRewardCol: String = "",
                    mixTokenCol: String = ""): Boolean = {
     val spark = batch.sparkSession
-    val latest = latestVersion(spark, stateDir)
+    val latest = Store.latestVersion(spark, stateDir)
     if (latest.exists(_._1 >= batchId)) return false // replayed batch
 
     val batchScalar = IncrementalAgg.scalarState(batch, keys, valueCol)
@@ -154,54 +138,41 @@ object RollupIngest {
       else staleMixtureBatches(spark, stateDir)) ++
       (if (carriedForward(MixPrefix, mixEnabled)) Seq(batchId) else Seq.empty)
 
-    val fs = fsOf(spark, stateDir)
-    val staging = new Path(s"$stateDir/.staging_v$batchId")
-    if (fs.exists(staging)) fs.delete(staging, true) // prior crashed attempt
-    // the staging writes are INDEPENDENT subdirs committed by the ONE
-    // rename below, so they submit concurrently (guide §2.6 — the
-    // appendAdmitted pattern): wall is max(write), not the sum of up to
-    // six small write-job tails per batch. Crash safety is unchanged —
-    // a partial staging dir is deleted and rewritten on retry, and
-    // nothing is visible until the rename. On failure the siblings are
-    // cancelled and drained before rethrowing so no write is in flight
-    // against the staging dir when the error propagates.
+    // the staging writes are INDEPENDENT subdirs published by the ONE
+    // snapshot commit below, so they submit concurrently (guide §2.6 —
+    // the appendAdmitted pattern): wall is max(write), not the sum of up
+    // to six small write-job tails per batch. On failure the siblings
+    // are cancelled and drained before rethrowing so no write is in
+    // flight against the staging dir when the error propagates.
     val stagingWrites: Seq[(String, DataFrame)] =
       Seq("scalar" -> scalar, "regs" -> dist) ++
         hist.map { case (t, df) => s"$HistPrefix$t" -> df } ++
         freq.map { case (t, df) => s"$FreqPrefix$t" -> df } ++
         samp.map { case (t, df) => s"$SampPrefix$t" -> df } ++
         mix.map { case (t, df) => s"$MixPrefix$t" -> df }
-    graft.operators.Concurrently.run(stagingWrites.map { case (sub, df) =>
-      () => df.write.parquet(s"$staging/$sub")
-    })
-    def writeLedger(file: String, ids: Seq[Long]): Unit = if (ids.nonEmpty) {
-      val out = fs.create(new Path(s"$staging/$file"), true)
-      try out.write(ids.mkString("\n").getBytes("UTF-8")) finally out.close()
+    // the commit point: one snapshot publishes every table + the
+    // watermark; keepVersions snapshots stay for readers mid-flight
+    Store.publishVersion(spark, stateDir, batchId, keepVersions) { staging =>
+      graft.operators.Concurrently.run(stagingWrites.map { case (sub, df) =>
+        () => df.write.parquet(s"$staging/$sub")
+      })
+      val fs = Store.fs(spark, stateDir)
+      def writeLedger(file: String, ids: Seq[Long]): Unit = if (ids.nonEmpty) {
+        val out = fs.create(new Path(s"$staging/$file"), true)
+        try out.write(ids.mkString("\n").getBytes("UTF-8")) finally out.close()
+      }
+      writeLedger(SkippedFile, skipped)
+      writeLedger(FreqSkippedFile, freqSkipped)
+      writeLedger(SampSkippedFile, sampSkipped)
+      writeLedger(MixSkippedFile, mixSkipped)
     }
-    writeLedger(SkippedFile, skipped)
-    writeLedger(FreqSkippedFile, freqSkipped)
-    writeLedger(SampSkippedFile, sampSkipped)
-    writeLedger(MixSkippedFile, mixSkipped)
-    // the commit point: one rename publishes both tables + the watermark.
-    // rename reports failure as FALSE (dest exists, parent gone), not an
-    // exception — ignoring it would drop the batch's non-idempotent
-    // counts while the checkpoint advances, so surface it loudly
-    if (!fs.rename(staging, new Path(s"$stateDir/v$batchId")))
-      throw new java.io.IOException(
-        s"rollup commit rename failed: $staging -> $stateDir/v$batchId")
-
-    // retain a couple of snapshots for readers mid-flight, prune the rest
-    val versions = fs.listStatus(new Path(stateDir)).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches("v\\d+"))
-      .sortBy(_.getPath.getName.drop(1).toLong)
-    versions.dropRight(keepVersions).foreach(s => fs.delete(s.getPath, true))
     true
   }
 
   /** The rollup a dashboard reads: finalize the latest snapshot. */
   def currentRollup(spark: SparkSession, stateDir: String, keys: Seq[String],
                     distinctAlias: String): Option[DataFrame] =
-    latestVersion(spark, stateDir).map { case (_, p) =>
+    Store.latestVersion(spark, stateDir).map { case (_, p) =>
       IncrementalAgg.finalizeState(
         spark.read.parquet(s"$p/scalar"),
         spark.read.parquet(s"$p/regs"), keys, distinctAlias)
@@ -225,7 +196,7 @@ object RollupIngest {
     * present. */
   private def priorStateDir(spark: SparkSession, versionPath: String,
                             dirPrefix: String): Option[(String, String)] =
-    fsOf(spark, versionPath).listStatus(new Path(versionPath)).toSeq
+    Store.fs(spark, versionPath).listStatus(new Path(versionPath)).toSeq
       .map(_.getPath.getName).collectFirst {
         case n if n.startsWith(dirPrefix) =>
           (n.drop(dirPrefix.length), s"$versionPath/$n")
@@ -270,8 +241,8 @@ object RollupIngest {
 
   private def readLedger(spark: SparkSession, stateDir: String,
                          file: String): Seq[Long] =
-    latestVersion(spark, stateDir).toSeq.flatMap { case (_, p) =>
-      val fs = fsOf(spark, stateDir)
+    Store.latestVersion(spark, stateDir).toSeq.flatMap { case (_, p) =>
+      val fs = Store.fs(spark, stateDir)
       val f = new Path(s"$p/$file")
       if (!fs.exists(f)) Seq.empty
       else {
@@ -309,7 +280,7 @@ object RollupIngest {
     * sum_reward_ppm, n_docs, tokens), everything ever folded in. None
     * until a batch committed with `mixDomainCol` enabled. */
   def currentMixtureState(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    latestVersion(spark, stateDir).flatMap { case (_, p) =>
+    Store.latestVersion(spark, stateDir).flatMap { case (_, p) =>
       priorStateDir(spark, p, MixPrefix).map { case (_, path) =>
         spark.read.parquet(path)
       }
@@ -335,7 +306,7 @@ object RollupIngest {
     * None until a batch committed with `sampleCol` enabled. Pair with
     * [[staleExemplarBatches]]. */
   def currentExemplars(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    latestVersion(spark, stateDir).flatMap { case (_, p) =>
+    Store.latestVersion(spark, stateDir).flatMap { case (_, p) =>
       priorStateDir(spark, p, SampPrefix).map { case (_, path) =>
         spark.read.parquet(path)
       }
@@ -350,7 +321,7 @@ object RollupIngest {
     * [[staleFrequencyBatches]]. */
   def currentFrequencies(spark: SparkSession, stateDir: String,
                          values: DataFrame, valueCol: String): Option[DataFrame] =
-    latestVersion(spark, stateDir).flatMap { case (_, p) =>
+    Store.latestVersion(spark, stateDir).flatMap { case (_, p) =>
       priorStateDir(spark, p, FreqPrefix).map { case (t, path) =>
         // the read path must enforce the geometry the dir name encodes,
         // exactly like the write path: estimating stored registers with
@@ -379,7 +350,7 @@ object RollupIngest {
   def currentQuantiles(spark: SparkSession, stateDir: String,
                        keys: Seq[String],
                        quantilesPermille: Seq[Int]): Option[DataFrame] =
-    latestVersion(spark, stateDir).flatMap { case (_, p) =>
+    Store.latestVersion(spark, stateDir).flatMap { case (_, p) =>
       priorStateDir(spark, p, HistPrefix).map { case (t, path) =>
         // the committed knob (bucket width) is read from the state
         // itself — a caller cannot misinterpret the buckets at a

@@ -1,11 +1,10 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.llm.{KMeans, Similarity}
+import graft.store.Store
 
 /** Streaming ANN-index maintenance — the vector counterpart of
   * [[CorpusIngest]]: an unbounded stream of embeddings is folded into a
@@ -66,7 +65,7 @@ object VectorIngest {
   // appends. The swap must replace centroids/ AND cells/ as ONE unit
   // (new centroids over old cell assignments would probe the wrong
   // partitions), so it uses a commit-marker protocol rather than two
-  // independent writeAtomic swaps:
+  // independent Store.commit swaps:
   //   1. build complete centroids__new + cells__new trees (old index
   //      stays live and correct throughout);
   //   2. create root/__retrain_commit — the single atomic commit point;
@@ -77,7 +76,7 @@ object VectorIngest {
   // in-progress retrain, and before the marker exists every probe
   // serves the OLD index. Stale __new trees from a crashed attempt are
   // cleared at the start of the next retrainAndSwap. Like
-  // [[compactCells]], retrain assumes ingest is quiesced: a batch
+  // [[Store.compact]], retrain assumes ingest is quiesced: a batch
   // appended to the old cells after the rebuild's read would not be in
   // the new tree.
 
@@ -89,7 +88,7 @@ object VectorIngest {
     * reading either index dir. */
   def healRetrainSwap(spark: SparkSession, root: String): Unit = {
     import org.apache.hadoop.fs.Path
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Store.fs(spark, root)
     if (!fs.exists(markerPath(root))) return
     Seq(s"$root/centroids", cellsPath(root), codebookPath(root),
         qbasePath(root)).foreach { dir =>
@@ -125,8 +124,8 @@ object VectorIngest {
                      kCells: Int = 16, iters: Int = 5, dim: Int = 64): Long = {
     import org.apache.hadoop.fs.Path
     healRetrainSwap(spark, root)
-    graft.operators.MergeSink.healInterruptedSwap(spark, cellsPath(root))
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Store.heal(spark, cellsPath(root))
+    val fs = Store.fs(spark, root)
     val centNew = s"$root/centroids__new"; val cellsNew = cellsPath(root) + "__new"
     val cbNew = codebookPath(root) + "__new"
     val qbNew = qbasePath(root) + "__new"
@@ -171,7 +170,8 @@ object VectorIngest {
   private def centroids(spark: SparkSession, root: String): DataFrame =
     spark.read.parquet(s"$root/centroids")
 
-  private def cellsPath(root: String): String = s"$root/cells"
+  /** The cell store; compact with [[Store.compact]]. */
+  private[graft] def cellsPath(root: String): String = s"$root/cells"
 
   // ── optional PQ-coded cell layout ──────────────────────────────────
   // Raw 64-dim doubles are ~512 B/vector — at billion scale that is
@@ -209,7 +209,7 @@ object VectorIngest {
     * collect (m·ksub rows). None when no codebook was trained. */
   private def loadCodebook(spark: SparkSession,
       root: String): Option[graft.llm.ProductQuantizer.Codebook] =
-    if (!Files.exists(Paths.get(codebookPath(root)))) None
+    if (!Store.exists(spark, codebookPath(root))) None
     else {
       val rows = spark.read.parquet(codebookPath(root)).collect()
       val cents = rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map(_._2
@@ -238,12 +238,11 @@ object VectorIngest {
                    assumeFresh: Boolean = false): Long = {
     val spark = batch.sparkSession
     val path = cellsPath(root)
-    // a compactCells crash mid-swap leaves the store retired as __old,
-    // a retrain crash post-commit leaves it half-swapped; heal BEFORE
-    // the exists probe — an unhealed miss would skip the replay guard
-    // AND create a fresh dir that blocks healing forever
+    // a retrain crash post-commit leaves the index half-swapped; heal
+    // both BEFORE the exists probe — an unhealed miss would skip the
+    // replay guard AND create a fresh dir that blocks healing forever
     healRetrainSwap(spark, root)
-    graft.operators.MergeSink.healInterruptedSwap(spark, path)
+    Store.heal(spark, path)
     val guardDir = guardPath(root)
     if (!ReplayGuard.exists(spark, guardDir)) {
       // 64 buckets, not the 256 default: sidecar/ledger file counts set
@@ -252,7 +251,7 @@ object VectorIngest {
       // the data either way)
       ReplayGuard.bootstrap(spark, guardDir, nBuckets = 64)
       // migrate a pre-guard store: one-time O(index) seed of the ledger
-      if (Files.exists(Paths.get(path)))
+      if (Store.exists(spark, path))
         ReplayGuard.record(
           spark.read.parquet(path).select("vec_id"), "vec_id", guardDir)
     }
@@ -322,14 +321,7 @@ object VectorIngest {
     // two leaves a ledgered-but-unindexed orphan reconcile() can clear,
     // never a duplicate vector. The count rides the guard's aggregate.
     val n = ReplayGuard.record(assigned.select("vec_id"), "vec_id", guardDir)
-    if (n > 0)
-      // repartition by cell before the partitioned write (same reason as
-      // ReplayGuard.record): otherwise every task appends a file into
-      // every cell it holds — tasks x cells tiny files per batch; with
-      // it, at most one file per touched cell. compactCells still owns
-      // long-horizon consolidation.
-      assigned.repartition(col("list_id"))
-        .write.mode(SaveMode.Append).partitionBy("list_id").parquet(path)
+    if (n > 0) Store.append(assigned, path, "list_id")
     n
   }
 
@@ -343,14 +335,12 @@ object VectorIngest {
     * ran — the fail-closed crash window, during which redelivery of
     * those ids is silently dropped). `evict = true` clears them from
     * the ledger so a re-send is admitted. Run from maintenance, like
-    * [[compactCells]]. */
+    * [[Store.compact]]. */
   def reconcile(spark: SparkSession, root: String,
                 evict: Boolean = false): Seq[Long] = {
     healRetrainSwap(spark, root)
-    val store =
-      if (Files.exists(Paths.get(cellsPath(root))))
-        spark.read.parquet(cellsPath(root)).select("vec_id")
-      else {
+    val store = Store.read(spark, cellsPath(root)).map(_.select("vec_id"))
+      .getOrElse {
         import spark.implicits._
         spark.emptyDataset[Long].toDF("vec_id")
       }
@@ -360,37 +350,6 @@ object VectorIngest {
     val orphans = if (evict) graft.llm.Stage(orphans0) else orphans0
     if (evict) ReplayGuard.evict(spark, guardPath(root), orphans, "vec_id")
     orphans.collect().map(_.getLong(0)).sorted.toSeq
-  }
-
-  /** SMALL-FILE COMPACTION for the cell store — every micro-batch
-    * appends a file per touched cell, so a long-running ingest leaves
-    * the same append swamp [[CorpusIngest.compact]] fixes for flat
-    * stores. The cell store is PARTITIONED (list_id is the pruning
-    * key), so the generic flat rewrite would flatten it and silently
-    * destroy partition pruning; this variant rewrites per cell —
-    * repartitioned by list_id so each cell lands in few files — and
-    * swaps with the same heal-safe staging renames. Returns
-    * (filesBefore, filesAfter). */
-  def compactCells(spark: SparkSession, root: String): (Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    val path = cellsPath(root)
-    healRetrainSwap(spark, root)
-    graft.operators.MergeSink.healInterruptedSwap(spark, path)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // nothing indexed yet (maintenance schedule fired before the first
-    // append): a no-op, not a FileNotFoundException
-    if (!fs.exists(new Path(path))) return (0, 0)
-    def countFiles: Int = {
-      val it = fs.listFiles(new Path(path), true)
-      var n = 0
-      while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-      n
-    }
-    val before = countFiles
-    val df = spark.read.parquet(path)
-    graft.operators.MergeSink.writeAtomic(
-      df.repartition(col("list_id")), path, partitionBy = Seq("list_id"))
-    (before, countFiles)
   }
 
   // ── index health / drift observability ─────────────────────────────
@@ -433,7 +392,7 @@ object VectorIngest {
         col("n").as("n_sample"))
 
   /** One-row health report of the live index — the numbers an operator
-    * watches to schedule [[compactCells]] / [[retrainAndSwap]]:
+    * watches to schedule [[Store.compact]] / [[retrainAndSwap]]:
     * trained vs used cell counts, vector total, per-cell min/max/mean,
     * `imbalance_ppm` (max cell over the mean, ppm — 1e6 = perfectly
     * balanced; a hot cell inflates every probe that hits it), coded
@@ -443,17 +402,14 @@ object VectorIngest {
     * index size. */
   def indexStats(spark: SparkSession, root: String): DataFrame = {
     healRetrainSwap(spark, root)
-    graft.operators.MergeSink.healInterruptedSwap(spark, cellsPath(root))
     val nCells = centroids(spark, root).count()
-    val coded = if (Files.exists(Paths.get(codebookPath(root)))) 1L else 0L
+    val coded = if (Store.exists(spark, codebookPath(root))) 1L else 0L
     val quarDir = s"$root/_quarantine"
-    val nQuar = if (Files.exists(Paths.get(quarDir)))
+    val nQuar = if (Store.exists(spark, quarDir))
       spark.read.parquet(quarDir).count() else 0L
-    val perCell =
-      if (Files.exists(Paths.get(cellsPath(root))))
-        spark.read.parquet(cellsPath(root))
-          .groupBy("list_id").agg(count(lit(1)).as("n"))
-      else {
+    val perCell = Store.read(spark, cellsPath(root))
+      .map(_.groupBy("list_id").agg(count(lit(1)).as("n")))
+      .getOrElse {
         import spark.implicits._
         spark.emptyDataset[(Long, Long)].toDF("list_id", "n")
       }
@@ -493,7 +449,7 @@ object VectorIngest {
   def quantizationDrift(spark: SparkSession, root: String, batch: DataFrame,
                         thresholdPpm: Long = 2000000L): DataFrame = {
     healRetrainSwap(spark, root)
-    require(Files.exists(Paths.get(qbasePath(root))),
+    require(Store.exists(spark, qbasePath(root)),
       s"no quantization baseline under $root/qbase — (re)train the " +
         "centroids with this round's trainCentroids/retrainAndSwap first")
     driftFrom(
@@ -536,7 +492,7 @@ object VectorIngest {
     * consumer's. */
   def storedVectors(spark: SparkSession, root: String): DataFrame = {
     healRetrainSwap(spark, root)
-    graft.operators.MergeSink.healInterruptedSwap(spark, cellsPath(root))
+    Store.heal(spark, cellsPath(root))
     spark.read.parquet(cellsPath(root)).select("vec_id", "embedding")
   }
 
@@ -574,7 +530,7 @@ object VectorIngest {
   def annScored(spark: SparkSession, root: String, queries: DataFrame, k: Int,
                 nProbe: Int = 4, allowed: Option[DataFrame] = None): DataFrame = {
     healRetrainSwap(spark, root)
-    graft.operators.MergeSink.healInterruptedSwap(spark, cellsPath(root))
+    Store.heal(spark, cellsPath(root))
     val qs = Similarity.assignToCells(
         queries, centroids(spark, root), "query_id", keep = nProbe)
       .select(col("query_id"), col("embedding").as("q_emb"),
@@ -616,7 +572,7 @@ object VectorIngest {
   def annPq(spark: SparkSession, root: String, queries: DataFrame, k: Int,
             nProbe: Int = 4, shortlist: Int = 50): DataFrame = {
     healRetrainSwap(spark, root)
-    graft.operators.MergeSink.healInterruptedSwap(spark, cellsPath(root))
+    Store.heal(spark, cellsPath(root))
     val cb = loadCodebook(spark, root).getOrElse(throw new IllegalStateException(
       s"no PQ codebook at $root — trainCodebook before annPq"))
     val qs = Similarity.assignToCells(
@@ -685,8 +641,8 @@ object VectorIngest {
   def semanticRejects(spark: SparkSession, root: String, batch: DataFrame,
                       minSimPpm: Long, nProbe: Int = 4): DataFrame = {
     healRetrainSwap(spark, root)
-    graft.operators.MergeSink.healInterruptedSwap(spark, cellsPath(root))
-    if (!Files.exists(Paths.get(cellsPath(root))))
+    Store.heal(spark, cellsPath(root))
+    if (!Store.exists(spark, cellsPath(root)))
       return batch.select(col("vec_id"), col("vec_id").as("dup_of"),
         lit(0L).as("sim_ppm")).limit(0)
     annScored(spark, root, batch, k = 1, nProbe = nProbe)
@@ -732,7 +688,6 @@ object VectorIngest {
     * atomically. Returns the state's row count. */
   def maintainTopK(spark: SparkSession, topkDir: String, queries: DataFrame,
                    newBatch: DataFrame, k: Int): Long = {
-    graft.operators.MergeSink.healInterruptedSwap(spark, topkDir)
     val q = broadcast(queries.select(col("vec_id").as("query_id"),
         col("embedding").as("q_emb"),
         Similarity.norm(col("embedding")).as("q_norm"))
@@ -749,15 +704,12 @@ object VectorIngest {
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= k)
       .select("query_id", "neighbor_id", "sim")
-    val unioned =
-      if (Files.exists(Paths.get(topkDir)))
-        spark.read.parquet(topkDir).select("query_id", "neighbor_id", "sim")
-          .unionByName(fresh)
-      else fresh
+    val unioned = Store.read(spark, topkDir).fold(fresh)(
+      _.select("query_id", "neighbor_id", "sim").unionByName(fresh))
     val merged = unioned.dropDuplicates("query_id", "neighbor_id")
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= k)
-    graft.operators.MergeSink.writeAtomic(merged, topkDir)
+    Store.commit(merged, topkDir)
     spark.read.parquet(topkDir).count()
   }
 
@@ -798,7 +750,7 @@ object VectorIngest {
     // retrainAndSwap records a baseline and checks resume); the direct
     // quantizationDrift call keeps its loud require for explicit use.
     healRetrainSwap(spark, root)
-    if (Files.exists(Paths.get(qbasePath(root))))
+    if (Store.exists(spark, qbasePath(root)))
       quantizationDrift(spark, root, batch, thresholdPpm)
         .coalesce(1).write.mode(SaveMode.Overwrite)
         .parquet(s"$monitorDir/batch_id=$batchId")

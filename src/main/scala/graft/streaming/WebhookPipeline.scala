@@ -6,6 +6,7 @@ import graft.model.{TableDef, TableDefs}
 import graft.operators.{Backfill, Concurrently, Enrichment, MergeOps, MergeSink}
 import graft.sources.StripeEvents
 import graft.sources.StripeEvents._
+import graft.store.Store
 
 /** Pipeline options, mirroring the reference's StripeSyncConfig
   * (types.ts:5-58): `revalidateTables` =
@@ -114,7 +115,7 @@ class WebhookPipeline(tablesDir: String,
       // and downstream readers expect, so an all-empty-batch stream
       // still leaves a readable (empty) ledger
       val ledger = config.eventsLedger && (stats.nonEmpty ||
-        !MergeSink.tableExists(spark, s"$tablesDir/events"))
+        !Store.exists(spark, s"$tablesDir/events"))
       // deliveries the quarantine must land: a null payload or a type
       // the router cannot place
       val suspect = nullPayloads > 0 ||
@@ -332,7 +333,7 @@ class WebhookPipeline(tablesDir: String,
     // Pre- vs post-merge vanished sets are identical: the merge only
     // adds/updates ids that are in the incoming set, and those are
     // excluded from the set-difference by definition.
-    val batch = MergeSink.readStored(events.sparkSession, s"$tablesDir/${tdef.table}") match {
+    val batch = Store.read(events.sparkSession, s"$tablesDir/${tdef.table}") match {
       case Some(existing) =>
         val incomingSubs = projected.select("subscription").distinct()
         val incomingIds = projected.select("id")

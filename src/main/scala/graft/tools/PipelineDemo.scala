@@ -38,11 +38,9 @@ object PipelineDemo {
 
     println(s"== ingested ${fixtures.size} webhook events into $tablesDir")
     TableDefs.active.foreach { t =>
-      val p = s"$tablesDir/${t.table}"
-      val df =
-        if (Files.exists(Paths.get(p))) spark.read.parquet(p)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], t.schema)
+      val df = graft.store.Store.read(spark, s"$tablesDir/${t.table}").getOrElse(
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], t.schema))
       println(f"  ${t.table}%-28s ${df.count()}%4d rows")
       df.createOrReplaceTempView(t.table)
     }

@@ -271,6 +271,19 @@ class BackfillSpec extends SparkSpec {
     assert(distinctParts.size > 1,
       s"fetch ran in ${distinctParts.size} partition(s) — not distributed")
   }
+
+  test("syncDependent heals an interrupted swap of the parent table") {
+    val dir = tmpDir("graft_bf_heal")
+    Backfill.upsertChunk(spark, dir, TableDefs.customers,
+      Seq("""{"id":"cus_1","object":"customer","created":1}"""))
+    // a crash between the swap renames left only customers__old
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(new Path(s"$dir/customers"), new Path(s"$dir/customers__old")))
+    assert(Backfill.syncDependent(spark, dir, TableDefs.paymentMethods,
+      "customers", "customer", new BackfillSpec.ChildFetcher) == 1L)
+    assert(spark.read.parquet(s"$dir/payment_methods").count() == 1L)
+  }
 }
 
 object BackfillSpec {
@@ -291,5 +304,16 @@ object BackfillSpec {
       }
       store.get(id)
     }
+  }
+
+  /** One payment method per parent customer (the dependent scan's
+    * per-parent listing); nothing else. */
+  class ChildFetcher extends Backfill.EntityFetcher {
+    def list(tdef: TableDef, gte: Option[Long], lt: Option[Long]): Iterator[String] =
+      Iterator.empty
+    def retrieve(tdef: TableDef, id: String): Option[String] = None
+    override def listForParent(tdef: TableDef, parentCol: String,
+                               parentId: String): Seq[String] =
+      Seq(s"""{"id":"pm_$parentId","object":"payment_method","customer":"$parentId","type":"card"}""")
   }
 }

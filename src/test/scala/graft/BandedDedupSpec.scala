@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.llm.Dedup
+import graft.store.Store
 import graft.streaming.{BandStore, CorpusIngest}
 
 /** The bucket-pruned banded dedup store: per-batch incremental dedup
@@ -149,7 +150,7 @@ class BandedDedupSpec extends SparkSpec {
     val bandsDir = BandStore.dirOf(sigDir)
     val before = spark.read.parquet(s"$bandsDir/data")
       .orderBy("doc_id", "band").collect().toSeq
-    val (nBefore, nAfter) = BandStore.compact(spark, bandsDir)
+    val (nBefore, nAfter) = Store.compact(spark, BandStore.dataPath(bandsDir))
     assert(nBefore > nAfter, s"expected a file swamp to shrink: $nBefore -> $nAfter")
     val buckets = spark.read.parquet(s"$bandsDir/data")
       .select("bucket").distinct().count()
@@ -158,7 +159,7 @@ class BandedDedupSpec extends SparkSpec {
       .orderBy("doc_id", "band").collect().toSeq == before)
     // the signature store compacts bucket-aware too, and ingest keeps
     // rejecting near-dups off both compacted artifacts
-    val (sBefore, sAfter) = CorpusIngest.compactSigs(spark, sigDir)
+    val (sBefore, sAfter) = Store.compact(spark, sigDir)
     assert(sBefore > sAfter)
     assert(CorpusIngest.processBatch(
       Seq(100L -> (texts.head + " postfix")).toDF("doc_id", "text"),

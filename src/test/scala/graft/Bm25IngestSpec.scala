@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.llm.Corpus
+import graft.store.Store
 import graft.streaming.Bm25Ingest
 
 /** Maintained BM25 state: fold equality against the one-shot ranker,
@@ -45,7 +46,7 @@ class Bm25IngestSpec extends SparkSpec {
     // (compile-time property of serve's signature); the globals snapshot
     // carries the exact corpus totals
     val g = spark.read.parquet(
-      s"${Bm25Ingest.latestVersion(spark, stateDir).get._2}/globals").collect()
+      s"${Store.latestVersion(spark, stateDir).get._2}/globals").collect()
     assert(g.head.getLong(0) == 6L)
   }
 
@@ -182,7 +183,7 @@ class Bm25IngestSpec extends SparkSpec {
     assert(served(stateDir) == oneShot,
       "streamed folds across a restart must serve the one-shot ranking")
     assert(spark.read.parquet(
-      s"${Bm25Ingest.latestVersion(spark, stateDir).get._2}/globals")
+      s"${Store.latestVersion(spark, stateDir).get._2}/globals")
       .head().getLong(0) == 6L, "restart double-counted a file drop")
   }
 
@@ -213,7 +214,7 @@ class Bm25IngestSpec extends SparkSpec {
     val b2 = Seq((7L, "late join arrival with hash terms")).toDF("doc_id", "text")
     assert(Bm25Ingest.processBatch(b2, stateDir, batchId = 2L) == 1L)
     assert(!fs.exists(staging))
-    assert(Bm25Ingest.latestVersion(spark, stateDir).get._1 == 2L)
+    assert(Store.latestVersion(spark, stateDir).get._1 == 2L)
     val full = Corpus.bm25TopK(docs.unionByName(b2), queries, k = 10)
       .orderBy("query_id", "rnk").collect().toSeq
     assert(served(stateDir) == full)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.store.Store
 import graft.streaming.CorpusIngest
 
 /** The streaming ingest-dedup loop, driven batch-by-batch the way
@@ -53,7 +54,7 @@ class CorpusIngestSpec extends SparkSpec {
     texts.zipWithIndex.foreach { case (t, i) => assert(ingest(i.toLong -> t) == 1L) }
     val before = spark.read.parquet(corpusDir)
       .orderBy("doc_id").collect().toSeq
-    val (nBefore, nAfter) = CorpusIngest.compact(spark, corpusDir)
+    val (nBefore, nAfter) = Store.compact(spark, corpusDir)
     assert(nBefore >= 6)        // one-plus file per append batch
     assert(nAfter == 1)         // tiny data → one target file
     val after = spark.read.parquet(corpusDir)
@@ -83,7 +84,7 @@ class CorpusIngestSpec extends SparkSpec {
     assert(spark.read.parquet(sigDir).count() == 1L)
     // compact() heals the same state on its own path
     assert(fs.rename(new Path(corpusDir), new Path(corpusDir + "__old")))
-    CorpusIngest.compact(spark, corpusDir)
+    Store.compact(spark, corpusDir)
     assert(spark.read.parquet(corpusDir).select("doc_id")
       .as[Long].collect().toSeq == Seq(1L))
   }
@@ -335,5 +336,19 @@ class CorpusIngestSpec extends SparkSpec {
     rm(new java.io.File(sampleDir))
     assert(CorpusIngest.rebuildSample(spark, corpusDir, sampleDir, 6) == 6L)
     assert(spark.read.parquet(sampleDir).as[(Long, Long)].collect().toSet == oneShot)
+  }
+
+  test("a file: URI sample store keeps merging across batches") {
+    val root = tmpDir("corpus_smp_uri")
+    val corpusDir = s"$root/docs"; val sigDir = s"$root/sigs"
+    def doc(i: Long) = i -> s"document number $i with uniquely arranged tokens t$i u$i v$i w$i x$i"
+    def ingest(rows: Seq[(Long, String)]): Long =
+      CorpusIngest.processBatch(rows.toDF("doc_id", "text"), corpusDir, sigDir,
+        sampleDir = Some(s"file:$root/sample"), sampleN = 6)
+    assert(ingest((0L until 10L).map(doc)) == 10L)
+    assert(ingest((10L until 25L).map(doc)) == 15L)
+    CorpusIngest.rebuildSample(spark, corpusDir, s"$root/rebuilt", 6)
+    assert(spark.read.parquet(s"file:$root/sample").as[(Long, Long)].collect().toSet ==
+      spark.read.parquet(s"$root/rebuilt").as[(Long, Long)].collect().toSet)
   }
 }

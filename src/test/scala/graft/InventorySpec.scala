@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Contract checks over the query inventory itself — the driver-facing
   * surface that correctness and bench runs key off. */
 class InventorySpec extends SparkSpec {
@@ -29,5 +31,27 @@ class InventorySpec extends SparkSpec {
     // here just assert every oracle is non-blank query text (some open
     // with a parenthesized or recursive CTE form)
     SparkEntry.oracleSql.values.foreach(sql => assert(sql.trim.nonEmpty))
+  }
+
+  test("store protocol lint: no hand-rolled swap, fs helper or java.nio store test outside graft.store") {
+    val banned = Seq("healInterruptedSwap", "writeAtomic", "def fsOf",
+      "countFiles", "Files.exists").map(java.util.regex.Pattern.quote) :+
+      """java\.io\.File\b"""
+    val rx = banned.mkString("(", "|", ")").r
+    val roots = Seq("streaming", "operators", "llm")
+      .map(d => java.nio.file.Paths.get("src/main/scala/graft", d))
+    assert(roots.forall(java.nio.file.Files.isDirectory(_)), s"missing source roots: $roots")
+    val hits = roots.flatMap { r =>
+      val files = java.nio.file.Files.walk(r)
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    }.flatMap { f =>
+      val src = scala.io.Source.fromFile(f.toFile, "UTF-8")
+      try src.getLines().zipWithIndex.collect {
+        case (line, i) if rx.findFirstIn(line).isDefined => s"$f:${i + 1}: ${line.trim}"
+      }.toList
+      finally src.close()
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.store.Store
 import graft.streaming.{CorpusIngest, ReplayGuard, VectorIngest}
 
 /** The scale-safe replay guard: correctness of the bloom + bucketed
@@ -58,7 +59,7 @@ class ReplayGuardSpec extends SparkSpec {
       assert(ReplayGuard.record(ids(i * 10L until i * 10L + 10L), "doc_id", g) == 10)
     }
     val before = ReplayGuard.knownIds(spark, g, "id").as[Long].collect().sorted.toSeq
-    val (nBefore, nAfter) = ReplayGuard.compact(spark, g)
+    val (nBefore, nAfter) = Store.compact(spark, ReplayGuard.idsPath(g))
     // 5 appends over 8 buckets -> well over 8 files before; exactly one
     // per non-empty bucket after
     assert(nBefore > 8, s"expected a pre-compaction file swamp, got $nBefore")
@@ -68,7 +69,7 @@ class ReplayGuardSpec extends SparkSpec {
     assert(ReplayGuard.filterFresh(ids(0L until 60L), "doc_id", g)
       .as[Long].collect().sorted.toSeq == (50L until 60L))
     // idempotent: a second compaction is a no-op in file count
-    assert(ReplayGuard.compact(spark, g)._2 == nAfter)
+    assert(Store.compact(spark, ReplayGuard.idsPath(g))._2 == nAfter)
   }
 
   test("bloom outgrows capacity and rebuilds; lost bloom self-heals from ledger") {
@@ -256,20 +257,5 @@ class ReplayGuardSpec extends SparkSpec {
       spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", prevItems)
       spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", prevBits)
     }
-  }
-
-  test("writeAtomic refuses to publish over an unhealed crash window") {
-    val root = tmpDir("swap-refuse")
-    val path = s"$root/table"
-    // a crash between the swap renames: only __old survives
-    Seq((1L, "only-copy")).toDF("id", "v").write.parquet(path + "__old")
-    val batch = Seq((2L, "batch")).toDF("id", "v")
-    intercept[IllegalStateException] {
-      graft.operators.MergeSink.writeAtomic(batch, path)
-    }
-    // the sole copy survives the refusal, and healing then recovers it
-    graft.operators.MergeSink.healInterruptedSwap(spark, path)
-    assert(spark.read.parquet(path).as[(Long, String)].collect().toSeq ==
-      Seq((1L, "only-copy")))
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.IncrementalAgg
+import graft.store.Store
 import graft.streaming.RollupIngest
 
 /** The streaming rollup store: snapshot-rename commits, replay
@@ -34,10 +35,10 @@ class RollupIngestSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/.staging_v2/scalar"))
-    assert(RollupIngest.latestVersion(spark, dir).map(_._1).contains(1L))
+    assert(Store.latestVersion(spark, dir).map(_._1).contains(1L))
     // the replayed attempt overwrites the leftover and commits
     assert(RollupIngest.processBatch(b(2), dir, keys, "v", "u", 2L))
-    assert(RollupIngest.latestVersion(spark, dir).map(_._1).contains(2L))
+    assert(Store.latestVersion(spark, dir).map(_._1).contains(2L))
 
     val all = b.reduce(_ union _)
     val expected = IncrementalAgg.finalizeState(
@@ -147,7 +148,7 @@ class RollupIngestSpec extends SparkSpec {
     // the READ path enforces the geometry the dir name encodes, like
     // the write path: registers from a different Depth×Width addressed
     // with this build's constants would serve silently-low estimates
-    val (_, vpath) = RollupIngest.latestVersion(spark, dir).get
+    val (_, vpath) = Store.latestVersion(spark, dir).get
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cur = fs.listStatus(new org.apache.hadoop.fs.Path(vpath))

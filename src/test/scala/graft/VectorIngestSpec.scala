@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.llm.Similarity
+import graft.store.Store
 import graft.streaming.VectorIngest
 
 /** The streaming ANN-index loop, driven batch-by-batch the way
@@ -85,7 +86,7 @@ class VectorIngestSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     VectorIngest.trainCentroids(all, root, kCells = 2, iters = 3, dim = 4)
     // empty store: no-op, not FileNotFoundException
-    assert(VectorIngest.compactCells(spark, root) == ((0, 0)))
+    assert(Store.compact(spark, VectorIngest.cellsPath(root)) == ((0, 0)))
     assert(VectorIngest.processBatch(all, root) == 8L)
     // simulate the crash window: cells retired to __old, nothing published
     import org.apache.hadoop.fs.Path
@@ -97,6 +98,15 @@ class VectorIngestSpec extends SparkSpec {
     assert(VectorIngest.processBatch(all, root) == 0L)
     assert(VectorIngest.ann(spark, root, all.filter($"vec_id" === 0L),
       k = 2, nProbe = 2).count() == 2L)
+  }
+
+  test("reconcile on a file: URI root finds no orphans after a crash-free ingest") {
+    val root = "file:" + tmpDir("vindex_uri")
+    val all = (rows(0 until 4, 0) ++ rows(100 until 104, 1))
+      .toDF("vec_id", "embedding")
+    VectorIngest.trainCentroids(all, root, kCells = 2, iters = 3, dim = 4)
+    assert(VectorIngest.processBatch(all, root) == 8L)
+    assert(VectorIngest.reconcile(spark, root).isEmpty)
   }
 
   test("retrainAndSwap: old index until commit, new after; crash windows heal") {
@@ -194,14 +204,8 @@ class VectorIngestSpec extends SparkSpec {
         s"query $q got cross-cluster neighbor $n under nProbe=1")
     }
 
-    // the flat compactor must refuse the partitioned cell store (its
-    // rewrite would flatten list_id and destroy partition pruning)
-    intercept[IllegalArgumentException] {
-      graft.streaming.CorpusIngest.compact(spark, s"$root/cells")
-    }
-
     // compaction: fewer files, identical results, pruning preserved
-    val (nb, na) = VectorIngest.compactCells(spark, root)
+    val (nb, na) = Store.compact(spark, VectorIngest.cellsPath(root))
     assert(na < nb, s"compaction did not shrink the store: $nb -> $na")
     val afterCompact = VectorIngest.ann(spark, root, queries, k = 3, nProbe = 2)
       .as[(Long, Long, Long)].collect().toSet
@@ -294,7 +298,7 @@ class VectorIngestSpec extends SparkSpec {
     val hits = narrow.join(exact, Seq("query_id", "neighbor_id"), "left_semi").count()
     assert(hits >= 8L, s"PQ recall floor: $hits/12 exact pairs recovered")
     // compaction preserves the coded layout and the served answer
-    val (before, after) = VectorIngest.compactCells(spark, root)
+    val (before, after) = Store.compact(spark, VectorIngest.cellsPath(root))
     assert(after <= before)
     assert(spark.read.parquet(s"$root/cells").columns.contains("codes"))
     val reServed = VectorIngest.annPq(spark, root, queries, k = 3,
