@@ -40,36 +40,19 @@ object ProductQuantizer {
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val subDim = dim / m
     // the m sub-quantizers are INDEPENDENT k-means problems over
-    // disjoint column slices — train them concurrently on a bounded
-    // pool (Spark's scheduler interleaves the per-iteration jobs), so
+    // disjoint column slices — train them concurrently, 8 at a time
+    // (Spark's scheduler interleaves the per-iteration jobs), so
     // codebook training wall time is ~one sub-training, not m of them.
     // Deterministic regardless: each subspace's result depends only on
     // its own slice. The input is staged once so the m trainings do
     // not re-run its lineage m times.
     val staged = Stage(emb.select("vec_id", "embedding"))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(m, 8))
-    try {
-      import scala.jdk.CollectionConverters._
-      val tasks: java.util.List[
-          java.util.concurrent.Callable[Seq[(Long, Array[Double])]]] =
-        (0 until m).map { s =>
-          new java.util.concurrent.Callable[Seq[(Long, Array[Double])]] {
-            def call(): Seq[(Long, Array[Double])] = {
-              val sub = staged.select(col("vec_id"),
-                slice(col("embedding"), s * subDim + 1, subDim).as("embedding"))
-              KMeans.train(sub, ksub, iters, subDim)
-            }
-          }
-        }.asJava
-      val books = pool.invokeAll(tasks).asScala.map { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw Option(e.getCause).getOrElse(e)
-        }
-      }.toSeq
-      Codebook(m, ksub, subDim, books)
-    } finally pool.shutdown()
+    val books = graft.operators.Concurrently.run((0 until m).map { s =>
+      () => KMeans.train(staged.select(col("vec_id"),
+        slice(col("embedding"), s * subDim + 1, subDim).as("embedding")),
+        ksub, iters, subDim)
+    }, width = 8)
+    Codebook(m, ksub, subDim, books)
   }
 
   /** Encode every vector as its m nearest-centroid cell ids:

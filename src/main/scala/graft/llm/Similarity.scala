@@ -431,18 +431,6 @@ object Similarity {
       .select("query_id", "neighbor_id", "rnk")
   }
 
-  /** Multi-TABLE LSH ANN — the other recall knob next to multi-probe
-    * ([[lshKnn]] `probeHamming`): L independent tables, candidate =
-    * same bucket in ANY table. Probe count grows linearly (L lookups)
-    * where multi-probe grows combinatorially, at L× index memory —
-    * the classic tradeoff; production systems use both
-    * ([[lshKnnComposite]]). Measured on the sf0.01 embeddings (6
-    * planes, k=10): recall@10 = 0.07 with one table, 0.22 with 4
-    * tables — see AnnRecallSpec. */
-  def lshKnnMultiTable(emb: DataFrame, queries: DataFrame, k: Int,
-                       planes: Int, dim: Int, tables: Int = 4): DataFrame =
-    lshKnnComposite(emb, queries, k, planes, dim, tables, probeHamming = 0)
-
   /** COMPOSED multi-table × multi-probe LSH ANN — both recall knobs in
     * one operator, the configuration production ANN services actually
     * run: L independent tables, each probed at every bucket within
@@ -454,7 +442,11 @@ object Similarity {
     * L·Σ_{i≤h} C(planes,i) probe buckets per query, still exploded on
     * the broadcast QUERY side only — the corpus-side table is scanned
     * once and never replicated, and the candidate join stays an
-    * equi-join on (tbl, bucket). */
+    * equi-join on (tbl, bucket). Tables grow the probe count linearly
+    * (L lookups, at L× index memory) where multi-probe grows it
+    * combinatorially: on the sf0.01 embeddings (6 planes, k=10,
+    * h=0) recall@10 = 0.07 with one table, 0.22 with 4 tables. One
+    * table is [[lshKnn]]. */
   def lshKnnComposite(emb: DataFrame, queries: DataFrame, k: Int,
                       planes: Int, dim: Int, tables: Int = 4,
                       probeHamming: Int = 1): DataFrame =
@@ -534,25 +526,21 @@ object Similarity {
     * cell id becomes the table's partition key, so a query touches
     * nProbe/nLists of the data. Returns (query_id, neighbor_id, rnk). */
   def ivfKnn(emb: DataFrame, queries: DataFrame, k: Int,
-             nLists: Int = 16, nProbe: Int = 4): DataFrame = {
-    val cents = broadcast(emb.filter(col("vec_id") < nLists)
-      .select(col("vec_id").as("list_id"), col("embedding").as("cent"),
-        norm(col("embedding")).as("cent_norm"))
-      .filter(col("cent_norm") > 0))
-    def assign(df: DataFrame, idAs: String, keep: Int) = {
-      val scored = df.select(col("vec_id").as(idAs), col("embedding"),
-          norm(col("embedding")).as("v_norm"))
-        .filter(col("v_norm") > 0)
-        .join(cents, expr("true"))
-        .withColumn("c_sim", dot(col("embedding"), col("cent")) /
-          (col("v_norm") * col("cent_norm")))
-      val w = Window.partitionBy(idAs).orderBy(col("c_sim").desc, col("list_id"))
-      scored.withColumn("c_rnk", row_number().over(w))
-        .filter(col("c_rnk") <= keep)
-        .select(col(idAs), col("embedding"), col("v_norm"), col("list_id"))
-    }
-    val corpus = assign(emb, "neighbor_id", 1)
-    val qs = assign(queries, "query_id", nProbe)
+             nLists: Int = 16, nProbe: Int = 4): DataFrame =
+    ivfSearch(emb, queries, k, nProbe,
+      emb.filter(col("vec_id") < nLists)
+        .select(col("vec_id").as("list_id"), col("embedding").as("cent"),
+          norm(col("embedding")).as("cent_norm"))
+        .filter(col("cent_norm") > 0))
+
+  /** The shared IVF tail: corpus assigned to its nearest cell of
+    * `centDf`, queries to their nProbe nearest, candidates meet in an
+    * equi-join on cell id and rank by exact cosine with a
+    * neighbor-id tie-break. */
+  private def ivfSearch(emb: DataFrame, queries: DataFrame, k: Int,
+                        nProbe: Int, centDf: DataFrame): DataFrame = {
+    val corpus = assignToCells(emb, centDf, "neighbor_id", 1)
+    val qs = assignToCells(queries, centDf, "query_id", nProbe)
       .select(col("query_id"), col("embedding").as("q_emb"),
         col("v_norm").as("q_norm"), col("list_id"))
     val scored = qs.join(
@@ -568,12 +556,6 @@ object Similarity {
       .select("query_id", "neighbor_id", "rnk")
   }
 
-  /** IVF over TRAINED centroids ([[KMeans.train]]) instead of the
-    * seed-free lowest-id picks: cells actually follow the data
-    * distribution, so probe recall per scanned fraction improves — the
-    * production IVF build. Same query shape as [[ivfKnn]]: corpus
-    * assigned to its nearest cell, queries probe their nProbe nearest
-    * cells, candidates meet in an equi-join on cell id. */
   /** Centroid table (list_id, cent array<double>, cent_norm) from
     * [[KMeans.train]]'s driver-side result — the broadcastable form
     * every IVF path assigns against. */
@@ -604,29 +586,15 @@ object Similarity {
       .select(col(idAs), col("embedding"), col("v_norm"), col("list_id"))
   }
 
+  /** IVF over TRAINED centroids ([[KMeans.train]]) instead of the
+    * seed-free lowest-id picks: cells actually follow the data
+    * distribution, so probe recall per scanned fraction improves — the
+    * production IVF build. Same query tail as [[ivfKnn]]. */
   def ivfKnnTrained(emb: DataFrame, queries: DataFrame, k: Int,
                     kCells: Int = 16, nProbe: Int = 4, iters: Int = 5,
-                    dim: Int = 64): DataFrame = {
-    val cents = KMeans.train(emb, kCells, iters, dim)
-    val centDf = centroidTable(emb.sparkSession, cents)
-    def assign(df: DataFrame, idAs: String, keep: Int) =
-      assignToCells(df, centDf, idAs, keep)
-    val corpus = assign(emb, "neighbor_id", 1)
-    val qs = assign(queries, "query_id", nProbe)
-      .select(col("query_id"), col("embedding").as("q_emb"),
-        col("v_norm").as("q_norm"), col("list_id"))
-    val scored = qs.join(
-        corpus.select(col("neighbor_id"), col("embedding").as("c_emb"),
-          col("v_norm").as("c_norm"), col("list_id")),
-        Seq("list_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", dot(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select("query_id", "neighbor_id", "rnk")
-  }
+                    dim: Int = 64): DataFrame =
+    ivfSearch(emb, queries, k, nProbe,
+      centroidTable(emb.sparkSession, KMeans.train(emb, kCells, iters, dim)))
 
   /** ANN top-k via LSH buckets — the scan-once/shuffle-on-bucket scale
     * path. Recall is approximate by construction (queries in sparse
@@ -647,30 +615,8 @@ object Similarity {
     * stays a plain equi-join on bucket and the corpus is never
     * replicated. */
   def lshKnn(emb: DataFrame, queries: DataFrame, k: Int, planes: Int, dim: Int,
-             probeHamming: Int = 0): DataFrame = {
-    val all = lshBuckets(emb, planes, dim)
-    val masks: Seq[Long] = (0 until (1 << planes))
-      .filter(m => java.lang.Integer.bitCount(m) <= probeHamming)
-      .map(_.toLong)
-    val q = broadcast(lshBuckets(queries, planes, dim)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("bucket").as("home_bucket"), norm(col("embedding")).as("q_norm"))
-      .filter(col("q_norm") > 0)
-      .select(col("query_id"), col("q_emb"), col("q_norm"),
-        explode(array(masks.map(m => col("home_bucket").bitwiseXOR(lit(m))): _*))
-          .as("bucket")))
-    val c = all.select(col("vec_id").as("neighbor_id"), col("embedding").as("c_emb"),
-      col("bucket"), norm(col("embedding")).as("c_norm"))
-      .filter(col("c_norm") > 0)
-    val scored = q.join(c, Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", dot(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select("query_id", "neighbor_id", "rnk")
-  }
+             probeHamming: Int = 0): DataFrame =
+    lshKnnComposite(emb, queries, k, planes, dim, tables = 1, probeHamming)
 
   /** kNN LABEL PROBE — the standard embedding-quality eval (linear/kNN
     * probing of representation papers): predict each query vector's

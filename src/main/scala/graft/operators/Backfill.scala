@@ -123,7 +123,7 @@ object Backfill {
     * (stripeSync.ts:664-778; the reference runs them sequentially).
     * Returns per-table synced counts.
     *
-    * `parallelism` > 1 scans entities CONCURRENTLY on a bounded pool —
+    * `parallelism` > 1 scans that many entities CONCURRENTLY —
     * each entity targets its own table, so the per-entity merge chains
     * never conflict (the same independence the webhook pipeline's
     * same-rank merges exploit); the fetcher must tolerate concurrent
@@ -133,34 +133,9 @@ object Backfill {
   def syncAll(spark: SparkSession, tablesDir: String, fetcher: EntityFetcher,
               createdGte: Option[Long] = None,
               parallelism: Int = 1): Map[String, Long] =
-    if (parallelism <= 1)
-      TableDefs.active.map(t =>
-        t.table -> syncEntity(spark, tablesDir, t, fetcher, createdGte)).toMap
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(parallelism, TableDefs.active.size))
-      try {
-        import scala.jdk.CollectionConverters._
-        val tasks: java.util.List[java.util.concurrent.Callable[(String, Long)]] =
-          TableDefs.active.map { t =>
-            new java.util.concurrent.Callable[(String, Long)] {
-              def call(): (String, Long) =
-                t.table -> syncEntity(spark, tablesDir, t, fetcher, createdGte)
-            }
-          }.asJava
-        // unwrap so both paths fail with the fetcher's ORIGINAL exception
-        // class — Future.get wraps in ExecutionException, and a caller
-        // matching on exception type (transient-retry handling upstream)
-        // must not see different types depending on the parallelism knob
-        pool.invokeAll(tasks).asScala.map { f =>
-          try f.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw Option(e.getCause).getOrElse(e)
-          }
-        }.toMap
-      } finally pool.shutdown()
-    }
+    Concurrently.run(TableDefs.active.map(t =>
+      () => t.table -> syncEntity(spark, tablesDir, t, fetcher, createdGte)),
+      width = parallelism).toMap
 
   /** Scheduled-window backfill, the reference's cron routes
     * (routes/sync/daily.ts:12-14, weekly/monthly analogous):
@@ -183,57 +158,34 @@ object Backfill {
     * reference's own day-window guidance (sync-engine README,
     * "Backfilling": split a large backfill into created-date windows):
     * the `windows` (createdGte, createdLt) ranges are FETCHED
-    * concurrently on a bounded pool — paging the remote API is the
-    * long pole of a backfill and each window is an independent cursor —
-    * while every fetched payload funnels through the SAME single-writer
-    * chunked merge pipeline as [[syncEntity]]. Fetch concurrency never
-    * becomes sink concurrency: two concurrent Store.commit swaps on one
-    * table would race their staging renames, and the LWW + merge guard
-    * needs no such risk — an entity that appears in two windows
-    * (updated mid-scan, or overlapping ranges) is collapsed by the
-    * guard exactly like a webhook redelivery. Fetch order across
-    * windows is therefore immaterial to the final table: the row set
-    * equals the sequential scan's (BackfillSpec asserts it). */
+    * concurrently, `parallelism` at a time — paging the remote API is
+    * the long pole of a backfill and each window is an independent
+    * cursor — and each window's payload then merges through the SAME
+    * chunked merge pipeline as [[syncEntity]] under one writer lock. A
+    * window's payload is dropped once merged, so at most `parallelism`
+    * windows are resident on the driver, never the whole backfill
+    * (gathering every window first would make a month-scale backfill a
+    * driver OOM). Fetch concurrency never becomes sink concurrency: two
+    * concurrent Store.commit swaps on one table would race their
+    * staging renames, and the LWW + merge guard needs no such risk — an
+    * entity that appears in two windows (updated mid-scan, or
+    * overlapping ranges) is collapsed by the guard exactly like a
+    * webhook redelivery. Fetch order across windows is therefore
+    * immaterial to the final table: the row set equals the sequential
+    * scan's (BackfillSpec asserts it). */
   def syncWindows(spark: SparkSession, tablesDir: String, tdef: TableDef,
                   fetcher: EntityFetcher, windows: Seq[(Long, Long)],
                   parallelism: Int = 4, chunkSize: Int = 250): Long = {
-    if (windows.isEmpty) return 0L
-    val width = math.max(1, math.min(parallelism, windows.size))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(width)
-    // Windows merge AS THEY COMPLETE (completion service), and a fetcher
-    // may not even START until a buffered-window permit frees up — so
-    // driver-resident payloads are bounded by ~2× parallelism windows,
-    // never by the whole backfill (gathering every window first would
-    // make a month-scale backfill a driver OOM).
-    val permits = new java.util.concurrent.Semaphore(width * 2)
-    val done = new java.util.concurrent.ExecutorCompletionService[Seq[String]](pool)
-    try {
-      windows.foreach { case (gte, lt) =>
-        done.submit(new java.util.concurrent.Callable[Seq[String]] {
-          def call(): Seq[String] = {
-            permits.acquire()
-            fetcher.list(tdef, Some(gte), Some(lt)).toSeq
-          }
-        })
-      }
-      var total = 0L
-      (1 to windows.size).foreach { _ =>
-        // unwrap like syncAll: callers must see the fetcher's original
-        // exception class regardless of the parallelism knob
-        val payloads =
-          try done.take().get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw Option(e.getCause).getOrElse(e)
-          }
-        try
-          total += payloads.grouped(chunkSize)
-            .map(chunk => upsertChunk(spark, tablesDir, tdef, chunk))
-            .sum
-        finally permits.release()
-      }
-      total
-    } finally pool.shutdownNow()
+    // interruptible, so a failed run's waiting windows stop at the lock
+    val writer = new java.util.concurrent.locks.ReentrantLock
+    Concurrently.run(windows.map { case (gte, lt) => () =>
+      val payloads = fetcher.list(tdef, Some(gte), Some(lt)).toSeq
+      writer.lockInterruptibly()
+      try payloads.grouped(chunkSize)
+        .map(chunk => upsertChunk(spark, tablesDir, tdef, chunk))
+        .sum
+      finally writer.unlock()
+    }, width = parallelism).sum
   }
 
   /** S6: point sync — id prefix → TableDef → retrieve → shared pipeline

@@ -2,18 +2,25 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared runner for INDEPENDENT side-effecting Spark actions (staging
-  * writes under one atomic commit, disjoint store appends, the webhook
-  * pipeline's per-table commits): submit on a fresh pool sized to the
-  * task count, await all, and on any failure cancel the siblings and
-  * DRAIN the pool before rethrowing — so no write is still in flight
-  * against the caller's directories when the error propagates (a
-  * streaming retry of the batch must never race a half-dead
-  * predecessor). Tasks are awaited in completion order, so a failure
-  * cancels its siblings as soon as it happens. The ORIGINAL cause is
-  * rethrown, not the pool's ExecutionException wrapper, so callers and
-  * retry logic keep seeing the same exception types the old sequential
-  * writes threw.
+/** The one runner for INDEPENDENT Spark actions (staging writes under
+  * one atomic commit, disjoint store appends, the webhook pipeline's
+  * per-table commits, per-entity backfill scans, per-subspace trainings):
+  * `run(tasks, width)` returns the tasks' results in task order.
+  *
+  * Width: the pool holds `min(width, tasks.size)` threads, so at most
+  * `width` tasks run at once; the default runs every task at once. With
+  * one task, or at width 1, every task runs INLINE on the caller's
+  * thread, in order — no pool, no job tag, and the first failure
+  * propagates as thrown.
+  *
+  * Failure: tasks are awaited in completion order, so a failure is seen
+  * while its siblings still run, not after the ones submitted before it
+  * end. It cancels the siblings and DRAINS the pool before rethrowing —
+  * so no write is still in flight against the caller's directories when
+  * the error propagates (a streaming retry of the batch must never race
+  * a half-dead predecessor). The ORIGINAL cause is rethrown, not the
+  * pool's ExecutionException wrapper, so callers and retry logic see the
+  * same exception types at every width.
   *
   * Interrupting a pool thread does not stop the Spark job it submitted,
   * so every task's jobs carry one job tag per run, with
@@ -25,25 +32,23 @@ import org.apache.spark.sql.SparkSession
   * the run's jobs. */
 private[graft] object Concurrently {
 
-  def run(tasks: Seq[() => Unit]): Unit = {
-    if (tasks.isEmpty) return
-    if (tasks.sizeIs == 1) { tasks.head.apply(); return }
+  def run[A](tasks: Seq[() => A], width: Int = Int.MaxValue): Seq[A] = {
+    val threads = math.min(width, tasks.size)
+    if (threads <= 1) return tasks.map(_.apply())
     val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .map(_.sparkContext)
     val tag = s"graft-concurrently-${java.util.UUID.randomUUID()}"
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     try {
-      val done = new java.util.concurrent.ExecutorCompletionService[Unit](pool)
+      val done = new java.util.concurrent.ExecutorCompletionService[A](pool)
       val futures = tasks.map { t =>
-        done.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
+        done.submit(new java.util.concurrent.Callable[A] {
+          def call(): A = {
             sc.foreach { c => c.addJobTag(tag); c.setInterruptOnCancel(true) }
             t()
           }
         })
       }
-      // in completion order: the first failure is seen while its
-      // siblings still run, not after the ones submitted before it end
       try futures.foreach(_ => done.take().get())
       catch { case t: Throwable =>
         sc.foreach(_.cancelJobsWithTag(tag))
@@ -57,6 +62,7 @@ private[graft] object Concurrently {
           case other => other
         })
       }
+      futures.map(_.get())
     } finally pool.shutdown()
   }
 }

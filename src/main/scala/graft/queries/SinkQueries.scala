@@ -60,14 +60,8 @@ object SinkQueries {
         .filter(_.isDirectory).map(_.getPath.getName)
         .filter(t => !t.startsWith("_") || t == "_quarantine").sorted
     if (tables.isEmpty) Seq.empty
-    else {
-      val frames = new Array[org.apache.spark.sql.DataFrame](tables.size)
-      // Concurrently rethrows the original cause and cancels the
-      // sibling jobs on a failure
-      graft.operators.Concurrently.run(tables.indices.map(i =>
-        () => frames(i) = mk(tables(i))))
-      frames.reduce(_.unionAll(_)).collect().toSeq
-    }
+    else graft.operators.Concurrently.run(tables.map(t => () => mk(t)))
+      .reduce(_.unionAll(_)).collect().toSeq
   }
 
   val all: Seq[Q] = Seq(
@@ -213,10 +207,8 @@ object SinkQueries {
           graft.streaming.BandStore.dataPath(
             graft.streaming.BandStore.dirOf(sigDir)),
           sigDir)
-        val files = new Array[(Int, Int)](stores.size)
-        graft.operators.Concurrently.run(stores.indices.map(i =>
-          () => files(i) = Store.compact(s, stores(i))))
-        val Array((gB, gA), (bB, bA), (sB, sA)) = files
+        val Seq((gB, gA), (bB, bA), (sB, sA)) =
+          graft.operators.Concurrently.run(stores.map(d => () => Store.compact(s, d)))
         val orphans = graft.streaming.CorpusIngest.reconcile(s, corpusDir, sigDir)
         val stored = s.read.parquet(corpusDir).count()
         Seq(("admitted_b1", b1), ("admitted_b2", b2),
@@ -661,19 +653,12 @@ object SinkQueries {
           // — on a job-count-bound entry the overlap is pure wall.
           // assumeFresh: vectorFresh just came through the vector guard,
           // so the ingest's internal probe would re-probe the same rows
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-          try {
-            val fV = pool.submit(new java.util.concurrent.Callable[Long] {
-              def call() = VectorIngest.processBatch(
-                Inference.embedDocuments(vectorFresh, dim = 64, batchSize = 32)
-                  .withColumnRenamed("doc_id", "vec_id"), vroot, batchId = batchId,
-                assumeFresh = true)
-            })
-            val fB = pool.submit(new java.util.concurrent.Callable[Long] {
-              def call() = Bm25Ingest.processBatch(admitted, broot, batchId = batchId)
-            })
-            fV.get(); fB.get()
-          } finally pool.shutdown()
+          graft.operators.Concurrently.run(Seq(
+            () => VectorIngest.processBatch(
+              Inference.embedDocuments(vectorFresh, dim = 64, batchSize = 32)
+                .withColumnRenamed("doc_id", "vec_id"), vroot, batchId = batchId,
+              assumeFresh = true),
+            () => Bm25Ingest.processBatch(admitted, broot, batchId = batchId)))
           ()
         }
         def drop(slice: org.apache.spark.sql.DataFrame, name: String): Unit = {
@@ -740,24 +725,17 @@ object SinkQueries {
         // independent read-only probes, submitted concurrently (the
         // same §2.6 overlap as the per-delivery downstream ingests)
         val qDocs = docs.filter(col("doc_id") < 8)
-        val servePool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        val (annRows, bmRows) = try {
-          val fA = servePool.submit(new java.util.concurrent.Callable[Long] {
-            def call() = VectorIngest.ann(s,
-              vroot, Inference.embedDocuments(qDocs, dim = 64, batchSize = 32)
-                .withColumnRenamed("doc_id", "vec_id"), k = 5, nProbe = 8).count()
-          })
-          val fBm = servePool.submit(new java.util.concurrent.Callable[Long] {
-            def call() = {
-              val qTerms = qDocs.limit(1)
-                .select(explode(slice(split(col("text"), " "), 1, 3)).as("term"))
-                .withColumn("query_id", lit(0L))
-              Bm25Ingest.serve(s, broot, qTerms, k = 5)
-                .map(_.count()).getOrElse(0L)
-            }
-          })
-          (fA.get(), fBm.get())
-        } finally servePool.shutdown()
+        val Seq(annRows, bmRows) = graft.operators.Concurrently.run(Seq(
+          () => VectorIngest.ann(s,
+            vroot, Inference.embedDocuments(qDocs, dim = 64, batchSize = 32)
+              .withColumnRenamed("doc_id", "vec_id"), k = 5, nProbe = 8).count(),
+          () => {
+            val qTerms = qDocs.limit(1)
+              .select(explode(slice(split(col("text"), " "), 1, 3)).as("term"))
+              .withColumn("query_id", lit(0L))
+            Bm25Ingest.serve(s, broot, qTerms, k = 5)
+              .map(_.count()).getOrElse(0L)
+          }))
         val quarEmpty = !Store.exists(s, s"$vroot/_quarantine") &&
           !Store.exists(s, s"${sigDir}_quarantine")
         Seq(("corpus_docs", countsAfterHeal._1),

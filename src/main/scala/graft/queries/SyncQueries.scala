@@ -371,15 +371,10 @@ object SyncQueries {
       // end — wall is now ~max(rebuild) instead of the sum. Result
       // rows are unchanged: the union below reads the same three
       // parquet outputs.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      try {
-        (1L to 3L).map { q =>
-          q -> pool.submit(new java.util.concurrent.Callable[Unit] {
-            def call(): Unit = WebhookPipeline.rebuildAsOf(
-              s, s"$base/store", s"$base/rebuild_$q", mn + (mx - mn) * q / 4)
-          })
-        }.map { case (q, f) => f.get(); q }
-      } finally pool.shutdown()
+      graft.operators.Concurrently.run((1L to 3L).map { q =>
+        () => WebhookPipeline.rebuildAsOf(
+          s, s"$base/store", s"$base/rebuild_$q", mn + (mx - mn) * q / 4)
+      })
       (1L to 3L).map { q =>
         s.read.parquet(s"$base/rebuild_$q/customers").select(
           lit(q).as("sample"), col("id"), col("email"), col("name"),

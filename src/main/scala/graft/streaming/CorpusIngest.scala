@@ -433,10 +433,6 @@ object CorpusIngest {
     // ordering note above — a crash that lands one without the other is
     // fail-open in EITHER direction, so the sequential ordering bought
     // no safety, only a second write-job tail per micro-batch
-    // on failure the sibling is cancelled and drained before the
-    // rethrow (round-15 ADVICE — a streaming retry of the batch must
-    // never race an append still in flight against the same sigDir);
-    // Concurrently.run owns that error path for every staging site
     graft.operators.Concurrently.run(Seq(
       () => BandStore.append(
         Dedup.bandsFromSignatures(sigs, numPerms, bands), bandsDir),

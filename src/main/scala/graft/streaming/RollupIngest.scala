@@ -141,9 +141,7 @@ object RollupIngest {
     // the staging writes are INDEPENDENT subdirs published by the ONE
     // snapshot commit below, so they submit concurrently (guide §2.6 —
     // the appendAdmitted pattern): wall is max(write), not the sum of up
-    // to six small write-job tails per batch. On failure the siblings
-    // are cancelled and drained before rethrowing so no write is in
-    // flight against the staging dir when the error propagates.
+    // to six small write-job tails per batch.
     val stagingWrites: Seq[(String, DataFrame)] =
       Seq("scalar" -> scalar, "regs" -> dist) ++
         hist.map { case (t, df) => s"$HistPrefix$t" -> df } ++

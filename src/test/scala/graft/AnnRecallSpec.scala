@@ -84,8 +84,8 @@ class AnnRecallSpec extends SparkSpec {
   test("lshKnnMultiTable recall@10 beats one table and clears its floor") {
     val single = Similarity.lshKnn(emb, queries, k = K, planes = 6, dim = 64)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
-    val multi = Similarity.lshKnnMultiTable(emb, queries, k = K,
-        planes = 6, dim = 64, tables = 4)
+    val multi = Similarity.lshKnnComposite(emb, queries, k = K,
+        planes = 6, dim = 64, tables = 4, probeHamming = 0)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
     val rs = recallAtK(single); val rm = recallAtK(multi)
     info(f"lshKnn 1 table recall@10 = $rs%.3f, 4 tables = $rm%.3f")
@@ -99,8 +99,8 @@ class AnnRecallSpec extends SparkSpec {
       recallAtK(df.select("query_id", "neighbor_id").as[(Long, Long)].collect())
     val rc = rec(Similarity.lshKnnComposite(emb, queries, k = K,
       planes = 6, dim = 64, tables = L, probeHamming = h))
-    val rt = rec(Similarity.lshKnnMultiTable(emb, queries, k = K,
-      planes = 6, dim = 64, tables = L))
+    val rt = rec(Similarity.lshKnnComposite(emb, queries, k = K,
+      planes = 6, dim = 64, tables = L, probeHamming = 0))
     val rp = rec(Similarity.lshKnn(emb, queries, k = K, planes = 6, dim = 64,
       probeHamming = h))
     info(f"composite L=$L h=$h recall@10 = $rc%.3f (tables-only $rt%.3f, probe-only $rp%.3f)")

@@ -96,15 +96,20 @@ class BackfillSpec extends SparkSpec {
 
   test("syncWindows: concurrent created-range windows equal the sequential scan") {
     // 40 customers created across [0, 400); the fetcher honors both
-    // range bounds and records which threads called it
+    // range bounds, records which threads called it, and holds each call
+    // 200 ms so the peak of calls in flight at once shows the fetch width
     val docs = (0 until 40).map { i =>
       (s"""{"id":"cus_w$i","object":"customer","email":"w$i@x.y","created":${i * 10}}""",
         i * 10L)
     }
     val threads = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val inFlight = new java.util.concurrent.atomic.AtomicInteger()
+    val peak = new java.util.concurrent.atomic.AtomicInteger()
     val ranged = new Backfill.EntityFetcher {
       def list(tdef: TableDef, gte: Option[Long], lt: Option[Long]): Iterator[String] = {
         threads.add(Thread.currentThread().getName)
+        peak.accumulateAndGet(inFlight.incrementAndGet(), math.max)
+        try Thread.sleep(200) finally inFlight.decrementAndGet()
         docs.iterator
           .filter(_._1.contains(s""""object":"${tdef.stripeObject}""""))
           .filter(d => gte.forall(d._2 >= _) && lt.forall(d._2 < _))
@@ -115,23 +120,37 @@ class BackfillSpec extends SparkSpec {
     val seqDir = tmpDir("graft_bfw_s"); val parDir = tmpDir("graft_bfw_p")
     val nSeq = Backfill.syncEntity(spark, seqDir, TableDefs.customers, ranged)
     val windows = Seq((0L, 100L), (100L, 200L), (200L, 300L), (300L, 400L))
+    peak.set(0)
     val nPar = Backfill.syncWindows(spark, parDir, TableDefs.customers, ranged,
       windows, parallelism = 4, chunkSize = 7)
     assert(nPar == nSeq && nPar == 40L)
     assert(threads.size > 1, "windows must actually fetch concurrently")
+    assert(peak.get <= 4 && peak.get > 1, s"peak ${peak.get} fetches at once")
     val seqRows = spark.read.parquet(s"$seqDir/customers")
       .select("id", "email").as[(String, String)].collect().toSet
     val parRows = spark.read.parquet(s"$parDir/customers")
       .select("id", "email").as[(String, String)].collect().toSet
     assert(parRows == seqRows)
 
+    // more windows than the width: at most `parallelism` fetch at once
+    val narrowDir = tmpDir("graft_bfw_n")
+    peak.set(0)
+    val nNarrow = Backfill.syncWindows(spark, narrowDir, TableDefs.customers, ranged,
+      (0L until 400L by 50L).map(g => (g, g + 50L)), parallelism = 3)
+    assert(nNarrow == 40L)
+    assert(peak.get <= 3 && peak.get > 1, s"peak ${peak.get} fetches at once")
+    assert(spark.read.parquet(s"$narrowDir/customers")
+      .select("id", "email").as[(String, String)].collect().toSet == seqRows)
+
     // OVERLAPPING windows: every doc in [100, 300) is fetched twice; the
     // LWW + merge guard collapses the duplicates — the table's row set
     // is unchanged (the count metric honestly reports payloads processed)
     val ovDir = tmpDir("graft_bfw_o")
+    peak.set(0)
     val nOv = Backfill.syncWindows(spark, ovDir, TableDefs.customers, ranged,
       Seq((0L, 300L), (100L, 400L)), parallelism = 2)
     assert(nOv == 60L) // 30 + 30 payloads, [100,300) double-fetched
+    assert(peak.get <= 2 && peak.get > 1, s"peak ${peak.get} fetches at once")
     assert(spark.read.parquet(s"$ovDir/customers")
       .select("id", "email").as[(String, String)].collect().toSet == seqRows)
   }
@@ -153,6 +172,25 @@ class BackfillSpec extends SparkSpec {
     for (t <- Seq("charges", "invoices", "customers"))
       assert(spark.read.parquet(s"$parDir/$t").select("id").as[String].collect().toSet ==
         spark.read.parquet(s"$seqDir/$t").select("id").as[String].collect().toSet)
+  }
+
+  test("a failed parallel syncAll rethrows the first failure without waiting out its siblings") {
+    // the first active table's scan hangs; the second fails at once
+    val hang = TableDefs.active(0); val fail = TableDefs.active(1)
+    val failing = new Backfill.EntityFetcher {
+      def list(tdef: TableDef, gte: Option[Long], lt: Option[Long]): Iterator[String] = {
+        if (tdef == hang) Thread.sleep(60000)
+        if (tdef == fail) throw new IllegalStateException("list failed")
+        Iterator.empty
+      }
+      def retrieve(tdef: TableDef, id: String): Option[String] = None
+    }
+    val calledAt = System.currentTimeMillis()
+    intercept[IllegalStateException] {
+      Backfill.syncAll(spark, tmpDir("graft_bf_fail"), failing, parallelism = 4)
+    }
+    val took = System.currentTimeMillis() - calledAt
+    assert(took < 30000, s"syncAll took $took ms: it waited out the hung scan")
   }
 
   test("RetryingFetcher retries transient failures with exponential backoff") {

@@ -1,13 +1,60 @@
 package graft
 
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import graft.operators.Concurrently
 
-/** The shared concurrent runner's failure path: a failed task must
-  * stop its siblings' Spark jobs, not just their pool threads. */
+/** The shared concurrent runner: results in task order, at most `width`
+  * tasks at once, inline at width 1, and a failed task stops its
+  * siblings' Spark jobs, not just their pool threads. */
 class ConcurrentlySpec extends SparkSpec {
+
+  test("results come back in task order when tasks finish in reverse order") {
+    // task i may finish only after task i+1 has: the last task ends first
+    val finished = (0 to 4).map(_ => new CountDownLatch(1))
+    finished(4).countDown()
+    val order = new ConcurrentLinkedQueue[Int]()
+    val out = Concurrently.run((0 until 4).map { i =>
+      () => {
+        if (!finished(i + 1).await(30, TimeUnit.SECONDS))
+          throw new AssertionError(s"task ${i + 1} never finished")
+        order.add(i); finished(i).countDown(); i * 10
+      }
+    })
+    assert(order.asScala.toSeq == Seq(3, 2, 1, 0))
+    assert(out == Seq(0, 10, 20, 30))
+  }
+
+  test("a width-2 run never has more than 2 tasks running at once") {
+    // each task waits (bounded) for all four to be running: an unbounded
+    // pool reaches 4 at once, a width-2 one holds two for the timeout
+    val running = new AtomicInteger(); val peak = new AtomicInteger()
+    val arrived = new CountDownLatch(4)
+    val out = Concurrently.run((0 until 4).map { i =>
+      () => {
+        peak.accumulateAndGet(running.incrementAndGet(), math.max)
+        arrived.countDown()
+        arrived.await(1, TimeUnit.SECONDS)
+        running.decrementAndGet(); i
+      }
+    }, width = 2)
+    assert(out == Seq(0, 1, 2, 3))
+    assert(peak.get == 2, s"peak ${peak.get} tasks ran at once")
+  }
+
+  test("at width 1 every task runs inline on the caller's thread, in order") {
+    val caller = Thread.currentThread()
+    val seen = new ConcurrentLinkedQueue[(Int, Thread)]()
+    val out = Concurrently.run((0 until 4).map { i =>
+      () => { seen.add(i -> Thread.currentThread()); i }
+    }, width = 1)
+    assert(out == Seq(0, 1, 2, 3))
+    assert(seen.asScala.toSeq == (0 until 4).map(_ -> caller))
+  }
 
   test("a failed run cancels its siblings' running Spark jobs before returning") {
     val sc = spark.sparkContext
@@ -37,7 +84,9 @@ class ConcurrentlySpec extends SparkSpec {
             if (!started.await(60, TimeUnit.SECONDS))
               throw new AssertionError("sibling job never started")
             throw new IllegalStateException("boom")
-          }))
+          },
+          () => ()), // queued behind the width until a slot frees
+          width = 2)
       }
       val returnedAt = System.currentTimeMillis()
       assert(err.getMessage == "boom", "the original cause is rethrown")

@@ -33,25 +33,39 @@ class InventorySpec extends SparkSpec {
     SparkEntry.oracleSql.values.foreach(sql => assert(sql.trim.nonEmpty))
   }
 
-  test("store protocol lint: no hand-rolled swap, fs helper or java.nio store test outside graft.store") {
-    val banned = Seq("healInterruptedSwap", "writeAtomic", "def fsOf",
-      "countFiles", "Files.exists").map(java.util.regex.Pattern.quote) :+
-      """java\.io\.File\b"""
-    val rx = banned.mkString("(", "|", ")").r
-    val roots = Seq("streaming", "operators", "llm")
-      .map(d => java.nio.file.Paths.get("src/main/scala/graft", d))
-    assert(roots.forall(java.nio.file.Files.isDirectory(_)), s"missing source roots: $roots")
-    val hits = roots.flatMap { r =>
+  /** `file:line: text` of every line matching `rx` in the `.scala`
+    * files under `roots` (paths relative to `src/main/scala/graft`),
+    * except the files named in `allowed` (same relative form). */
+  private def lintHits(roots: Seq[String], rx: scala.util.matching.Regex,
+                       allowed: Set[String] = Set.empty): Seq[String] = {
+    val base = java.nio.file.Paths.get("src/main/scala/graft")
+    val dirs = roots.map(base.resolve(_).normalize())
+    assert(dirs.forall(java.nio.file.Files.isDirectory(_)), s"missing source roots: $dirs")
+    dirs.flatMap { r =>
       val files = java.nio.file.Files.walk(r)
       try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally files.close()
-    }.flatMap { f =>
+    }.filterNot(f => allowed(base.relativize(f).toString)).flatMap { f =>
       val src = scala.io.Source.fromFile(f.toFile, "UTF-8")
       try src.getLines().zipWithIndex.collect {
         case (line, i) if rx.findFirstIn(line).isDefined => s"$f:${i + 1}: ${line.trim}"
       }.toList
       finally src.close()
     }
+  }
+
+  test("store protocol lint: no hand-rolled swap, fs helper or java.nio store test outside graft.store") {
+    val banned = Seq("healInterruptedSwap", "writeAtomic", "def fsOf",
+      "countFiles", "Files.exists").map(java.util.regex.Pattern.quote) :+
+      """java\.io\.File\b"""
+    val hits = lintHits(Seq("streaming", "operators", "llm"), banned.mkString("(", "|", ")").r)
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("concurrency lint: no thread pool outside Concurrently and Bench") {
+    val banned = Seq("newFixedThreadPool", "invokeAll", "ExecutorCompletionService", "Semaphore")
+    val hits = lintHits(Seq("."), banned.mkString("(", "|", ")").r,
+      allowed = Set("operators/Concurrently.scala", "Bench.scala"))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }
