@@ -272,11 +272,4 @@ object Clusters {
       .join(l.select(col("id").as("doc_id")), Seq("doc_id"), "left_anti")
     updatedOld.unionByName(newIds)
   }
-
-  /** Per-cluster summary: representative (= cluster_id, the min id),
-    * cluster size. */
-  def clusterSummary(components: DataFrame): DataFrame =
-    components.groupBy("cluster_id")
-      .agg(count(lit(1)).as("n_members"))
-      .select(col("cluster_id").as("rep_id"), col("n_members"))
 }

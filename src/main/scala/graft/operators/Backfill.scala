@@ -53,8 +53,8 @@ object Backfill {
                     parentTable: String, fkCol: String, fetcher: EntityFetcher,
                     width: Int = 10): Long = {
     import spark.implicits._
-    // through Store: a parent table left as `customers__old` by an
-    // interrupted swap is healed first — taken for absent, the scan
+    // through Store: a parent table left only in its retired copy by
+    // an interrupted swap is healed first — taken for absent, the scan
     // would sync no children and report success
     val parents = Store.read(spark, s"$tablesDir/$parentTable") match {
       case Some(stored) => stored

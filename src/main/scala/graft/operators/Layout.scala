@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.QuantileRank
+import graft.store.Store
 
 /** Multi-column clustered (Z-order) parquet layout — the second half of
   * the storage-access-path story started by [[Bucketing]].
@@ -108,16 +110,14 @@ object Layout {
   // ---------------------------------------------------------------------
 
   private def manifestPath(root: String, partDir: String) =
-    new org.apache.hadoop.fs.Path(s"$root/_graft_layout/$partDir")
+    new Path(s"$root/_graft_layout/$partDir")
 
-  private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                        dir: org.apache.hadoop.fs.Path): Seq[String] =
+  private def dataFiles(fs: FileSystem, dir: Path): Seq[String] =
     fs.listStatus(dir).iterator
       .filter(_.isFile).map(_.getPath.getName)
       .filter(n => !n.startsWith("_") && !n.startsWith(".")).toSeq
 
-  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-                           p: org.apache.hadoop.fs.Path): Set[String] =
+  private def readManifest(fs: FileSystem, p: Path): Set[String] =
     if (!fs.exists(p)) Set.empty
     else {
       val in = fs.open(p)
@@ -125,10 +125,8 @@ object Layout {
       finally in.close()
     }
 
-  private def writeManifest(spark: org.apache.spark.sql.SparkSession,
-                            p: org.apache.hadoop.fs.Path,
-                            files: Seq[String]): Unit =
-    graft.store.Store.writeMeta(spark, p.toString)(
+  private def writeManifest(spark: SparkSession, p: Path, files: Seq[String]): Unit =
+    Store.writeMeta(spark, p.toString)(
       _.write(files.sorted.mkString("\n").getBytes("UTF-8")))
 
   /** Initial clustered layout of a Hive-partitioned table: ONE write
@@ -155,9 +153,9 @@ object Layout {
       .sortWithinPartitions(partCol, "__z")
       .drop("__f", "__z")
       .write.mode("overwrite").partitionBy(partCol).parquet(root)
-    val fs = graft.store.Store.fs(df.sparkSession, root)
-    partitionDirs(fs, root).foreach { pd =>
-      writeManifest(df.sparkSession, manifestPath(root, pd.getName), dataFiles(fs, pd))
+    val fs = Store.fs(df.sparkSession, root)
+    partitionDirs(df.sparkSession, root).foreach { pd =>
+      writeManifest(df.sparkSession, manifestPath(root, pd), dataFiles(fs, new Path(root, pd)))
     }
   }
 
@@ -167,48 +165,34 @@ object Layout {
   def appendRaw(df: DataFrame, root: String, partCol: String): Unit =
     df.write.mode("append").partitionBy(partCol).parquet(root)
 
-  private def partitionDirs(fs: org.apache.hadoop.fs.FileSystem, root: String) =
-    fs.listStatus(new org.apache.hadoop.fs.Path(root)).iterator
-      .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-      .map(_.getPath).toSeq
+  /** The `col=value` directory names under `root`. */
+  private def partitionDirs(spark: SparkSession, root: String): Seq[String] =
+    Store.subdirs(spark, root).filter(_.contains("="))
+
+  /** Thrown from a partition's stage step when files landed in it after
+    * its listing; [[maintain]] counts the partition as skipped. */
+  private final class AppendedDuringMaintain extends RuntimeException
 
   /** Incremental Z-order maintenance: re-cluster ONLY partitions whose
     * fraction of non-manifest (appended-since-last-cluster) files
     * exceeds `dirtyThreshold`; clean partitions are never opened, let
     * alone rewritten. Each dirty partition is compacted + re-sorted into
-    * `filesPerPartition` z-clustered files and committed by rename swap
-    * staged under DOT-prefixed dirs (`.graft_stage`/`.graft_old`) —
-    * hidden names, because a sibling `p=1__old` would be parsed by
-    * Spark's partition discovery as a phantom partition and double-serve
-    * the data in the crash window. Interrupted swaps are healed at the
-    * start of the next run; a crash between swap and manifest write just
-    * makes the partition look fully dirty, so the next tick re-clusters
-    * it again — idempotent, never lossy. Returns
-    * (reclustered, skipped). */
-  def maintain(spark: org.apache.spark.sql.SparkSession, root: String,
+    * `filesPerPartition` z-clustered files and committed by
+    * [[Store.swap]] on its own directory, whose hidden staged and
+    * retired names are never discovered as partitions. A crash between
+    * swap and manifest write just makes the partition look fully dirty,
+    * so the next tick re-clusters it again — idempotent, never lossy.
+    * Returns (reclustered, skipped). */
+  def maintain(spark: SparkSession, root: String,
                cols: Seq[String], bits: Int = 8, filesPerPartition: Int = 16,
                dirtyThreshold: Double = 0.2): (Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    val fs = graft.store.Store.fs(spark, root)
-    val stageRoot = new Path(root, ".graft_stage")
-    val oldRoot = new Path(root, ".graft_old")
-    // heal: a crash between the two swap renames leaves the live dir
-    // missing and the retired copy under .graft_old — restore it
-    if (fs.exists(oldRoot)) {
-      fs.listStatus(oldRoot).foreach { st =>
-        val live = new Path(root, st.getPath.getName)
-        if (!fs.exists(live)) {
-          if (!fs.rename(st.getPath, live))
-            throw new java.io.IOException(s"layout heal failed: ${st.getPath}")
-        } else fs.delete(st.getPath, true) // completed swap's leftover
-      }
-    }
-    if (fs.exists(stageRoot)) fs.delete(stageRoot, true) // stale stage
+    val fs = Store.fs(spark, root)
     var re = 0
     var skipped = 0
-    partitionDirs(fs, root).foreach { pd =>
+    partitionDirs(spark, root).foreach { name =>
+      val pd = new Path(root, name)
       val files = dataFiles(fs, pd)
-      val clustered = readManifest(fs, manifestPath(root, pd.getName))
+      val clustered = readManifest(fs, manifestPath(root, name))
       val fresh = files.count(f => !clustered.contains(f))
       if (files.isEmpty || fresh.toDouble / files.size <= dirtyThreshold) skipped += 1
       else {
@@ -216,45 +200,35 @@ object Layout {
           filesPerPartition <= (1 << (cols.size * bits)),
           s"filesPerPartition must be a power of two <= 2^(n*bits)")
         val part = spark.read.parquet(pd.toString)
-        val stage = new Path(stageRoot, pd.getName)
         // file id = top log2(n) bits of z, range-partitioned on that id
         // alone: every row of one file id lands in one task, so file
         // min/max ranges align EXACTLY to curve prefixes — a sampled
         // range on raw z instead lets files straddle prefix boundaries
         // and each straddle costs one extra file per pruned predicate
         val shift = cols.size * bits - Integer.numberOfTrailingZeros(filesPerPartition)
-        part.withColumn("__z", zValueRanked(part, cols, bits))
-          .withColumn("__f", shiftrightunsigned(col("__z"), shift))
-          .repartitionByRange(filesPerPartition, col("__f"))
-          .sortWithinPartitions("__z")
-          .drop("__f", "__z")
-          .write.parquet(stage.toString)
-        // CONCURRENT-APPEND GUARD: a file landed by appendRaw after the
-        // read's listing snapshot would be swept into .graft_old with
-        // the rest of the partition and deleted — permanent row loss.
-        // Re-list immediately before the retire: if anything appeared,
-        // skip this partition (it is now dirtier; the next tick redoes
-        // it). Like every compactor here, STRICT safety still requires
-        // quiescing appends to the partitions being maintained — this
-        // check closes the window from job-length to milliseconds.
-        if (dataFiles(fs, pd).toSet != files.toSet) {
-          fs.delete(stage, true)
-          skipped += 1
-        } else {
-        fs.mkdirs(oldRoot)
-        val old = new Path(oldRoot, pd.getName)
-        if (fs.exists(old)) fs.delete(old, true)
-        if (!fs.rename(pd, old))
-          throw new java.io.IOException(s"layout retire failed: $pd")
-        if (!fs.rename(stage, pd))
-          throw new java.io.IOException(s"layout publish failed: $pd")
-        fs.delete(old, true)
-        writeManifest(spark, manifestPath(root, pd.getName), dataFiles(fs, pd))
-        re += 1
-        }
+        try {
+          Store.swap(spark, pd.toString) { stage =>
+            part.withColumn("__z", zValueRanked(part, cols, bits))
+              .withColumn("__f", shiftrightunsigned(col("__z"), shift))
+              .repartitionByRange(filesPerPartition, col("__f"))
+              .sortWithinPartitions("__z")
+              .drop("__f", "__z")
+              .write.parquet(stage)
+            // CONCURRENT-APPEND GUARD: a file landed by appendRaw after
+            // the read's listing snapshot would be retired with the rest
+            // of the partition and deleted — permanent row loss. Re-list
+            // as the last step before the retire: if anything appeared,
+            // skip this partition (it is now dirtier; the next tick redoes
+            // it). Like every compactor here, STRICT safety still requires
+            // quiescing appends to the partitions being maintained — this
+            // check closes the window from job-length to milliseconds.
+            if (dataFiles(fs, pd).toSet != files.toSet) throw new AppendedDuringMaintain
+          }
+          writeManifest(spark, manifestPath(root, name), dataFiles(fs, pd))
+          re += 1
+        } catch { case _: AppendedDuringMaintain => skipped += 1 }
       }
     }
-    if (fs.exists(stageRoot)) fs.delete(stageRoot, true)
     (re, skipped)
   }
 }

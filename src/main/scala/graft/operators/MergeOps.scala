@@ -203,13 +203,4 @@ object MergeOps {
       scd2HistoryFlagged(replayed, keys, tsCol, tieCols),
       allowMissingColumns = true)
   }
-
-  /** Child-table normalization (reference A4/A5/A6): explode a nested
-    * array column into child rows, tagging the parent key — the
-    * subscription_items / checkout_session_line_items pattern
-    * (stripeSync.ts:1484-1557, migration 0014:1-36).
-    */
-  def explodeChild(parent: DataFrame, parentKey: String, arrCol: String,
-                   childAlias: String): DataFrame =
-    parent.select(col(parentKey), explode(col(arrCol)).as(childAlias))
 }

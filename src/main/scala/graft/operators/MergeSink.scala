@@ -278,16 +278,6 @@ object MergeSink {
        |  VALUES (${allCols.map(c => s"s.${q(c)}").mkString(", ")})""".stripMargin
   }
 
-  /** Plain upsert (S8, postgres.ts:133-157): no timestamp guard. */
-  def upsertSql(tdef: TableDef, schema: String = "stripe"): String = {
-    val cols = tdef.columns.map(c => s""""$c"""")
-    val updates = tdef.columns.filterNot(_ == tdef.key)
-      .map(c => s""""$c" = EXCLUDED."$c"""").mkString(", ")
-    s"""INSERT INTO "$schema"."${tdef.table}" (${cols.mkString(", ")})
-       |VALUES %s
-       |ON CONFLICT ("${tdef.key}") DO UPDATE SET $updates""".stripMargin
-  }
-
   /** Idempotent DDL bootstrap (S12 migration runner analog,
     * migrate.ts:15-66): CREATE TABLE IF NOT EXISTS per TableDef. */
   def createTableSql(tdef: TableDef, schema: String = "stripe"): String = {

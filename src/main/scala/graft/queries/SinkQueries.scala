@@ -47,18 +47,16 @@ object SinkQueries {
     * into single-threaded union analysis measurably regressed qs6 —
     * then union the frames and collect once, so ~21 scheduler
     * round-trips become one job whose tiny scan stages run
-    * concurrently. `_event_guard` is ledger/bloom state, not a parquet
-    * table — only `_quarantine` among the underscore dirs is readable. */
+    * concurrently. The tables are [[Store.subdirs]] — never a swap's
+    * hidden staged or retired copy — plus `_quarantine`: `_event_guard`
+    * is ledger/bloom state, not a parquet table, so `_quarantine` is the
+    * one readable underscore dir. */
   private def unionOverTables(spark: org.apache.spark.sql.SparkSession,
                               dir: String)(
       mk: String => org.apache.spark.sql.DataFrame)
       : Seq[org.apache.spark.sql.Row] = {
-    val fs = Store.fs(spark, dir)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val tables =
-      (if (fs.exists(root)) fs.listStatus(root).toSeq else Nil)
-        .filter(_.isDirectory).map(_.getPath.getName)
-        .filter(t => !t.startsWith("_") || t == "_quarantine").sorted
+    val tables = (Store.subdirs(spark, dir) ++
+      Seq("_quarantine").filter(q => Store.exists(spark, s"$dir/$q"))).sorted
     if (tables.isEmpty) Seq.empty
     else graft.operators.Concurrently.run(tables.map(t => () => mk(t)))
       .reduce(_.unionAll(_)).collect().toSeq
@@ -686,7 +684,7 @@ object SinkQueries {
         // corpus≠bm25).
         def storeStats(): (Long, Long, Long, Long, Long) = {
           val u = ids(corpusDir, "doc_id").withColumn("m", lit(1L))
-            .unionByName(ids(s"$vroot/cells", "vec_id").withColumn("m", lit(2L)))
+            .unionByName(ids(VectorIngest.cellsPath(vroot), "vec_id").withColumn("m", lit(2L)))
             .unionByName(ids(s"$broot/doclen", "doc_id").withColumn("m", lit(4L)))
           val r = u.groupBy("doc_id").agg(sum("m").as("m"))
             .agg(
@@ -760,7 +758,7 @@ object SinkQueries {
     // replay-idempotent (re-folding a batch double-counts), so state
     // and batch ledger commit in ONE atomic root swap — this entry
     // proves exactly-once across all three failure modes: a PLANTED
-    // mid-swap crash (store root renamed to __old, the interrupted-swap
+    // mid-swap crash (store root at its retired name, the interrupted-swap
     // window) healed by the next ingest; a REDELIVERED batch dropped by
     // the ledger with state content untouched; and the folded state
     // fitting BIT-IDENTICALLY to a one-shot fit over every comparison
@@ -800,11 +798,12 @@ object SinkQueries {
             .as[(Long, Long, Long, Long)].collect().toSet
 
         PreferenceStore.ingest(batch(0), base, 0L)
-        // PLANT the interrupted-swap crash window: live root retired to
-        // __old, publish never happened — exactly what a kill between
+        // PLANT the interrupted-swap crash window: live root retired,
+        // publish never happened — exactly what a kill between
         // Store.swap's two renames leaves behind
-        val rootF = new java.io.File(s"$base/bt_store")
-        val planted = rootF.renameTo(new java.io.File(s"$base/bt_store__old"))
+        val store = s"$base/bt_store"
+        val planted = Store.fs(s, store).rename(new org.apache.hadoop.fs.Path(store),
+          new org.apache.hadoop.fs.Path(Store.retired(store)))
         PreferenceStore.ingest(batch(1), base, 1L) // must heal, then fold
         val (pairsAfterHeal, idsAfterHeal) = PreferenceStore.status(s, base)
         val before = stateSet()

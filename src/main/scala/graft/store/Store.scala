@@ -16,16 +16,27 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * any URI and silently turns a store into "absent").
   *
   * Crash-ordering contract, stated once for every store:
-  *   - [[commit]] stages the new contents under `path__stage`, retires
-  *     the live dir to `path__old` by RENAME (never delete), moves the
-  *     staged dir into place, then drops `__old`. Every crash window
-  *     leaves a complete copy in the live dir or in `__old`;
-  *     [[heal]] restores `__old` when the live dir is missing. Every
-  *     read path here heals first ([[read]], [[compact]], [[evict]]),
-  *     and [[commit]] REFUSES to publish while `__old` holds the only
-  *     copy: such a caller computed its write against a missing store
-  *     (a merge would be batch-only), and finishing the swap would make
-  *     the loss permanent.
+  *   - [[commit]] stages the new contents under a hidden sibling
+  *     (`.<name>__stage`), retires the live dir to another
+  *     (`.<name>__old`) by RENAME (never delete), moves the staged dir
+  *     into place, then drops the retired copy. Both names start with a
+  *     dot and sit in the live dir's own parent, so Spark's file index
+  *     and every lister here skip them, and each rename stays inside one
+  *     directory. Every crash window leaves a complete copy in the live
+  *     dir or in the retired one, and a reader sees the old contents or
+  *     the new, never a mix; [[heal]] restores the retired copy when the
+  *     live dir is missing. Every read path here heals first ([[read]],
+  *     [[compact]], [[evict]], [[subdirs]]), and [[commit]] REFUSES to
+  *     publish while the retired copy is the only one: such a caller
+  *     computed its write against a missing store (a merge would be
+  *     batch-only), and finishing the swap would make the loss
+  *     permanent.
+  *   - Because the swap's names are hidden, a `col=value` subdirectory
+  *     of a partitioned store commits the same way — a staged or
+  *     retired copy is never discovered as a phantom partition. This is
+  *     how per-batch state (`batch_id=N`) is written: heal, then
+  *     [[commit]] the batch's subdirectory, so an at-least-once re-run
+  *     of batch N replaces its own rows instead of adding to them.
   *   - [[append]] adds files to the live dir and is not atomic: a store
   *     that appends orders its appends so a crash leaves only state its
   *     own `reconcile` detects and clears (fail-closed — see
@@ -55,8 +66,8 @@ object Store {
   def exists(spark: SparkSession, path: String): Boolean =
     fs(spark, path).exists(new Path(path))
 
-  /** Restore `path` from `path__old` when a [[commit]] died between its
-    * two renames. No-op in every healthy state. */
+  /** Restore `path` from its retired copy when a [[commit]] died between
+    * its two renames. No-op in every healthy state. */
   def heal(spark: SparkSession, path: String): Unit = healed(spark, path)
 
   /** [[heal]], then whether the live dir exists. */
@@ -65,7 +76,7 @@ object Store {
     val dst = new Path(path)
     if (f.exists(dst)) true
     else {
-      val old = new Path(path + "__old")
+      val old = new Path(retired(path))
       if (f.exists(old) && !f.rename(old, dst))
         throw new IOException(s"swap heal rename failed: $old -> $dst")
       f.exists(dst)
@@ -122,23 +133,53 @@ object Store {
 
   /** The swap under [[commit]], for a store whose content is several
     * directories: `stage` writes everything under the staging root it
-    * is given, and one swap publishes all of it. */
+    * is given, and one swap publishes all of it. A crashed attempt's
+    * stage is cleared first, and the stage is dropped when `stage`
+    * throws. */
   def swap(spark: SparkSession, path: String)(stage: String => Unit): Unit = {
-    val tmp = path + "__stage"
-    asCaller(spark)(stage(tmp))
     val f = fs(spark, path)
     val dst = new Path(path)
-    val old = new Path(path + "__old")
+    val tmp = new Path(hidden(path, "__stage"))
+    val old = new Path(retired(path))
     if (!f.exists(dst) && f.exists(old))
       throw new IllegalStateException(
         s"unhealed interrupted swap at $path ($old holds the only copy); " +
           "call Store.heal before computing the write")
+    if (f.exists(tmp)) f.delete(tmp, true)
+    try asCaller(spark)(stage(tmp.toString))
+    catch { case e: Throwable => f.delete(tmp, true); throw e }
     if (f.exists(old)) f.delete(old, true) // prior completed swap's leftover
     if (f.exists(dst) && !f.rename(dst, old))
       throw new IOException(s"swap retire rename failed: $dst -> $old")
-    if (!f.rename(new Path(tmp), dst))
+    if (!f.rename(tmp, dst))
       throw new IOException(s"swap publish rename failed: $tmp -> $dst")
     if (f.exists(old)) f.delete(old, true)
+  }
+
+  /** Where [[swap]] retires the live copy of `path` — the name a crash
+    * between its two renames leaves behind. */
+  private[graft] def retired(path: String): String = hidden(path, "__old")
+
+  /** The dot-prefixed sibling `.<name><suffix>` of `path`. */
+  private def hidden(path: String, suffix: String): String = {
+    val p = new Path(path)
+    new Path(p.getParent, s".${p.getName}$suffix").toString
+  }
+
+  /** The names of the visible subdirectories of `path` (none when it
+    * does not exist), sorted — the stores or partitions under it, never
+    * a swap's staged or retired copy. A child whose live dir a crash
+    * left only in its retired copy is healed first, so it is listed. */
+  private[graft] def subdirs(spark: SparkSession, path: String): Seq[String] = {
+    val f = fs(spark, path)
+    val dir = new Path(path)
+    val Retired = """\.(.+)__old""".r
+    def list() = if (f.exists(dir)) f.listStatus(dir).toSeq.filter(_.isDirectory) else Nil
+    list().map(_.getPath.getName).foreach {
+      case Retired(name) => heal(spark, new Path(dir, name).toString)
+      case _ =>
+    }
+    list().filter(visible).map(_.getPath.getName).sorted
   }
 
   /** Append `df` partitioned by `partitionCol`, repartitioned by that

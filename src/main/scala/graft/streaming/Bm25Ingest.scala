@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.store.Store
 
@@ -115,17 +115,17 @@ object Bm25Ingest {
       }).observe(obs, count(lit(1)).as("n_fresh")))
     val n = obs.get.get("n_fresh").map(_.asInstanceOf[Long])
       .getOrElse(fresh.count())
-    // idempotent appends: each is an overwrite of THIS batch's subdir.
-    // An all-replayed/empty batch writes NOTHING (a zero-row partitioned
+    // idempotent appends: each commits THIS batch's subdir. An
+    // all-replayed/empty batch writes NOTHING (a zero-row partitioned
     // write leaves a schema-less dir that breaks every later read) but
     // still commits its watermark below.
     if (n > 0) {
-      postingsState(fresh, nBuckets).repartition(col("bucket"))
-        .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-        .parquet(s"${postingsDir(stateDir)}/batch_id=$batchId")
-      doclenState(fresh, nBuckets)
-        .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-        .parquet(s"$dlPath/batch_id=$batchId")
+      val postings = s"${postingsDir(stateDir)}/batch_id=$batchId"
+      val doclen = s"$dlPath/batch_id=$batchId"
+      Seq(postings, doclen).foreach(Store.heal(spark, _))
+      Store.commit(postingsState(fresh, nBuckets).repartition(col("bucket")),
+        postings, Seq("bucket"))
+      Store.commit(doclenState(fresh, nBuckets), doclen, Seq("bucket"))
     }
     // globals LAST: the snapshot is the batch's commit point and its
     // version number the replay watermark

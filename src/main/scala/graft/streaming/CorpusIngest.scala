@@ -242,14 +242,16 @@ object CorpusIngest {
     // everything was rejected). Fall back to an explicit probe then.
     val nBad = obs.get.get("n_bad").map(_.asInstanceOf[Long]).getOrElse(
       flagged.filter(!col("__ok") || !col("__q")).limit(1).count())
-    if (nBad > 0)
-      flagged.filter(!col("__ok") || !col("__q")).select(col("doc_id"),
+    if (nBad > 0) {
+      val quarantine = s"${sigDir}_quarantine/batch_id=$batchId"
+      Store.heal(spark, quarantine)
+      Store.commit(flagged.filter(!col("__ok") || !col("__q")).select(col("doc_id"),
           when(col("doc_id").isNull, "doc_id_null")
             .when(col("text").isNull, "text_null")
             .otherwise("quality").as("reason"),
-          substring(col("text"), 1, 256).as("text_prefix"))
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"${sigDir}_quarantine/batch_id=$batchId")
+          substring(col("text"), 1, 256).as("text_prefix")),
+        quarantine)
+    }
     val fresh = benchmark match {
       case Some(b) =>
         val contaminated = graft.llm.Corpus.decontaminate(dedupedIds, b, decontamK)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.llm.{KMeans, Similarity}
@@ -11,17 +11,26 @@ import graft.store.Store
   * persistent IVF index that serves queries WITHOUT ever rescanning the
   * raw stream.
   *
-  * Layout under one root dir:
-  *   - `centroids/` — (list_id, cent array<double>, cent_norm), trained
-  *     ONCE on a bootstrap sample ([[trainCentroids]]) and then frozen:
-  *     IVF assignment must be stable across batches or the index would
-  *     need rebuilding (production systems retrain offline and swap the
-  *     whole index, never mutate centroids under live appends).
-  *   - `cells/` — (vec_id, embedding, v_norm), written
+  * Layout under one root dir. Everything a probe reads lives under
+  * `index/`, one [[Store]] directory, so [[retrainAndSwap]] replaces it
+  * with one [[Store.swap]] and a reader sees the old index or the new
+  * one, never a mix (new centroids over old cell assignments would
+  * probe the wrong partitions):
+  *   - `index/centroids/` — (list_id, cent array<double>, cent_norm),
+  *     trained ONCE on a bootstrap sample ([[trainCentroids]]) and then
+  *     frozen: IVF assignment must be stable across batches or the index
+  *     would need rebuilding (production systems retrain offline and
+  *     swap the whole index, never mutate centroids under live appends).
+  *   - `index/cells/` — (vec_id, embedding, v_norm), written
   *     `partitionBy(list_id)`: the cell id is the PARTITION KEY, so a
   *     probe of p cells reads p/kCells of the data — partition pruning
   *     is the scan-fraction knob (PlanShapeSpec proves the predicate
   *     reaches the scan as a PartitionFilter).
+  *   - `index/codebook/` — the optional PQ codebook ([[trainCodebook]]).
+  *   - `index/qbase/` — the drift baseline ([[quantizationDrift]]).
+  *   - `guard/` — the [[ReplayGuard]] ledger; `_quarantine/` — rejected
+  *     rows per `batch_id`. Both stay outside `index/`: a retrain moves
+  *     cells, not the vector set.
   *
   * Per micro-batch: replayed vec_ids are dropped by the [[ReplayGuard]]
   * under `root/guard` — bloom-prefiltered, id-bucketed, so the guard's
@@ -43,135 +52,87 @@ object VectorIngest {
   private val dimCache = scala.collection.concurrent.TrieMap.empty[String, Int]
 
   /** Train k-means centroids on a bootstrap sample and freeze them
-    * under `root/centroids`. Must run once before [[processBatch]]. */
+    * under `root/index/centroids`. Must run once before [[processBatch]]. */
   def trainCentroids(sample: DataFrame, root: String, kCells: Int = 16,
                      iters: Int = 5, dim: Int = 64): Unit = {
     val cents = KMeans.train(sample, kCells, iters, dim)
     val centDf = Similarity.centroidTable(sample.sparkSession, cents)
-    centDf.coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/centroids")
+    healIndex(sample.sparkSession, root)
+    Store.commit(centDf.coalesce(1), centroidsPath(root))
     // quantization baseline for [[quantizationDrift]]: how well these
     // centroids fit the data they were trained on — the reference the
     // retrain trigger compares live batches against
-    qbaseRows(sample, centDf)
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(qbasePath(root))
+    Store.commit(qbaseRows(sample, centDf).coalesce(1), qbasePath(root))
     dimCache.put(root, dim)
   }
 
-  // ── offline retrain + atomic index swap ────────────────────────────
-  // Frozen centroids drift away from the data distribution as the
-  // stream evolves; production fixes this by retraining OFFLINE and
-  // swapping the whole index, never mutating centroids under live
-  // appends. The swap must replace centroids/ AND cells/ as ONE unit
-  // (new centroids over old cell assignments would probe the wrong
-  // partitions), so it uses a commit-marker protocol rather than two
-  // independent Store.commit swaps:
-  //   1. build complete centroids__new + cells__new trees (old index
-  //      stays live and correct throughout);
-  //   2. create root/__retrain_commit — the single atomic commit point;
-  //   3. retire each live dir to __old, publish __new, drop __old and
-  //      the marker.
-  // Readers heal FORWARD only (marker present → finish step 3) and
-  // ignore __new dirs otherwise — a concurrent probe never aborts an
-  // in-progress retrain, and before the marker exists every probe
-  // serves the OLD index. Stale __new trees from a crashed attempt are
-  // cleared at the start of the next retrainAndSwap. Like
-  // [[Store.compact]], retrain assumes ingest is quiesced: a batch
-  // appended to the old cells after the rebuild's read would not be in
-  // the new tree.
+  /** The directory [[retrainAndSwap]] replaces as one unit. */
+  private def indexPath(root: String): String = s"$root/index"
 
-  private def markerPath(root: String) = new org.apache.hadoop.fs.Path(
-    s"$root/__retrain_commit")
-
-  /** Finish (roll forward) a retrain swap that crashed after its commit
-    * marker was created; no-op in every other state. Call before
-    * reading either index dir. */
-  def healRetrainSwap(spark: SparkSession, root: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = Store.fs(spark, root)
-    if (!fs.exists(markerPath(root))) return
-    Seq(s"$root/centroids", cellsPath(root), codebookPath(root),
-        qbasePath(root)).foreach { dir =>
-      val cur = new Path(dir); val nw = new Path(dir + "__new")
-      val old = new Path(dir + "__old")
-      if (fs.exists(nw)) {
-        if (fs.exists(old)) fs.delete(old, true)
-        if (fs.exists(cur) && !fs.rename(cur, old))
-          throw new java.io.IOException(s"retrain retire failed: $cur")
-        if (!fs.rename(nw, cur))
-          throw new java.io.IOException(s"retrain publish failed: $nw")
-      }
-      if (fs.exists(old)) fs.delete(old, true)
-    }
-    fs.delete(markerPath(root), false)
+  /** Heal the index (a crash inside [[retrainAndSwap]]'s swap), then its
+    * cell store (a crash inside a [[Store.compact]] of it). Every path
+    * that reads, trains or appends to the index calls this first: an
+    * unhealed miss would create a fresh dir that blocks healing
+    * forever. */
+  private def healIndex(spark: SparkSession, root: String): Unit = {
+    Store.heal(spark, indexPath(root))
+    Store.heal(spark, cellsPath(root))
   }
 
   /** Retrain centroids on `sample`, reassign every indexed vector to
-    * the new cells, and atomically swap the (centroids, cells) pair —
-    * probes see the old index until the commit instant, the new one
-    * after. The replay-guard ledger is untouched: the vector SET is
-    * unchanged, only its cell layout moves.
+    * the new cells, and atomically swap the whole index (one
+    * [[Store.swap]] of `index/`) — probes see the old index until the
+    * publish rename, the new one after, and a crash leaves one of the
+    * two. The replay-guard ledger is untouched: the vector SET is
+    * unchanged, only its cell layout moves. Like [[Store.compact]],
+    * retrain assumes ingest is quiesced: a batch appended to the old
+    * cells after the rebuild's read would not be in the new index.
     *
     * A PQ-coded store retrains its CODEBOOK too (same m/ksub, trained
     * on the same sample) and re-encodes every vector with it: a frozen
     * bootstrap codebook's quantization error grows under distribution
     * drift, decaying the [[annPq]] shortlist even after a "retrain".
-    * The staged `codebook__new` + re-encoded codes commit through the
-    * SAME single marker as centroids/cells — a probe never sees new
-    * codes with the old codebook or vice versa. Returns the number of
-    * vectors in the new tree. */
+    * The drift baseline is re-measured against the retrained fit, so a
+    * drift check never compares live batches to a retired quantizer's
+    * training error. Returns the number of vectors in the new index. */
   def retrainAndSwap(spark: SparkSession, root: String, sample: DataFrame,
                      kCells: Int = 16, iters: Int = 5, dim: Int = 64): Long = {
-    import org.apache.hadoop.fs.Path
-    healRetrainSwap(spark, root)
-    Store.heal(spark, cellsPath(root))
-    val fs = Store.fs(spark, root)
-    val centNew = s"$root/centroids__new"; val cellsNew = cellsPath(root) + "__new"
-    val cbNew = codebookPath(root) + "__new"
-    val qbNew = qbasePath(root) + "__new"
-    // stale staging from a crashed pre-commit attempt: rebuild from scratch
-    Seq(centNew, cellsNew, cbNew, qbNew).foreach(d => fs.delete(new Path(d), true))
-    val cents = KMeans.train(sample, kCells, iters, dim)
-    Similarity.centroidTable(spark, cents)
-      .coalesce(1).write.parquet(centNew)
-    // re-baseline the drift trigger against the RETRAINED fit, staged
-    // through the same marker: a drift check must never compare live
-    // batches to a retired quantizer's training error
-    qbaseRows(sample, spark.read.parquet(centNew))
-      .coalesce(1).write.parquet(qbNew)
-    val reassigned0 = Similarity.assignToCells(
-      spark.read.parquet(cellsPath(root)).select("vec_id", "embedding"),
-      spark.read.parquet(centNew), "vec_id", keep = 1)
-    // a PQ-CODED store must stay coded through the retrain — with codes
-    // from the RETRAINED codebook, staged beside it
-    val reassigned = loadCodebook(spark, root) match {
-      case Some(old) =>
-        val cb = graft.llm.ProductQuantizer.train(
-          sample, old.m, old.ksub, iters, dim)
-        import spark.implicits._
-        cb.cents.zipWithIndex.flatMap { case (cells, s) =>
-          cells.map { case (cid, c) => (s, cid, c.toSeq) }
-        }.toDF("s", "cell", "cent")
-          .coalesce(1).write.parquet(cbNew)
-        reassigned0.join(
-          graft.llm.ProductQuantizer.encode(
-            reassigned0.select("vec_id", "embedding"), cb), Seq("vec_id"))
-      case None => reassigned0
+    healIndex(spark, root)
+    Store.swap(spark, indexPath(root)) { stage =>
+      val cents = KMeans.train(sample, kCells, iters, dim)
+      Similarity.centroidTable(spark, cents)
+        .coalesce(1).write.parquet(s"$stage/centroids")
+      val staged = spark.read.parquet(s"$stage/centroids")
+      qbaseRows(sample, staged).coalesce(1).write.parquet(s"$stage/qbase")
+      val reassigned0 = Similarity.assignToCells(
+        spark.read.parquet(cellsPath(root)).select("vec_id", "embedding"),
+        staged, "vec_id", keep = 1)
+      // a PQ-CODED store must stay coded through the retrain — with codes
+      // from the RETRAINED codebook, staged beside it
+      val reassigned = loadCodebook(spark, root) match {
+        case Some(old) =>
+          val cb = graft.llm.ProductQuantizer.train(
+            sample, old.m, old.ksub, iters, dim)
+          codebookRows(spark, cb).coalesce(1).write.parquet(s"$stage/codebook")
+          reassigned0.join(
+            graft.llm.ProductQuantizer.encode(
+              reassigned0.select("vec_id", "embedding"), cb), Seq("vec_id"))
+        case None => reassigned0
+      }
+      reassigned.repartition(col("list_id"))
+        .write.partitionBy("list_id").parquet(s"$stage/cells")
     }
-    reassigned.repartition(col("list_id"))
-      .write.partitionBy("list_id").parquet(cellsNew)
-    val n = spark.read.parquet(cellsNew).count()
-    fs.create(markerPath(root), false).close() // the commit point
-    healRetrainSwap(spark, root)               // roll our own swap forward
     dimCache.put(root, dim) // a retrain keeps dim, but keep the cache exact
-    n
+    spark.read.parquet(cellsPath(root)).count()
   }
 
+  private def centroidsPath(root: String): String = s"${indexPath(root)}/centroids"
+
   private def centroids(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(s"$root/centroids")
+    spark.read.parquet(centroidsPath(root))
 
   /** The cell store; compact with [[Store.compact]]. */
-  private[graft] def cellsPath(root: String): String = s"$root/cells"
+  private[graft] def cellsPath(root: String): String = s"${indexPath(root)}/cells"
 
   // ── optional PQ-coded cell layout ──────────────────────────────────
   // Raw 64-dim doubles are ~512 B/vector — at billion scale that is
@@ -186,10 +147,10 @@ object VectorIngest {
   // recall floor spec-asserted (ADC ranks by L2, rerank restores
   // cosine order within the shortlist).
 
-  private def codebookPath(root: String): String = s"$root/codebook"
+  private def codebookPath(root: String): String = s"${indexPath(root)}/codebook"
 
   /** Train per-subspace PQ codebooks on a bootstrap sample and freeze
-    * them under `root/codebook`. OPTIONAL — when present, every
+    * them under `root/index/codebook`. OPTIONAL — when present, every
     * subsequent [[processBatch]] stores codes alongside raw vectors
     * (train it before the first batch: the cell store's schema is set
     * by the first append). Frozen like centroids and for the same
@@ -197,12 +158,17 @@ object VectorIngest {
   def trainCodebook(sample: DataFrame, root: String, m: Int = 8,
                     ksub: Int = 16, iters: Int = 5, dim: Int = 64): Unit = {
     val cb = graft.llm.ProductQuantizer.train(sample, m, ksub, iters, dim)
-    val spark = sample.sparkSession
+    healIndex(sample.sparkSession, root)
+    Store.commit(codebookRows(sample.sparkSession, cb).coalesce(1), codebookPath(root))
+  }
+
+  /** A codebook as (s, cell, cent) rows, the stored form. */
+  private def codebookRows(spark: SparkSession,
+                           cb: graft.llm.ProductQuantizer.Codebook): DataFrame = {
     import spark.implicits._
     cb.cents.zipWithIndex.flatMap { case (cells, s) =>
       cells.map { case (cid, c) => (s, cid, c.toSeq) }
     }.toDF("s", "cell", "cent")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(codebookPath(root))
   }
 
   /** Codebook rows → [[graft.llm.ProductQuantizer.Codebook]]; bounded
@@ -238,11 +204,9 @@ object VectorIngest {
                    assumeFresh: Boolean = false): Long = {
     val spark = batch.sparkSession
     val path = cellsPath(root)
-    // a retrain crash post-commit leaves the index half-swapped; heal
-    // both BEFORE the exists probe — an unhealed miss would skip the
+    // heal BEFORE the exists probe — an unhealed miss would skip the
     // replay guard AND create a fresh dir that blocks healing forever
-    healRetrainSwap(spark, root)
-    Store.heal(spark, path)
+    healIndex(spark, root)
     val guardDir = guardPath(root)
     if (!ReplayGuard.exists(spark, guardDir)) {
       // 64 buckets, not the 256 default: sidecar/ledger file counts set
@@ -268,8 +232,8 @@ object VectorIngest {
     //     identically — no materialization needed (a dedup-first order
     //     would make the split ride dropDuplicates' nondeterministic
     //     survivor and need staging);
-    //   - the quarantine write OVERWRITES its batch_id subdir, so an
-    //     at-least-once re-run of the same batch is idempotent;
+    //   - the quarantine write commits its batch_id subdir (Store's
+    //     per-batch contract), so a re-run of the batch is idempotent;
     //   - invalid rows are NOT ledgered: a corrected re-send of the id
     //     is admitted, never treated as a replay.
     val cents = centroids(spark, root)
@@ -299,14 +263,16 @@ object VectorIngest {
     // (see CorpusIngest.processBatch) — fall back to an explicit probe
     val nBad = obs.get.get("n_bad").map(_.asInstanceOf[Long]).getOrElse(
       flagged.filter(!col("__ok")).limit(1).count())
-    if (nBad > 0)
-      flagged.filter(!col("__ok")).select(col("vec_id"),
+    if (nBad > 0) {
+      val quarantine = s"$root/_quarantine/batch_id=$batchId"
+      Store.heal(spark, quarantine)
+      Store.commit(flagged.filter(!col("__ok")).select(col("vec_id"),
           when(col("vec_id").isNull, "vec_id_null")
             .when(col("embedding").isNull, "embedding_null")
             .otherwise("wrong_dim").as("reason"),
-          coalesce(size(col("embedding")), lit(-1)).as("n_dims"))
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$root/_quarantine/batch_id=$batchId")
+          coalesce(size(col("embedding")), lit(-1)).as("n_dims")),
+        quarantine)
+    }
     val assignedRaw = Similarity.assignToCells(fresh, cents, "vec_id", keep = 1)
     // PQ layout: codes ride the same staged frame — encode() is a
     // narrow literal expression below the budget, so this adds one
@@ -338,7 +304,7 @@ object VectorIngest {
     * [[Store.compact]]. */
   def reconcile(spark: SparkSession, root: String,
                 evict: Boolean = false): Seq[Long] = {
-    healRetrainSwap(spark, root)
+    healIndex(spark, root)
     val store = Store.read(spark, cellsPath(root)).map(_.select("vec_id"))
       .getOrElse {
         import spark.implicits._
@@ -354,7 +320,7 @@ object VectorIngest {
 
   // ── index health / drift observability ─────────────────────────────
 
-  private def qbasePath(root: String): String = s"$root/qbase"
+  private def qbasePath(root: String): String = s"${indexPath(root)}/qbase"
 
   /** (n, sum_err) of `df`'s angular quantization error against `cents`:
     * per vector err_micros = 1e6 − floor(1e6 · best cosine to any
@@ -401,7 +367,7 @@ object VectorIngest {
     * answers it from footers), so the report is metadata-cheap at any
     * index size. */
   def indexStats(spark: SparkSession, root: String): DataFrame = {
-    healRetrainSwap(spark, root)
+    healIndex(spark, root)
     val nCells = centroids(spark, root).count()
     val coded = if (Store.exists(spark, codebookPath(root))) 1L else 0L
     val quarDir = s"$root/_quarantine"
@@ -437,8 +403,8 @@ object VectorIngest {
   /** Quantization-drift check — the RETRAIN TRIGGER for
     * [[retrainAndSwap]]: compares a batch's mean angular quantization
     * error against the baseline recorded when the centroids were
-    * trained (`root/qbase`, written by [[trainCentroids]] and restaged
-    * through the retrain swap's commit marker). Under distribution
+    * trained (`root/index/qbase`, written by [[trainCentroids]] and
+    * re-measured by every [[retrainAndSwap]]). Under distribution
     * drift the frozen centroids fit new data worse, probes touch
     * wronger cells, and (on a coded store) ADC error grows — this
     * surfaces that as `drift_ppm` = batch error / baseline error,
@@ -448,9 +414,9 @@ object VectorIngest {
     * null errs, suggestion 0. */
   def quantizationDrift(spark: SparkSession, root: String, batch: DataFrame,
                         thresholdPpm: Long = 2000000L): DataFrame = {
-    healRetrainSwap(spark, root)
+    healIndex(spark, root)
     require(Store.exists(spark, qbasePath(root)),
-      s"no quantization baseline under $root/qbase — (re)train the " +
+      s"no quantization baseline under ${qbasePath(root)} — (re)train the " +
         "centroids with this round's trainCentroids/retrainAndSwap first")
     driftFrom(
       cellErrAgg(batch, centroids(spark, root)),
@@ -463,7 +429,7 @@ object VectorIngest {
     * explicit train set instead of a store: the oracle-checkable core
     * (q164 replays the whole integer pipeline — floored angular errs,
     * DIV means, the ppm ratio — against DuckDB). The store-based form
-    * is this with the train leg precomputed into `root/qbase`. */
+    * is this with the train leg precomputed into `root/index/qbase`. */
   def driftReport(batch: DataFrame, train: DataFrame, cents: DataFrame,
                   thresholdPpm: Long = 2000000L): DataFrame =
     driftFrom(
@@ -491,8 +457,7 @@ object VectorIngest {
     * read path. One scan, no shuffle — bucket/index construction is the
     * consumer's. */
   def storedVectors(spark: SparkSession, root: String): DataFrame = {
-    healRetrainSwap(spark, root)
-    Store.heal(spark, cellsPath(root))
+    healIndex(spark, root)
     spark.read.parquet(cellsPath(root)).select("vec_id", "embedding")
   }
 
@@ -529,8 +494,7 @@ object VectorIngest {
     * selective — the classic filtered-ANN failure this avoids. */
   def annScored(spark: SparkSession, root: String, queries: DataFrame, k: Int,
                 nProbe: Int = 4, allowed: Option[DataFrame] = None): DataFrame = {
-    healRetrainSwap(spark, root)
-    Store.heal(spark, cellsPath(root))
+    healIndex(spark, root)
     val qs = Similarity.assignToCells(
         queries, centroids(spark, root), "query_id", keep = nProbe)
       .select(col("query_id"), col("embedding").as("q_emb"),
@@ -571,8 +535,7 @@ object VectorIngest {
     * VectorIngestSpec, exact when `shortlist` covers the cells. */
   def annPq(spark: SparkSession, root: String, queries: DataFrame, k: Int,
             nProbe: Int = 4, shortlist: Int = 50): DataFrame = {
-    healRetrainSwap(spark, root)
-    Store.heal(spark, cellsPath(root))
+    healIndex(spark, root)
     val cb = loadCodebook(spark, root).getOrElse(throw new IllegalStateException(
       s"no PQ codebook at $root — trainCodebook before annPq"))
     val qs = Similarity.assignToCells(
@@ -640,8 +603,7 @@ object VectorIngest {
     * nothing. */
   def semanticRejects(spark: SparkSession, root: String, batch: DataFrame,
                       minSimPpm: Long, nProbe: Int = 4): DataFrame = {
-    healRetrainSwap(spark, root)
-    Store.heal(spark, cellsPath(root))
+    healIndex(spark, root)
     if (!Store.exists(spark, cellsPath(root)))
       return batch.select(col("vec_id"), col("vec_id").as("dup_of"),
         lit(0L).as("sim_ppm")).limit(0)
@@ -731,7 +693,7 @@ object VectorIngest {
 
   /** Continuous drift monitoring riding the ingest loop: one
     * [[quantizationDrift]] verdict row per micro-batch appended under
-    * `monitorDir/batch_id=N` — per-batch subdir OVERWRITE, so an
+    * `monitorDir/batch_id=N` — a per-batch subdirectory commit, so an
     * at-least-once replay rewrites the same row instead of
     * double-counting. The monitor table is what an operator (or a
     * maintenance cron) reads to schedule [[retrainAndSwap]]: a run of
@@ -749,10 +711,11 @@ object VectorIngest {
     // crash-loop bought by turning monitoring ON. Skip (the next
     // retrainAndSwap records a baseline and checks resume); the direct
     // quantizationDrift call keeps its loud require for explicit use.
-    healRetrainSwap(spark, root)
-    if (Store.exists(spark, qbasePath(root)))
-      quantizationDrift(spark, root, batch, thresholdPpm)
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$monitorDir/batch_id=$batchId")
+    healIndex(spark, root)
+    if (Store.exists(spark, qbasePath(root))) {
+      val out = s"$monitorDir/batch_id=$batchId"
+      Store.heal(spark, out)
+      Store.commit(quantizationDrift(spark, root, batch, thresholdPpm).coalesce(1), out)
+    }
   }
 }

@@ -185,27 +185,27 @@ class WebhookPipeline(tablesDir: String,
     * unidentifiable husk. The decision rides the SAME type/payload
     * aggregate the router already pays for — a clean batch (every type
     * routed, no null payloads) adds ZERO extra jobs — and the write
-    * OVERWRITES its batch_id subdir, so Structured Streaming's
-    * at-least-once re-run of a batch is idempotent (the batch id
-    * surfaces as a partition column on read). Reasons:
-    * `malformed_envelope` (no parseable type or payload — null-payload
+    * commits its batch_id subdir (Store's per-batch contract), so
+    * Structured Streaming's at-least-once re-run of a batch is
+    * idempotent (the batch id surfaces as a partition column on read).
+    * Reasons: `malformed_envelope` (no parseable type or payload — null-payload
     * events of ROUTED types are included: the sink would drop their
     * all-null projection silently) vs `unrouted_type` (well-formed,
     * just not a routed event type). */
   private def quarantineUnprocessable(raw: DataFrame, batchId: Long): Unit = {
     val handled = StripeEvents.routes.keySet
+    val out = s"$tablesDir/_quarantine/batch_id=$batchId"
+    Store.heal(raw.sparkSession, out)
     // the ONE envelope parser, with the raw text riding along — a
     // hand-rolled re-parse here could drift from the router's and
     // quarantine the wrong rows
-    StripeEvents.parseEnvelope(raw, keepRaw = true)
+    Store.commit(StripeEvents.parseEnvelope(raw, keepRaw = true)
       .filter(col("event_type").isNull || col("payload").isNull ||
         !col("event_type").isin(handled.toSeq: _*))
       .select(col("event_id"), col("event_type"), col("created"),
         when(col("event_type").isNull || col("payload").isNull,
           "malformed_envelope").otherwise("unrouted_type").as("reason"),
-        col("payload"), col("raw_value"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$tablesDir/_quarantine/batch_id=$batchId")
+        col("payload"), col("raw_value")), out)
   }
 
   /** The table's ONE guarded commit for this batch. Its upsert rows and

@@ -314,10 +314,11 @@ class BackfillSpec extends SparkSpec {
     val dir = tmpDir("graft_bf_heal")
     Backfill.upsertChunk(spark, dir, TableDefs.customers,
       Seq("""{"id":"cus_1","object":"customer","created":1}"""))
-    // a crash between the swap renames left only customers__old
+    // a crash between the swap renames left only the retired customers
     import org.apache.hadoop.fs.Path
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new Path(s"$dir/customers"), new Path(s"$dir/customers__old")))
+    assert(fs.rename(new Path(s"$dir/customers"),
+      new Path(graft.store.Store.retired(s"$dir/customers"))))
     assert(Backfill.syncDependent(spark, dir, TableDefs.paymentMethods,
       "customers", "customer", new BackfillSpec.ChildFetcher) == 1L)
     assert(spark.read.parquet(s"$dir/payment_methods").count() == 1L)

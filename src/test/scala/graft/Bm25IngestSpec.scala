@@ -151,12 +151,12 @@ class Bm25IngestSpec extends SparkSpec {
     val full = Corpus.bm25TopK(docs.unionByName(extra), queries, k = 10)
       .orderBy("query_id", "rnk").collect().toSeq
     assert(served(stateDir) == full)
-    // crash mid-swap: postings retired to __old, nothing published — the
-    // next reader heals instead of serving an empty index
+    // crash mid-swap: postings retired, nothing published — the next
+    // reader heals instead of serving an empty index
     import org.apache.hadoop.fs.Path
     val fs = new Path(stateDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(new Path(s"$stateDir/postings"),
-      new Path(s"$stateDir/postings__old")))
+      new Path(Store.retired(s"$stateDir/postings"))))
     assert(served(stateDir) == full, "mid-swap crash must heal on read")
   }
 

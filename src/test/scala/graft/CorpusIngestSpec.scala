@@ -72,18 +72,18 @@ class CorpusIngestSpec extends SparkSpec {
         k = 3, numPerms = 32, bands = 16, minEstPpm = 400000L)
     val doc = "a document whose readmission after a crashed compaction would corrupt the corpus"
     assert(ingest(1L -> doc) == 1L)
-    // simulate the crash window inside writeAtomic: the live dir has
-    // been retired to __old but the staged dir never moved in — the
-    // exact state a kill between the two renames leaves behind
+    // simulate the crash window inside Store.swap: the live dir has
+    // been retired but the staged dir never moved in — the exact state
+    // a kill between the two renames leaves behind
     import org.apache.hadoop.fs.Path
     val fs = new Path(sigDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new Path(sigDir), new Path(sigDir + "__old")))
+    assert(fs.rename(new Path(sigDir), new Path(Store.retired(sigDir))))
     // without healing, the ledger would look empty and the replay would
     // be re-admitted (permanent duplicate). processBatch must heal first.
     assert(ingest(1L -> doc) == 0L)
     assert(spark.read.parquet(sigDir).count() == 1L)
     // compact() heals the same state on its own path
-    assert(fs.rename(new Path(corpusDir), new Path(corpusDir + "__old")))
+    assert(fs.rename(new Path(corpusDir), new Path(Store.retired(corpusDir))))
     Store.compact(spark, corpusDir)
     assert(spark.read.parquet(corpusDir).select("doc_id")
       .as[Long].collect().toSeq == Seq(1L))

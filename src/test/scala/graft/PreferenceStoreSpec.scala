@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.llm.{PreferenceStore, Rlhf}
+import graft.store.Store
 
 /** The additive preference store's exactly-once contract
   * ([[graft.llm.PreferenceStore]]): state + batch ledger move in one
@@ -47,9 +48,10 @@ class PreferenceStoreSpec extends SparkSpec {
     try {
       val b0 = Seq((1L, 2L)).toDF("winner_id", "loser_id")
       assert(PreferenceStore.ingest(b0, dir, 0L))
-      // simulate the kill window between writeAtomic's two renames
-      assert(new java.io.File(s"$dir/bt_store")
-        .renameTo(new java.io.File(s"$dir/bt_store__old")))
+      // simulate the kill window between Store.swap's two renames
+      val store = s"$dir/bt_store"
+      assert(Store.fs(spark, store).rename(new org.apache.hadoop.fs.Path(store),
+        new org.apache.hadoop.fs.Path(Store.retired(store))))
       val b1 = Seq((2L, 1L)).toDF("winner_id", "loser_id")
       assert(PreferenceStore.ingest(b1, dir, 1L), "ingest must heal, then fold")
       val (pairs, ids) = PreferenceStore.status(spark, dir)

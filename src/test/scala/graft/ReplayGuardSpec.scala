@@ -200,7 +200,7 @@ class ReplayGuardSpec extends SparkSpec {
     // next batch bootstraps the guard FROM the store: the 24 already-
     // indexed ids must still be rejected, the 24 new ones admitted
     assert(VectorIngest.processBatch(emb, root) == 24)
-    assert(spark.read.parquet(s"$root/cells").select("vec_id").distinct().count() == 48)
+    assert(spark.read.parquet(VectorIngest.cellsPath(root)).select("vec_id").distinct().count() == 48)
   }
 
   test("crash-window recovery: bloom committed but ids/ missing admits the batch") {

@@ -11,6 +11,9 @@ import graft.streaming.VectorIngest
 class VectorIngestSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Thrown from a stage step to stop a swap at its stage-only window. */
+  private final class StagedCrash extends RuntimeException
+
   // deterministic unit-ish vectors in 4-d: two well-separated clusters
   private def vec(cluster: Int, i: Int): Array[Float] = {
     val base = if (cluster == 0) Array(10f, 0f, 1f, 0f) else Array(0f, 10f, 0f, 1f)
@@ -36,10 +39,10 @@ class VectorIngestSpec extends SparkSpec {
 
     // incremental cells == one-shot assignment of the union against the
     // same frozen centroids
-    val cells = spark.read.parquet(s"$root/cells")
+    val cells = spark.read.parquet(VectorIngest.cellsPath(root))
       .select("vec_id", "list_id").as[(Long, Long)].collect().toMap
     val oneShot = Similarity.assignToCells(all,
-        spark.read.parquet(s"$root/centroids"), "vec_id", keep = 1)
+        spark.read.parquet(s"$root/index/centroids"), "vec_id", keep = 1)
       .select("vec_id", "list_id").as[(Long, Long)].collect().toMap
     assert(cells == oneShot)
     // the two clusters landed in different cells
@@ -75,7 +78,7 @@ class VectorIngestSpec extends SparkSpec {
     assert(VectorIngest.processBatch(preFiltered(batch2), rootB,
       assumeFresh = true) == 0L)
     def stored(r: String): Map[Long, Long] =
-      spark.read.parquet(s"$r/cells").select("vec_id", "list_id")
+      spark.read.parquet(VectorIngest.cellsPath(r)).select("vec_id", "list_id")
         .as[(Long, Long)].collect().toMap
     assert(stored(rootA) == stored(rootB))
   }
@@ -88,11 +91,11 @@ class VectorIngestSpec extends SparkSpec {
     // empty store: no-op, not FileNotFoundException
     assert(Store.compact(spark, VectorIngest.cellsPath(root)) == ((0, 0)))
     assert(VectorIngest.processBatch(all, root) == 8L)
-    // simulate the crash window: cells retired to __old, nothing published
+    // simulate the crash window: cells retired, nothing published
     import org.apache.hadoop.fs.Path
-    val cells = s"$root/cells"
+    val cells = VectorIngest.cellsPath(root)
     val fs = new Path(cells).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new Path(cells), new Path(cells + "__old")))
+    assert(fs.rename(new Path(cells), new Path(Store.retired(cells))))
     // an unhealed replay would re-admit everything AND create a fresh
     // dir that blocks healing forever — processBatch must heal first
     assert(VectorIngest.processBatch(all, root) == 0L)
@@ -126,30 +129,35 @@ class VectorIngestSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().toSet
     assert(before == exact) // 1 cell = brute force, trivially
 
-    // ── crash BEFORE the commit marker: staged __new trees exist but
-    // probes must still serve the OLD index untouched (and not delete
-    // the staging of what could be an in-flight retrain)
+    // ── crash after staging, before the swap: a complete staged index
+    // exists but probes must still serve the OLD index untouched (and
+    // not delete the staging of what could be an in-flight retrain)
     import org.apache.hadoop.fs.Path
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new Path(s"$root/centroids__new"))
-    fs.mkdirs(new Path(s"$root/cells__new"))
-    assert(VectorIngest.ann(spark, root, queries, k = 3, nProbe = 1)
-      .as[(Long, Long, Long)].collect().toSet == exact)
-    assert(fs.exists(new Path(s"$root/centroids__new")),
-      "a reader must not roll back an uncommitted retrain")
+    val index = s"$root/index"
+    def hidden() = fs.listStatus(new Path(root)).map(_.getPath.getName)
+      .filter(_.startsWith("."))
+    intercept[StagedCrash](Store.swap(spark, index) { tmp =>
+      Seq("centroids", "cells").foreach(d => spark.read.parquet(s"$index/$d")
+        .write.parquet(s"$tmp/$d"))
+      assert(VectorIngest.ann(spark, root, queries, k = 3, nProbe = 1)
+        .as[(Long, Long, Long)].collect().toSet == exact)
+      assert(fs.exists(new Path(tmp)),
+        "a reader must not roll back an uncommitted retrain")
+      throw new StagedCrash
+    })
 
     // ── the real retrain: 2 cells over both clusters, swap commits
     val n = VectorIngest.retrainAndSwap(spark, root, all, kCells = 2,
       iters = 5, dim = 4)
     assert(n == 16L)
-    assert(!fs.exists(new Path(s"$root/centroids__new")))
-    assert(!fs.exists(new Path(s"$root/cells__new")))
+    assert(hidden().isEmpty, "no staged or retired index may outlive the swap")
     // post-swap, probing all cells is exact brute force again
     assert(VectorIngest.ann(spark, root, queries, k = 3, nProbe = 2)
       .as[(Long, Long, Long)].collect().toSet == exact)
     // and the retrain actually changed the layout: 2 cells now, the
     // clusters separated, nProbe=1 stays within the query's cluster
-    assert(spark.read.parquet(s"$root/cells")
+    assert(spark.read.parquet(VectorIngest.cellsPath(root))
       .select("list_id").distinct().count() == 2L)
     VectorIngest.ann(spark, root, queries, k = 3, nProbe = 1)
       .as[(Long, Long, Long)].collect()
@@ -157,22 +165,34 @@ class VectorIngestSpec extends SparkSpec {
     // replay guard survived the swap: the vector set is unchanged
     assert(VectorIngest.processBatch(all, root) == 0L)
 
-    // ── crash AFTER the marker, before any rename: readers roll the
-    // swap forward. Simulate by staging a 1-cell retrain by hand.
+    // ── crash windows of the swap: a reader sees the old index or the
+    // new one, never a mix. The "new" index is a 1-cell retrain staged
+    // by hand; the cells and centroids a reader finds must agree.
+    def cellCounts() = (spark.read.parquet(s"$index/centroids").count(),
+      spark.read.parquet(VectorIngest.cellsPath(root))
+        .select("list_id").distinct().count())
+    val oneCell = tmpDir("vindex4_new")
     val cents1 = graft.llm.KMeans.train(all, 1, 3, 4)
     Similarity.centroidTable(spark, cents1)
-      .coalesce(1).write.parquet(s"$root/centroids__new")
+      .coalesce(1).write.parquet(s"$oneCell/centroids")
     Similarity.assignToCells(
-        spark.read.parquet(s"$root/cells").select("vec_id", "embedding"),
-        spark.read.parquet(s"$root/centroids__new"), "vec_id", keep = 1)
-      .write.partitionBy("list_id").parquet(s"$root/cells__new")
-    fs.create(new Path(s"$root/__retrain_commit"), false).close()
-    // first read heals forward to the committed 1-cell index
+        spark.read.parquet(VectorIngest.cellsPath(root)).select("vec_id", "embedding"),
+        spark.read.parquet(s"$oneCell/centroids"), "vec_id", keep = 1)
+      .write.partitionBy("list_id").parquet(s"$oneCell/cells")
+    // live retired, nothing published: the first read heals back to the
+    // old 2-cell index
+    assert(fs.rename(new Path(index), new Path(Store.retired(index))))
+    VectorIngest.ann(spark, root, queries, k = 3, nProbe = 1)
+      .as[(Long, Long, Long)].collect()
+      .foreach { case (q, nb, _) => assert((q < 100) == (nb < 100)) }
+    assert(cellCounts() == ((2L, 2L)))
+    // published with the retired copy still present: the new 1-cell
+    // index serves, and probing its one cell is brute force
+    assert(fs.rename(new Path(index), new Path(Store.retired(index))))
+    assert(fs.rename(new Path(oneCell), new Path(index)))
     assert(VectorIngest.ann(spark, root, queries, k = 3, nProbe = 1)
       .as[(Long, Long, Long)].collect().toSet == exact)
-    assert(!fs.exists(new Path(s"$root/__retrain_commit")))
-    assert(spark.read.parquet(s"$root/cells")
-      .select("list_id").distinct().count() == 1L)
+    assert(cellCounts() == ((1L, 1L)))
   }
 
   test("ann probing all cells is exact; nProbe=1 stays within the cluster") {
@@ -254,7 +274,7 @@ class VectorIngestSpec extends SparkSpec {
     assert(q.toSet == Set((50L, "wrong_dim"), (51L, "embedding_null"),
       (52L, "wrong_dim"), (-1L, "vec_id_null")))
     // id 52's VALID row was indexed even though its bad twin quarantined
-    assert(spark.read.parquet(s"$root/cells").filter(col("vec_id") === 52L)
+    assert(spark.read.parquet(VectorIngest.cellsPath(root)).filter(col("vec_id") === 52L)
       .count() == 1L)
     // at-least-once redelivery of the same batch id: audit stays exact
     assert(VectorIngest.processBatch(mixed, root, batchId = 1L) == 0L)
@@ -280,7 +300,7 @@ class VectorIngestSpec extends SparkSpec {
     assert(VectorIngest.processBatch(b1, root) == 24L)
     assert(VectorIngest.processBatch(b2, root) == 8L)
     assert(VectorIngest.processBatch(b2, root) == 0L) // replay no-op, coded store
-    val cells = spark.read.parquet(s"$root/cells")
+    val cells = spark.read.parquet(VectorIngest.cellsPath(root))
     assert(cells.columns.contains("codes"))
     assert(cells.select(size(col("codes"))).distinct()
       .as[Int].collect().toSeq == Seq(2), "m codes per vector")
@@ -300,7 +320,7 @@ class VectorIngestSpec extends SparkSpec {
     // compaction preserves the coded layout and the served answer
     val (before, after) = Store.compact(spark, VectorIngest.cellsPath(root))
     assert(after <= before)
-    assert(spark.read.parquet(s"$root/cells").columns.contains("codes"))
+    assert(spark.read.parquet(VectorIngest.cellsPath(root)).columns.contains("codes"))
     val reServed = VectorIngest.annPq(spark, root, queries, k = 3,
       nProbe = 2, shortlist = 64)
     assert(reServed.exceptAll(exact).isEmpty && exact.exceptAll(reServed).isEmpty)
@@ -311,14 +331,14 @@ class VectorIngestSpec extends SparkSpec {
     // off the swapped tree
     assert(VectorIngest.retrainAndSwap(spark, root, all,
       kCells = 2, iters = 3, dim = 4) == 32L)
-    assert(spark.read.parquet(s"$root/cells").columns.contains("codes"),
+    assert(spark.read.parquet(VectorIngest.cellsPath(root)).columns.contains("codes"),
       "retrain dropped the codes column — coded store broken")
     val postRetrain = VectorIngest.annPq(spark, root, queries, k = 3,
       nProbe = 2, shortlist = 64)
     assert(postRetrain.exceptAll(exact).isEmpty && exact.exceptAll(postRetrain).isEmpty)
   }
 
-  test("retrainAndSwap retrains the PQ codebook through the same commit marker") {
+  test("retrainAndSwap retrains the PQ codebook in the same index swap") {
     val root = tmpDir("vindex_pqrt")
     // DRIFTED bootstrap: centroids AND codebook trained on cluster 0
     // only — the stream then delivers both clusters, so the frozen
@@ -329,44 +349,48 @@ class VectorIngestSpec extends SparkSpec {
     VectorIngest.trainCentroids(boot, root, kCells = 2, iters = 3, dim = 4)
     VectorIngest.trainCodebook(boot, root, m = 2, ksub = 4, iters = 3, dim = 4)
     assert(VectorIngest.processBatch(all, root) == 32L)
-    val cbBefore = spark.read.parquet(s"$root/codebook").collect().toSet
+    val cbBefore = spark.read.parquet(s"$root/index/codebook").collect().toSet
     val queries = (rows(0 until 2, 0) ++ rows(100 until 102, 1))
       .toDF("vec_id", "embedding")
     val exact = Similarity.bruteForceKnn(all, queries, k = 3)
 
-    // ── pre-commit crash: a staged codebook__new with NO marker must
+    // ── pre-swap crash: a staged index with an empty codebook must
     // neither be served nor roll anything back
     import org.apache.hadoop.fs.Path
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new Path(s"$root/codebook__new"))
-    val served = VectorIngest.annPq(spark, root, queries, k = 3,
-      nProbe = 2, shortlist = 64)
-    assert(served.exceptAll(exact).isEmpty && exact.exceptAll(served).isEmpty,
-      "pre-commit crash: old codebook+codes must keep serving exactly")
-    assert(spark.read.parquet(s"$root/codebook").collect().toSet == cbBefore,
-      "uncommitted staging must not replace the live codebook")
+    val index = s"$root/index"
+    intercept[StagedCrash](Store.swap(spark, index) { tmp =>
+      fs.mkdirs(new Path(s"$tmp/codebook"))
+      val served = VectorIngest.annPq(spark, root, queries, k = 3,
+        nProbe = 2, shortlist = 64)
+      assert(served.exceptAll(exact).isEmpty && exact.exceptAll(served).isEmpty,
+        "pre-swap crash: old codebook+codes must keep serving exactly")
+      assert(spark.read.parquet(s"$index/codebook").collect().toSet == cbBefore,
+        "uncommitted staging must not replace the live codebook")
+      throw new StagedCrash
+    })
 
     // ── the real retrain on the full (drifted) distribution: the
-    // codebook commits WITH the centroids/cells through the one marker
+    // codebook commits WITH the centroids/cells in the one index swap
     assert(VectorIngest.retrainAndSwap(spark, root, all,
       kCells = 2, iters = 3, dim = 4) == 32L)
-    assert(!fs.exists(new Path(s"$root/codebook__new")))
-    val cbAfter = spark.read.parquet(s"$root/codebook").collect().toSet
+    assert(!fs.exists(new Path(Store.retired(index))))
+    val cbAfter = spark.read.parquet(s"$index/codebook").collect().toSet
     assert(cbAfter != cbBefore,
       "codebook unchanged — retrain froze the bootstrap quantizer")
     // stored codes are consistent with the NEW codebook: re-encoding the
     // raw vectors with it reproduces the cell store's codes exactly
     def loadCb() = {
-      val cbRows = spark.read.parquet(s"$root/codebook").collect()
+      val cbRows = spark.read.parquet(s"$index/codebook").collect()
       val cents = cbRows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map(_._2
         .map(r => (r.getLong(1), r.getSeq[Double](2).toArray))
         .sortBy(_._1).toIndexedSeq)
       graft.llm.ProductQuantizer.Codebook(
         cents.size, cents.head.size, cents.head.head._2.length, cents)
     }
-    val stored = spark.read.parquet(s"$root/cells").select("vec_id", "codes")
+    val stored = spark.read.parquet(VectorIngest.cellsPath(root)).select("vec_id", "codes")
     val reEnc = graft.llm.ProductQuantizer.encode(
-      spark.read.parquet(s"$root/cells").select("vec_id", "embedding"), loadCb())
+      spark.read.parquet(VectorIngest.cellsPath(root)).select("vec_id", "embedding"), loadCb())
       .select("vec_id", "codes")
     assert(stored.exceptAll(reEnc).isEmpty && reEnc.exceptAll(stored).isEmpty,
       "cell codes were not re-encoded with the retrained codebook")
@@ -375,18 +399,16 @@ class VectorIngestSpec extends SparkSpec {
       nProbe = 2, shortlist = 64)
     assert(post.exceptAll(exact).isEmpty && exact.exceptAll(post).isEmpty)
 
-    // ── post-commit crash: marker present + staged codebook__new heals
-    // FORWARD on the next read (codebook participates in the roll)
-    val cbDir = s"$root/codebook"
-    fs.rename(new Path(cbDir), new Path(cbDir + "__new")) // stage
-    // a marker with ONLY the codebook staged: centroids/cells stay
-    fs.create(new Path(s"$root/__retrain_commit"), false).close()
+    // ── crash between the swap's renames: the retrained index sits at
+    // its retired name only, and the next read restores all of it —
+    // codebook included, never the codebook without its codes
+    val cbDir = s"$index/codebook"
+    assert(fs.rename(new Path(index), new Path(Store.retired(index))))
     val healed = VectorIngest.annPq(spark, root, queries, k = 3,
       nProbe = 2, shortlist = 64)
     assert(healed.exceptAll(exact).isEmpty && exact.exceptAll(healed).isEmpty)
-    assert(!fs.exists(new Path(s"$root/__retrain_commit")))
-    assert(fs.exists(new Path(cbDir)) && !fs.exists(new Path(cbDir + "__new")),
-      "heal must publish the staged codebook and drop the marker")
+    assert(fs.exists(new Path(cbDir)) && !fs.exists(new Path(Store.retired(index))),
+      "heal must restore the whole index, codebook included")
     assert(spark.read.parquet(cbDir).collect().toSet == cbAfter)
   }
 
@@ -411,9 +433,9 @@ class VectorIngestSpec extends SparkSpec {
       s"the exact copy must reject against its original: $rej")
     assert(rej.head._3 == 1000000L, s"exact copy scores 1e6 ppm: $rej")
     assert(admitted == 1L, "the novel vector must still be admitted")
-    assert(spark.read.parquet(s"$root/cells")
+    assert(spark.read.parquet(VectorIngest.cellsPath(root))
       .filter(col("vec_id") === 500L).count() == 0L)
-    assert(spark.read.parquet(s"$root/cells")
+    assert(spark.read.parquet(VectorIngest.cellsPath(root))
       .filter(col("vec_id") === 200L).count() == 1L)
     // the reject left no ledger row: once the blocker is gone (here:
     // re-send after raising the bar is moot — assert via replay instead)
@@ -546,7 +568,7 @@ class VectorIngestSpec extends SparkSpec {
     val root = tmpDir("vindex_drift")
     val boot = rows(0 until 8, 0).toDF("vec_id", "embedding")
     VectorIngest.trainCentroids(boot, root, kCells = 2, iters = 5, dim = 4)
-    assert(spark.read.parquet(s"$root/qbase").count() == 1L)
+    assert(spark.read.parquet(s"$root/index/qbase").count() == 1L)
     // same-distribution batch: error comparable to the training fit
     val calm = VectorIngest.quantizationDrift(spark, root,
       rows(8 until 16, 0).toDF("vec_id", "embedding")).collect().head
@@ -581,8 +603,8 @@ class VectorIngestSpec extends SparkSpec {
     assert(after.getAs[Long]("batch_err_micros") <
       hot.getAs[Long]("batch_err_micros"))
     assert(after.getAs[Long]("retrain_suggested") == 0L)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$root/qbase__new")))
+    assert(!new java.io.File(root).list().exists(_.startsWith(".")),
+      "no staged or retired index may outlive the swap")
   }
 
   test("streaming start: checkpointed file-drop folds batches across a restart; drift monitor rows ride along") {
@@ -609,7 +631,7 @@ class VectorIngestSpec extends SparkSpec {
     // restart from the checkpoint: a.jsonl must not re-fold
     val q2 = VectorIngest.start(spark, mkStream, root, cp, driftDir = Some(mon))
     try q2.processAllAvailable() finally q2.stop()
-    assert(spark.read.parquet(s"$root/cells")
+    assert(spark.read.parquet(VectorIngest.cellsPath(root))
       .select("vec_id").distinct().count() == 16L)
     // one monitor row per checkpointed batch, measured on what arrived
     val m = spark.read.parquet(mon).select("batch_id", "n_batch")
@@ -638,7 +660,7 @@ class VectorIngestSpec extends SparkSpec {
     val preQbase = tmpDir("vindex_mon_old")
     VectorIngest.trainCentroids(rows(0 until 8, 0).toDF("vec_id", "embedding"),
       preQbase, kCells = 2, iters = 3, dim = 4)
-    val qb = new java.io.File(s"$preQbase/qbase")
+    val qb = new java.io.File(s"$preQbase/index/qbase")
     qb.listFiles().foreach(_.delete()); qb.delete()
     val mon2 = tmpDir("vindex_mon_old_tbl")
     VectorIngest.recordDrift(spark, preQbase, calm, mon2, batchId = 0L)
