@@ -48,8 +48,7 @@ run_and_grade() {
   # with neither present a crash-before-emit raised a bare ValueError).
   pre_local=$(stat -c %Y BENCH_LOCAL.json 2>/dev/null || echo 0)
   pre_spot=$(stat -c %Y BENCH_SPOT.json 2>/dev/null || echo 0)
-  SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_CPUS=32 \
-    sbt -batch "runMain graft.Bench" 2>&1 | tail -4
+  SPARK_GRAFT_SF_DIR="$SFDIR" sbt -batch "runMain graft.Bench" 2>&1 | tail -4
   echo
   # Bench routes a run that must not displace a graded-clean closing
   # artifact to BENCH_SPOT.json (round-13 finding 1) — grade whichever

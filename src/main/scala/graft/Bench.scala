@@ -338,7 +338,7 @@ object Bench {
     val t0 = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - t0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cores
     val conc = sys.env.getOrElse("BENCH_CONCURRENCY", "4").toInt
     // 3 passes fit comfortably inside the deadline on a calm box (full
     // sequential sweep measured ~60 s at sf0.1); on a noisy box the
@@ -346,9 +346,9 @@ object Bench {
     val maxPasses = sys.env.getOrElse("BENCH_PASSES", "3").toInt
     prefaultHeap(
       gib = sys.env.getOrElse("BENCH_PREFAULT_GIB", "2").toInt,
-      threads = cpus.toInt,
+      threads = cpus,
       capSec = sys.env.getOrElse("BENCH_PREFAULT_CAP_SEC", "20").toInt)
-    val spark = GraftSession.local(cpus.toInt)
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Warm codegen/classloading once.
     try SparkEntry.queries("q06_distinct_counts")(spark, sfDir).count()

@@ -3,6 +3,7 @@ package graft.model
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.WallClock
 
 /** One synced entity table: the Spark analog of the reference's
   * `EntitySchema` projection lists (packages/sync-engine/src/schemas/<entity>.ts)
@@ -63,11 +64,15 @@ final case class TableDef(
   /** Project a DataFrame bearing the raw entity JSON in `payloadCol`.
     * `passthrough` names input columns carried alongside the projected
     * schema (e.g. the transient LWW tie-break [[MergeSink.EvtSeqCol]])
-    * — the caller owns dropping them before any schema-shaped sink. */
+    * — the caller owns dropping them before any schema-shaped sink.
+    * `now` stamps `updated_at`: pass the batch's one [[WallClock]] so
+    * every row of the batch, and `syncTs` where it is the clock too,
+    * carries the same instant. */
   def projectFrom(df: DataFrame, payloadCol: String, syncTs: Column,
-                  passthrough: Seq[String] = Nil): DataFrame =
+                  passthrough: Seq[String] = Nil,
+                  now: Column = WallClock.now()): DataFrame =
     df.select(project(payloadCol) ++ passthrough.map(col) :+
-      current_timestamp().as("updated_at") :+
+      now.as("updated_at") :+
       syncTs.as("last_synced_at"): _*)
 }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.WallClock
 import graft.model.{TableDef, TableDefs}
 import graft.store.Store
 
@@ -80,7 +81,8 @@ object Backfill {
     try {
       val n = payloads.count()
       if (n > 0) {
-        val rows = child.projectFrom(payloads, "payload", current_timestamp())
+        val now = WallClock.now()
+        val rows = child.projectFrom(payloads, "payload", now, now = now)
         MergeSink.upsertParquet(rows, tablesDir, child)
       }
       n
@@ -88,7 +90,8 @@ object Backfill {
   }
 
   /** Upsert a chunk of raw entity JSON through the shared pipeline:
-    * project → LWW → guarded merge. Sync timestamp = now(), matching the
+    * project → LWW → guarded merge. Sync timestamp = the chunk's
+    * [[WallClock]] (one instant per chunk), matching the
     * reference's backfill semantics (postgres.ts:69: ts defaults to now
     * when not event-driven). Returns rows synced (A3 count metric). */
   def upsertChunk(spark: SparkSession, tablesDir: String, tdef: TableDef,
@@ -103,7 +106,8 @@ object Backfill {
     // The count rides the merge's own write action as an observed
     // metric — no extra job per ~250-row chunk.
     val obs = org.apache.spark.sql.Observation()
-    val rows = tdef.projectFrom(raw, "payload", current_timestamp())
+    val now = WallClock.now()
+    val rows = tdef.projectFrom(raw, "payload", now, now = now)
       .observe(obs, count(when(col(tdef.key).isNotNull, lit(1))).as("n_keyed"))
     MergeSink.upsertParquet(rows, tablesDir, tdef)
     obs.get("n_keyed").asInstanceOf[Long]
@@ -256,15 +260,15 @@ object Backfill {
           try {
             if (payloads.isEmpty) Map.empty[String, Long]
             else {
-              val parentBatch = parentDef.projectFrom(
-                payloads, "payload", current_timestamp())
+              val now = WallClock.now()
+              val parentBatch = parentDef.projectFrom(payloads, "payload", now, now = now)
               val grandparents = backfillParents(spark, tablesDir, parentBatch,
                 parentDef, fetcher, maxDepth - 1, width)
               // one merge for the whole level; the A3 count rides it as
               // an observed metric, null-key payloads excluded — same
               // semantics as upsertChunk's chunked sum
               val obs = org.apache.spark.sql.Observation()
-              val rows = parentDef.projectFrom(payloads, "payload", current_timestamp())
+              val rows = parentDef.projectFrom(payloads, "payload", now, now = now)
                 .observe(obs,
                   count(when(col(parentDef.key).isNotNull, lit(1))).as("n_keyed"))
               MergeSink.upsertParquet(rows, tablesDir, parentDef)

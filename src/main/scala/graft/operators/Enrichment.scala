@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.model.TableDef
 import graft.operators.Backfill.EntityFetcher
@@ -18,7 +18,7 @@ object Enrichment {
     * use the API payload; terminal-state and non-revalidated rows trust
     * the webhook body. Adds a `refetched` flag driving the two-timestamp
     * semantics (getSyncTimestamp :580-582): event.created when trusted,
-    * now() when refetched.
+    * the batch clock when refetched.
     *
     * Input: envelope rows (payload, created, ...). Output: same columns +
     * `refetched`, with payload possibly replaced.
@@ -70,9 +70,10 @@ object Enrichment {
   /** A6 (fillCheckoutSessionsLineItems :1511-1523 +
     * upsertCheckoutSessionLineItems :1525-1557): per synced checkout
     * session, fetch its line items, rewrite `price` object → id, tag the
-    * `checkout_session` FK, and return projected child rows. */
+    * `checkout_session` FK, and return projected child rows, both
+    * stamps `now` (the fetch is the sync). */
   def checkoutLineItems(sessions: DataFrame, child: TableDef,
-                        fetcher: EntityFetcher): DataFrame = {
+                        fetcher: EntityFetcher, now: Column): DataFrame = {
     val spark = sessions.sparkSession
     import spark.implicits._
     val pairs = sessions
@@ -81,9 +82,7 @@ object Enrichment {
         it.flatMap(sid =>
           fetcher.listForParent(child, "checkout_session", sid).map(j => (sid, j)))
       }.toDF("__session_id", "payload")
-    pairs.select(Seq(col("__session_id")) ++ child.project("payload") :+
-        current_timestamp().as("updated_at") :+
-        current_timestamp().as("last_synced_at"): _*)
+    child.projectFrom(pairs, "payload", now, passthrough = Seq("__session_id"), now = now)
       .withColumn("price", coalesce(get_json_object(col("price"), "$.id"), col("price")))
       .withColumn("checkout_session",
         coalesce(col("checkout_session"), col("__session_id")))

@@ -132,7 +132,7 @@ object MergeOps {
     *
     * Why collapse at all: SCD2 versions track changes, and refetch-
     * with-now() sources (API-revalidated children, whose sync ts is
-    * current_timestamp per the reference's two-timestamp rule) would
+    * the batch's wall clock per the reference's two-timestamp rule) would
     * otherwise mint a no-change version on every redelivery.
     * Same single keyed shuffle: the extra window functions share w's
     * partitioning and sort.

@@ -43,10 +43,13 @@ object StripeEvents {
   }
 
   /** Sync timestamp semantics (getSyncTimestamp, stripeSync.ts:580-582):
-    * `event.created` for webhook-trusted rows, now() when the entity was
-    * re-fetched from the API. */
-  def syncTimestamp(refetched: Boolean = false): Column =
-    if (refetched) current_timestamp() else timestamp_seconds(col("created"))
+    * `event.created` for webhook-trusted rows. */
+  def syncTimestamp(): Column = timestamp_seconds(col("created"))
+
+  /** ...and `now` — the batch's [[graft.functions.WallClock]] — for rows
+    * whose `refetched` flag says the entity was re-fetched from the API. */
+  def syncTimestamp(now: Column): Column =
+    when(col("refetched"), now).otherwise(syncTimestamp())
 
   /** Same-batch action order: upserts before deleted-upserts before
     * deltas before deletes, so a same-id create+delete in one

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.WallClock
 import graft.model.{TableDef, TableDefs}
 import graft.operators.{Backfill, Concurrently, Enrichment, MergeOps, MergeSink}
 import graft.sources.StripeEvents
@@ -67,8 +68,12 @@ class WebhookPipeline(tablesDir: String,
     case (t, (tdef, Upsert)) if tdef.table == TableDefs.subscriptions.table => t
   }.toSeq
 
-  /** Process one micro-batch of raw event JSON (column `value`). */
+  /** Process one micro-batch of raw event JSON (column `value`). Every
+    * wall-clock stamp the batch writes (`updated_at`, refetched rows'
+    * `last_synced_at`, J3 tombstones) is the batch's ONE [[WallClock]],
+    * read when the batch starts. */
   def processBatch(raw: DataFrame, batchId: Long = 0L): Unit = {
+    val now = WallClock.now()
     // keepRaw only when the ledger needs the original event object —
     // the hot path keeps the narrower cache
     val parsed = StripeEvents.parseEnvelope(raw, keepRaw = config.eventsLedger)
@@ -138,17 +143,17 @@ class WebhookPipeline(tablesDir: String,
       // chains.
       val children: Seq[() => Unit] =
         upserts(TableDefs.subscriptions).filter(_ => itemLists > 0)
-          .map(events => () => normalizeSubscriptionItems(events)).toSeq ++
+          .map(events => () => normalizeSubscriptionItems(events, now)).toSeq ++
         upserts(TableDefs.checkoutSessions).flatMap(events =>
-          fetcher.map(f => () => checkoutLineItems(events, f)))
+          fetcher.map(f => () => checkoutLineItems(events, f, now)))
       val tables: Seq[() => Unit] =
         live.groupBy { case (tdef, _, _, _) => tdef.table }.toSeq.sortBy(_._1)
           .map { case (_, groups) =>
             val events = groups.map { case (_, action, _, evs) => action -> evs }.toMap
-            () => commitTable(groups.head._1, events)
+            () => commitTable(groups.head._1, events, now)
           }
       Concurrently.run(children ++ tables ++
-        Option.when(ledger)(() => writeEventsLedger(envelope)) ++
+        Option.when(ledger)(() => writeEventsLedger(envelope, now)) ++
         Option.when(suspect)(() => quarantineUnprocessable(raw, batchId)))
       // record AFTER all merges land: a crashed batch records nothing,
       // the retry reprocesses, and every merge is idempotent — the
@@ -166,11 +171,11 @@ class WebhookPipeline(tablesDir: String,
     * malformed deliveries stay the quarantine's concern. Timestamp =
     * event.created (the body is webhook-trusted by definition; an event
     * object is never refetched). */
-  private def writeEventsLedger(envelope: DataFrame): Unit = {
+  private def writeEventsLedger(envelope: DataFrame, now: Column): Unit = {
     val tdef = TableDefs.events
     val rows = tdef.projectFrom(
       envelope.select(col("raw_value"), col("created")),
-      "raw_value", StripeEvents.syncTimestamp())
+      "raw_value", StripeEvents.syncTimestamp(), now = now)
     MergeSink.upsertParquet(rows, tablesDir, tdef)
   }
 
@@ -215,14 +220,15 @@ class WebhookPipeline(tablesDir: String,
     * is the state the serial per-rank merges produce (upsert, then
     * deleted-upsert, then delete — see [[StripeEvents.rank]]), with one
     * read + rewrite of the table instead of one per action. */
-  private def commitTable(tdef: TableDef, events: Map[Action, DataFrame]): Unit = {
+  private def commitTable(tdef: TableDef, events: Map[Action, DataFrame],
+                          now: Column): Unit = {
     val rows = events.toSeq.sortBy { case (action, _) => StripeEvents.rank(action) }.collect {
-      case (Upsert, evs)        => upsertRows(tdef, evs)
-      case (DeletedUpsert, evs) => deletedRows(tdef, evs)
+      case (Upsert, evs)        => upsertRows(tdef, evs, now)
+      case (DeletedUpsert, evs) => deletedRows(tdef, evs, now)
     }
     val deleteIds = events.get(Delete)
       .map(_.select(get_json_object(col("payload"), "$.id").as("id")))
-    events.get(EntitlementDelta).foreach(entitlementDelta)
+    events.get(EntitlementDelta).foreach(entitlementDelta(_, now))
     if (rows.isEmpty) deleteIds.foreach(MergeSink.deleteParquet(_, tablesDir, tdef))
     else {
       val batch = rows.reduce(_ unionByName _)
@@ -235,13 +241,14 @@ class WebhookPipeline(tablesDir: String,
 
   /** Full-schema upsert rows: optional revalidation (P8/P4,
     * two-timestamp semantics) and optional list expansion (A7). */
-  private def upsertRows(tdef: TableDef, events: DataFrame): DataFrame = {
+  private def upsertRows(tdef: TableDef, events: DataFrame, now: Column): DataFrame = {
     // the envelope's event id rides along as the LWW tie-break
     // (MergeSink.EvtSeqCol): same-key rows with EQUAL created resolve
     // deterministically instead of shuffle-order — the intra-batch
     // analog of the reference's serial delivery processing. Null on
-    // the revalidate arm (refetched rows carry now() timestamps, which
-    // never tie) and for id-less deliveries (quarantine's concern).
+    // the revalidate arm (refetched rows of one id carry the same batch
+    // clock and the API's current state, so which one wins is moot) and
+    // for id-less deliveries (quarantine's concern).
     val enriched = fetcher match {
       case Some(f) if config.revalidateTables(tdef.table) =>
         Enrichment.revalidate(events.select("payload", "created"), tdef, f)
@@ -251,12 +258,8 @@ class WebhookPipeline(tablesDir: String,
             col("event_id").as(MergeSink.EvtSeqCol))
           .withColumn("refetched", lit(false))
     }
-    // getSyncTimestamp (stripeSync.ts:580-582): event.created when the
-    // webhook body is trusted, now() when the entity was re-fetched.
-    val ts = when(col("refetched"), current_timestamp())
-      .otherwise(timestamp_seconds(col("created")))
-    var rows = tdef.projectFrom(enriched, "payload", ts,
-      passthrough = Seq(MergeSink.EvtSeqCol))
+    var rows = tdef.projectFrom(enriched, "payload", StripeEvents.syncTimestamp(now),
+      passthrough = Seq(MergeSink.EvtSeqCol), now = now)
     if (config.autoExpandLists)
       fetcher.foreach { f =>
         expandFields.getOrElse(tdef.table, Nil).foreach { field =>
@@ -267,9 +270,10 @@ class WebhookPipeline(tablesDir: String,
   }
 
   /** A6: checkout sessions' line items, fetched per session. */
-  private def checkoutLineItems(events: DataFrame, f: Backfill.EntityFetcher): Unit = {
+  private def checkoutLineItems(events: DataFrame, f: Backfill.EntityFetcher,
+                                now: Column): Unit = {
     val child = TableDefs.checkoutSessionLineItems
-    val items = Enrichment.checkoutLineItems(events, child, f)
+    val items = Enrichment.checkoutLineItems(events, child, f, now)
     if (!items.isEmpty) {
       MergeSink.upsertParquet(items, tablesDir, child)
       if (config.historyTables(child.table))
@@ -280,7 +284,7 @@ class WebhookPipeline(tablesDir: String,
   /** P3: the 3-column deleted projection — deliberately nulls the other
     * live columns (useNullForMissing, §7.5 hard part: replicate, don't
     * "fix"). */
-  private def deletedRows(tdef: TableDef, events: DataFrame): DataFrame =
+  private def deletedRows(tdef: TableDef, events: DataFrame, now: Column): DataFrame =
     tdef.projectFrom(
       events.withColumn("payload",
         to_json(struct(
@@ -288,7 +292,7 @@ class WebhookPipeline(tablesDir: String,
           get_json_object(col("payload"), "$.object").as("object"),
           lit(true).as("deleted"))))
         .withColumn(MergeSink.EvtSeqCol, col("event_id")),
-      "payload", syncTimestamp(), passthrough = Seq(MergeSink.EvtSeqCol))
+      "payload", syncTimestamp(), passthrough = Seq(MergeSink.EvtSeqCol), now = now)
       .withColumn(MergeSink.RankCol, lit(StripeEvents.rank(DeletedUpsert)))
 
   /** Split a JSON array at `path` inside `payloadCol` into one row per
@@ -305,7 +309,7 @@ class WebhookPipeline(tablesDir: String,
   /** A5 + J3 (stripeSync.ts:1484-1583): explode `items.data` into
     * subscription_items (price object → id, deleted defaults false),
     * then mark vanished items deleted via set-difference. */
-  private def normalizeSubscriptionItems(events: DataFrame): Unit = {
+  private def normalizeSubscriptionItems(events: DataFrame, now: Column): Unit = {
     val tdef = TableDefs.subscriptionItems
     val items = explodeJsonArray(
       events.select(
@@ -321,7 +325,7 @@ class WebhookPipeline(tablesDir: String,
       .withColumn("price", coalesce(get_json_object(col("price"), "$.id"), col("price")))
       .withColumn("subscription", coalesce(col("subscription"), col("__sub_id")))
       .withColumn("deleted", coalesce(col("deleted"), lit(false)))
-      .withColumn("updated_at", current_timestamp())
+      .withColumn("updated_at", now)
       .withColumn("last_synced_at", timestamp_seconds(col("__event_created")))
       .drop("__sub_id", "__event_created")
     // J3 (markDeletedSubscriptionItems): items in the table for these
@@ -342,16 +346,18 @@ class WebhookPipeline(tablesDir: String,
             .filter(not(coalesce(col("deleted"), lit(false)))),
           incomingIds, "id")
         val flagged = vanished.withColumn("deleted", lit(true))
-          .withColumn("last_synced_at", current_timestamp())
+          .withColumn("last_synced_at", now)
           .select(projected.columns.toIndexedSeq.map(col): _*)
         projected.unionByName(flagged)
       case None => projected
     }
     // two sinks consume the batch and its plan READS the pre-merge
     // table (the J3 set-difference): after upsertParquet swaps the
-    // directory, a lazy re-evaluation would chase deleted files — and
-    // the tombstones' current_timestamp() must freeze to ONE value —
-    // so materialize once when history is on
+    // directory, a lazy re-evaluation by the history sink would chase
+    // deleted files (or see the post-merge table, whose vanished set is
+    // empty), so materialize the pre-merge read once when history is on.
+    // The tombstones' stamp needs no pinning: the batch clock is one
+    // fixed value however often the plan runs
     val staged = if (config.historyTables(tdef.table))
       batch.localCheckpoint(true) else batch
     MergeSink.upsertParquet(staged, tablesDir, tdef)
@@ -366,7 +372,7 @@ class WebhookPipeline(tablesDir: String,
   /** J4 (stripeSync.ts:1650-1660 + :1683-1712): upsert the summary's
     * current entitlement set, then hard-delete the customer's rows not
     * in it. */
-  private def entitlementDelta(events: DataFrame): Unit = {
+  private def entitlementDelta(events: DataFrame, now: Column): Unit = {
     val tdef = TableDefs.activeEntitlements
     val ents = explodeJsonArray(
       events.select(
@@ -381,7 +387,7 @@ class WebhookPipeline(tablesDir: String,
       .select(Seq(col("__cust_id"), col("__event_created")) ++ tdef.project("__payload"): _*)
       .withColumn("feature", coalesce(get_json_object(col("feature"), "$.id"), col("feature")))
       .withColumn("customer", coalesce(col("customer"), col("__cust_id")))
-      .withColumn("updated_at", current_timestamp())
+      .withColumn("updated_at", now)
       .withColumn("last_synced_at", timestamp_seconds(col("__event_created")))
       .drop("__cust_id", "__event_created")
     // upsert the current set and hard-delete the customer's rows not in

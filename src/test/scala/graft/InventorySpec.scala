@@ -66,6 +66,17 @@ class InventorySpec extends SparkSpec {
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
+  test("clock lint: no current_timestamp() on the sync path") {
+    // Catalyst folds current_timestamp() into a literal that codegen
+    // writes into the generated source, so a per-batch value there makes
+    // every batch recompile its classes; the sync path stamps rows with
+    // graft.functions.WallClock instead. Comment lines and trailing
+    // comments are not matched.
+    val hits = lintHits(Seq("streaming", "operators", "model", "sources"),
+      """^(?!\s*(//|\*|/\*))(?:(?!//).)*current_timestamp\(\)""".r)
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("concurrency lint: no thread pool outside Concurrently and Bench") {
     val banned = Seq("newFixedThreadPool", "invokeAll", "ExecutorCompletionService", "Semaphore")
     val hits = lintHits(Seq("."), banned.mkString("(", "|", ")").r,
